@@ -347,7 +347,7 @@ case class L2ArgMin(left: Expression, right: Expression)
   * reconstruction projection must stay OUT of whole-stage codegen so the
   * broadcast join above it cannot defer the expression into its inner
   * loop and recompute it once per (row, query) pair — the documented
-  * withReconAt barrier rationale. This keeps the barrier and deletes the
+  * withRecon barrier rationale. This keeps the barrier and deletes the
   * interpretation overhead: one flat double-copy loop per row.
   *
   * A code with no matching codebook entry throws (the HOF's ANSI

@@ -45,7 +45,7 @@ object SemDedup {
     semanticAt(s, d, nCentroids)
 
   /** [[semantic]] at an explicit cluster count — the k knob
-    * (tools.SemSweep demonstrates pair volume ∝ ~1/k). */
+    * (BASELINE.md, "SemDeDup cluster-count sweep": pair volume ∝ ~1/k). */
   def semanticAt(s: SparkSession, d: String, k: Int,
                  maxMates: Option[Int] = None): DataFrame = {
     val all = Similarity.vecs(s, d)
@@ -132,20 +132,6 @@ object SemDedup {
        |       CAST(CASE WHEN d.vec_id IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS is_dup
        |FROM assigned s LEFT JOIN dups d ON s.vec_id = d.vec_id
        |ORDER BY $idOut""".stripMargin
-  }
-
-  /** Diagnostic for the k knob (tools.SemSweep): per-cluster candidate
-    * pair count at cluster count `k` — the quantity the within-cluster
-    * quadratic scales with (~n²/2k for balanced clusters; the paper's
-    * lever is exactly "grow k with the corpus"). */
-  def candidatePairs(s: SparkSession, d: String, k: Int): DataFrame = {
-    val all = Similarity.vecs(s, d)
-    val cents = Similarity.trainCentroids(all, k, iters)
-    Similarity.assignNearest(all, cents)
-      .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      // n·(n−1) is even, so the double division is exact; cast back to the
-      // integer count
-      .select(col("cid"), (col("n") * (col("n") - 1) / 2).cast("long").as("n_pairs"))
   }
 
   private def semanticOracle: String =

@@ -386,24 +386,6 @@ object Similarity {
       .select(col("qid"), col("qe"), col("cid").as("bucket"))
   }
 
-  /** Diagnostic for the nprobe cost knob (tools.IvfSweep): per-query count
-    * of candidates the bucketed search would score — the same
-    * probes⋈assigned join as [[topkBucketed]] minus the scoring, so the
-    * measured candidate volume is exactly the search's. */
-  def ivfCandidates(s: SparkSession, d: String, nQueries: Int = 20,
-                    nCentroids: Int = 8, nprobe: Int = 2,
-                    trainIters: Int = 2): DataFrame = {
-    val all = vecs(s, d)
-    val cents = trainCentroids(all, nCentroids, trainIters)
-    val assigned = assignNearest(all, cents)
-      .select(col("vec_id"), col("cid").as("bucket"))
-    ivfProbes(all, cents, nQueries, nprobe)
-      .select(col("qid"), col("bucket"))
-      .join(assigned, "bucket")
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_cand"))
-  }
-
   /** Scalar int8 quantization of the embedding column — the storage/
     * bandwidth primitive of a large vector corpus (4 bytes/dim → 1). Per
     * vector: scale = max |x_i| (a pure max of stored doubles — no

@@ -46,8 +46,8 @@ object SimilarityPq {
 
   /** Gate-scale knobs: 16 subspaces × 4 dims, 64-entry codebooks, two
     * Lloyd's refinement rounds (seeds are the first `ks` vector slices).
-    * Chosen from the measured compression/recall frontier (tools.PqSweep,
-    * BASELINE.md round-10 table): the original 8-byte (ks=16, 1-round)
+    * Chosen from the measured compression/recall frontier (BASELINE.md,
+    * "Round-10: PQ compression/recall frontier"): the original 8-byte (ks=16, 1-round)
     * codes cap at recall@3 ≈ 0.33 on the near-isotropic driver
     * embeddings — more rounds do NOT fix 4-bit codes (3 rounds measured
     * WORSE, 0.28) — while 6-bit entries with one extra round reach 0.50
@@ -187,8 +187,8 @@ object SimilarityPq {
     * column instead of a crossJoin'd row column (r20 opt). The joined
     * `cm` column materialized the full m×ks map (~60 KB) into EVERY
     * corpus row at each codegen boundary — most expensively at the
-    * deliberate codegen→interpreted-recon barrier (tools.PqProbe
-    * attributes the chain's time to encode + scoring; the map-carry is
+    * deliberate codegen→interpreted-recon barrier (OPTIMIZATION_r20.md
+    * "Change 5" attributes the chain's time to encode + scoring; the map-carry is
     * the component that GROWS WITH THE CORPUS at scale, which is why it
     * goes even though its sf0.1 share is modest). The scalar subquery
     * executes the (pinned)
@@ -251,22 +251,16 @@ object SimilarityPq {
     * — as a later projection it would be all-codegen and deferred per pair
     * right back. */
   private[llm] def withRecon(df: DataFrame, trainOn: Option[DataFrame],
-                             keep: String*): DataFrame =
-    withReconAt(df, m, ks, rounds, trainOn, trainHexLt, pin = true, keep: _*)
-
-  private[llm] def withReconAt(df: DataFrame, msub: Int, kse: Int,
-                               rounds: Int, trainOn: Option[DataFrame],
-                               hexLt: String, pin: Boolean,
-                               keep: String*): DataFrame = {
+                             keep: String*): DataFrame = {
     // native interpreted lookup (expr.PqRecon) against the scalar-
     // subquery codebook map (r20 opt): same values, same CodegenFallback
     // barrier, none of the per-entry boxed-lambda cost and none of the
     // per-row map materialization (withCmScalar's rationale)
-    val (enc, cb) = codedWithCb(df, msub, kse, rounds, trainOn, hexLt, pin)
-    reconProject(enc, cb, msub, keep: _*)
+    val (enc, cb) = codedWithCb(df, trainOn = trainOn, pin = true)
+    reconProject(enc, cb, m, keep: _*)
   }
 
-  /** [[withReconAt]] against a PRE-PINNED codebook — the shape
+  /** [[withRecon]] against a PRE-PINNED codebook — the shape
     * QueryDef.pinPar callers need: training happened (concurrently with
     * the caller's other artifacts) before this is invoked, so the encode
     * and recon projection here are plan-identical to [[withRecon]]'s. */
@@ -298,9 +292,7 @@ object SimilarityPq {
     * candidates. Same broadcast-queries + WindowGroupLimit shape as
     * [[Similarity.topkBrute]]; rank-only output. */
   def pqTopk(s: SparkSession, d: String,
-             nQueries: Int = nQueries, k: Int = k,
-             msub: Int = m, kse: Int = ks, rounds: Int = rounds,
-             hexLt: String = trainHexLt): DataFrame = {
+             nQueries: Int = nQueries, k: Int = k): DataFrame = {
     val all = Similarity.vecs(s, d)
     // query norms materialize at the broadcast build, reconstruction norms
     // in the interpreted projection (see reconstructed) — the per-pair
@@ -311,7 +303,7 @@ object SimilarityPq {
       .select(col("vec_id").as("qid"), col("e").as("qe"),
         sqrt(call_function("vec_dot", col("e"), col("e"))).as("qnrm"))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nbr"))
-    withReconAt(all, msub, kse, rounds, None, hexLt, pin = true)
+    withRecon(all, None)
       .join(broadcast(q), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id").as("nbr"),
         (call_function("vec_dot", col("qe"), col("recon")) /
@@ -327,21 +319,6 @@ object SimilarityPq {
   def pqRecall(s: SparkSession, d: String,
                nQueries: Int = nQueries, k: Int = k): DataFrame =
     Similarity.recallAgainst(s, d, nQueries, k, pqTopk(s, d, nQueries, k))
-
-  /** Sweep entry (tools.PqSweep): recall@k at an arbitrary (m, ks,
-    * rounds) configuration — Spark-side only; the gate queries stay at
-    * the object defaults, which the oracle templates share. */
-  def pqRecallAt(s: SparkSession, d: String, msub: Int, kse: Int,
-                 rounds: Int): DataFrame =
-    Similarity.recallAgainst(s, d, nQueries, k,
-      pqTopk(s, d, nQueries, k, msub, kse, rounds))
-
-  /** Sweep entry (tools.SampleSweep): recall@k at an arbitrary training
-    * sample fraction — Spark-side only; the gate queries stay at
-    * [[trainHexLt]], which the oracle templates share. */
-  def pqRecallSample(s: SparkSession, d: String, hexLt: String): DataFrame =
-    Similarity.recallAgainst(s, d, nQueries, k,
-      pqTopk(s, d, nQueries, k, m, ks, rounds, hexLt))
 
   // ---- DuckDB oracle: the training + encode + reconstruct chain unrolled
   // as per-subspace CTEs, the Similarity.trainBody recipe on list_slice'd
@@ -581,12 +558,12 @@ object SimilarityPq {
     * index table instead of being encoded in-plan, the codebook map rides
     * the same one-row broadcast, and the filter-HOF lookup keeps the same
     * deliberately-interpreted projection barrier (recon computed once per
-    * stored row, never per (row, query) pair — [[withReconAt]]'s
+    * stored row, never per (row, query) pair — [[withRecon]]'s
     * rationale). */
   private def reconFromCodes(codes: DataFrame, cbRow: DataFrame,
                              msub: Int, keep: String*): DataFrame =
     // native interpreted lookup against the scalar-subquery codebook map
-    // — the [[withReconAt]] swap, serve side. fanOut: the [[coded]]
+    // — the [[withRecon]] swap, serve side. fanOut: the [[coded]]
     // rationale — the persisted codes land in a handful of bucket files,
     // so the interpreted recon pass otherwise runs on as few tasks
     withCmScalar(cbRow) { cm =>

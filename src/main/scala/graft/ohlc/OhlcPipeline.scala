@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * Scale design (SURVEY.md §7.3): the reference computes open/close by
   * `collect_list` + `array_sort` + `element_at` (main.py:153-158), which
   * materializes every trade per (window, symbol) group in aggregation state —
-  * O(rows) state, ObjectHashAggregate, no partial reduction. Here open/close
-  * are `min_by`/`max_by` over a `struct(ts, price)` ordering key: one (t, p)
+  * O(rows) state, ObjectHashAggregate, no partial reduction. Here
+  * [[candles]] computes open/close with `first_by_ordered`/`last_by_ordered`,
+  * the DeclarativeAggregate in [[graft.expr.FirstByOrdered]]: one (t, p)
   * pair of state per group, partial-aggregable, identical tie semantics
   * (lexicographic (t, p): ties on t take lowest price for open, highest for
   * close — main.py array_sort is lexicographic by field order).

@@ -811,6 +811,40 @@ object TradeLogFormat {
       // so no call site needs to know the property exists.
       delMode: Option[String] = None)
 
+  /** The head a commit targets. Both heads run the one claim protocol of
+    * [[commitManifest]]; they differ only in where the head pointer lives
+    * and which snapshot file a generation claims. */
+  sealed trait CommitHead {
+    /** The `_manifests/` snapshot that generation `gen` of this head claims. */
+    private[source] def snapshotName(gen: Long): String
+  }
+  object CommitHead {
+    /** The table: `index.manifest`, generation N claims `gen-N.manifest`. */
+    case object Main extends CommitHead {
+      private[source] def snapshotName(gen: Long): String = s"gen-$gen.manifest"
+    }
+    /** A [[TradeLogRefs]] branch: `_refs/<name>`, branch-local generation
+      * k claims `gen-k-<name>.manifest` — namespaced, so a branch never
+      * contends with main's generation sequence. */
+    final case class Branch(name: String) extends CommitHead {
+      private[source] def snapshotName(gen: Long): String =
+        s"gen-$gen-$name.manifest"
+    }
+  }
+
+  /** A commit whose content is exactly `snap`'s (RESTORE, branch
+    * publish): its shards adopted by reference — nothing rewritten — or,
+    * for a legacy flat snapshot, its blocks re-emitted (seqs preserved) as
+    * one shard, the same one-time migration cost a legacy head pays.
+    * `snap`'s schema comes with it; the head's streaming stamp carries
+    * forward. */
+  private[source] def adoptSpec(snap: ManifestInfo,
+      head: ManifestInfo): CommitSpec =
+    CommitSpec(reuse = snap.shards,
+      rewrite =
+        if (snap.shards.isEmpty) Seq(normalizeSeq(snap.blocks)) else Nil,
+      epoch = head.epoch, qid = head.qid, xcols = snap.xcols)
+
   /** One day bucket of the block-to-shard grouping (µs epoch days;
     * unknown-ts blocks collect in their own always-read bucket). */
   private val DayUs = 86400000000L
@@ -822,10 +856,11 @@ object TradeLogFormat {
     blocks.groupBy(b => dayOf(b.minTsUs)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.seq))
 
-  /** In-process commit serialization, keyed by qualified log root: local
-    * racers take the optimistic path deterministically (read outside the
-    * lock, claim+publish inside), and the filesystem's no-overwrite
-    * rename arbitrates cross-process racers — the Delta LogStore split. */
+  /** In-process commit serialization, keyed by qualified log root (every
+    * head of one log shares it): local racers take the optimistic path
+    * deterministically (read outside the lock, claim+publish inside), and
+    * the filesystem's no-overwrite rename arbitrates cross-process racers
+    * — the Delta LogStore split. */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -857,6 +892,16 @@ object TradeLogFormat {
     }
   }
 
+  /** Does the claim file exist and hold exactly `body`? False on any
+    * read failure — the caller treats that as a lost race. */
+  private[source] def claimHoldsBody(filesystem: FileSystem, claim: Path,
+      body: Array[Byte]): Boolean =
+    try {
+      val in = filesystem.open(claim)
+      try java.util.Arrays.equals(in.readAllBytes(), body)
+      finally in.close()
+    } catch { case _: java.io.IOException => false }
+
   /** After a lost claim for `gen`: wait for the racing claimant to
     * publish its head (normal race — retry immediately after), or take
     * over a DEAD claimant's orphan snapshot once it ages past
@@ -864,24 +909,23 @@ object TradeLogFormat {
     * orphan so the generation can be re-claimed; the patience must
     * exceed any sane claim→publish latency (two renames), which is why
     * the default is a minute and specs pass ~0 to exercise the path. */
-  private def awaitHeadOrTakeover(filesystem: FileSystem, dir: String,
-      root: Path, gen: Long, patienceMs: Long): Unit = {
-    val snap = new Path(root, s"$ManifestDirName/gen-$gen.manifest")
+  private def awaitHeadOrTakeover(filesystem: FileSystem, claim: Path,
+      gen: Long, patienceMs: Long, headGen: () => Long): Unit = {
     var spins = 0
     while (spins < 50) {
-      val headGen =
-        if (filesystem.exists(new Path(root, ManifestName)))
-          readManifestHeader(dir).gen
-        else 0L
-      if (headGen >= gen) return // racer published: retry against new head
+      if (headGen() >= gen) return // racer published: retry against new head
       val st =
-        try Some(filesystem.getFileStatus(snap))
+        try Some(filesystem.getFileStatus(claim))
         catch { case _: java.io.FileNotFoundException => None }
       st match {
         case None => return // claim vanished (owner aborted): re-claim
         case Some(s)
           if System.currentTimeMillis() - s.getModificationTime > patienceMs =>
-          filesystem.delete(snap, false) // dead claimant: take over
+          // dead claimant — but re-read the head at the last instant: if
+          // the claim's owner published while this racer was deciding,
+          // deleting would unlink a LIVE generation's snapshot (the same
+          // check-then-act shape as the takeover race this resolves)
+          if (headGen() < gen) filesystem.delete(claim, false)
           return
         case _ => Thread.sleep(50); spins += 1
       }
@@ -889,30 +933,42 @@ object TradeLogFormat {
   }
 
   /** OPTIMISTIC manifest commit — the Iceberg/Delta commit protocol for
-    * concurrent writers: read the head, build the next generation's
-    * shard set, then CLAIM `_manifests/gen-N.manifest` with an atomic
-    * no-overwrite rename. Exactly one claimant per generation wins and
-    * publishes the head (OVERWRITE rename — never a window with no
-    * manifest on disk); the loser deletes its attempt's shard files,
-    * re-reads the new head, re-runs `update` against it (re-validating
-    * schema prefixes, replay stamps, purge conflicts — whatever the
-    * caller checks), and retries with the next generation, bounded by
-    * `maxAttempts`. A crash between claim and head publish leaves an
-    * orphan snapshot that resolution ignores (it is above the head gen)
-    * and a later committer takes over after `claimPatienceMs`.
+    * concurrent writers, and the ONE commit of the format: every main
+    * commit and every branch append runs it, differing only in `head`.
+    * Read the head, build the next generation's shard set, then CLAIM the
+    * generation's snapshot (`gen-N.manifest` for main,
+    * `gen-k-<branch>.manifest` for a branch) with an atomic no-overwrite
+    * rename. Before publishing, the claimant re-verifies that the claim
+    * still holds ITS body: a patience-based takeover deletes a stalled
+    * claim and re-claims the same path, and a claimant slow between its
+    * claim and its publish (GC pause, FS stall) is indistinguishable from
+    * a dead one — publishing blindly would point the head at the other
+    * racer's manifest or at a deleted file. The winner then publishes the
+    * head (main: `index.manifest` by OVERWRITE rename — never a window
+    * with no manifest on disk; branch: the `_refs/<name>` line). A loser
+    * deletes its attempt's shard files, waits for the winner's head (or,
+    * after `claimPatienceMs`, re-reads the head at the last instant and
+    * takes over a dead claim), re-runs `update` against the new head
+    * (re-validating schema prefixes, replay stamps, purge conflicts —
+    * whatever the caller checks) and retries with the next generation,
+    * bounded by `maxAttempts`. A crash between claim and publish leaves
+    * an orphan snapshot that resolution ignores (it is above the head
+    * gen) until a later committer takes it over.
     *
     * `update` sees the head as refs (legacy flat manifests are converted
-    * to day shards first — a one-time O(blocks) migration commit) and
-    * returns None to abort (e.g. a detected epoch replay) or the spec of
-    * the new state. Returns the committed generation, or None on abort.
+    * to day shards first — a one-time O(blocks) migration commit; None
+    * only for a main head with nothing committed yet) and returns None to
+    * abort (e.g. a detected epoch replay) or the spec of the new state.
+    * Returns the committed generation (branch-local for a branch), or
+    * None on abort.
     *
     * 100 TB shape: an append is O(touched day shards) driver work — refs
-    * header read, per-day shard files for the fresh blocks, two renames —
-    * never O(all blocks); generation snapshots share shard files, so
-    * time travel stays O(metadata touched), the Iceberg manifest-list
-    * property. */
-  def commitManifest(dir: String, maxAttempts: Int = 12,
-      claimPatienceMs: Long = 60000L)(
+    * header read, per-day shard files for the fresh blocks, two renames
+    * and one claim read-back — never O(all blocks); generation snapshots
+    * share shard files, so time travel stays O(metadata touched), the
+    * Iceberg manifest-list property. */
+  def commitManifest(dir: String, head: CommitHead = CommitHead.Main,
+      maxAttempts: Int = 12, claimPatienceMs: Long = 60000L)(
       update: Option[ManifestInfo] => Option[CommitSpec]): Option[Long] = {
     val conf = driverConf()
     val (filesystem, root) = fs(dir, conf)
@@ -920,6 +976,12 @@ object TradeLogFormat {
     filesystem.mkdirs(mdir)
     val lock = commitLocks.computeIfAbsent(
       filesystem.makeQualified(root).toString, _ => new Object)
+    val mainHead = new Path(root, ManifestName)
+    def headGen(): Long = head match {
+      case CommitHead.Main =>
+        if (filesystem.exists(mainHead)) readManifestHeader(dir).gen else 0L
+      case CommitHead.Branch(name) => TradeLogRefs.readRef(dir, name).gen
+    }
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -933,10 +995,31 @@ object TradeLogFormat {
         attemptShards += name
         ShardRef.of(name, blocks)
       }
-      val prev0 =
-        if (filesystem.exists(new Path(root, ManifestName)))
-          Some(readManifestRefs(dir))
-        else None
+      def dropAttemptShards(): Unit =
+        attemptShards.foreach(f => filesystem.delete(new Path(mdir, f), false))
+      // the head state, its generation, and how to point the head at a
+      // won generation's manifest body
+      val (prev0, headAt, publish) = head match {
+        case CommitHead.Main =>
+          val p =
+            if (filesystem.exists(mainHead)) Some(readManifestRefs(dir))
+            else None
+          (p, p.map(_.gen).getOrElse(0L), (body: Array[Byte], _: Long) => {
+            publishAtomic(filesystem, conf, root, mainHead, body,
+              overwrite = true)
+            ()
+          })
+        case CommitHead.Branch(name) =>
+          val ref = TradeLogRefs.readRef(dir, name)
+          require(ref.isBranch,
+            s"graft-tradelog $dir: ref '$name' is a tag — tags are immutable")
+          (Some(readManifestFile(dir, ref.headManifestName, refsOnly = true)),
+            ref.gen,
+            (_: Array[Byte], g: Long) => {
+              TradeLogRefs.writeRef(dir, ref.copy(gen = g), overwrite = true)
+              ()
+            })
+      }
       // one-time legacy migration: a flat manifest's inline blocks become
       // day shards (positional seq preserves append order), so this and
       // every later commit is O(touched shards)
@@ -949,11 +1032,10 @@ object TradeLogFormat {
       }
       update(prev) match {
         case None =>
-          attemptShards.foreach(f =>
-            filesystem.delete(new Path(mdir, f), false))
+          dropAttemptShards()
           return None
         case Some(spec) =>
-          val gen = prev.map(_.gen).getOrElse(0L) + 1
+          val gen = headAt + 1
           val baseSeq =
             if (spec.resetSeq) 0L
             else prev.map(p => math.max(p.maxSeq,
@@ -967,7 +1049,7 @@ object TradeLogFormat {
           val refs = spec.reuse ++ newRefs
           val maxSeq = math.max(baseSeq + freshSeqd.size - 1,
             refs.foldLeft(-1L)((a, r) => math.max(a, r.maxSeq)))
-          val head = ManifestHeader + s" gen=$gen" +
+          val header = ManifestHeader + s" gen=$gen" +
             spec.epoch.map(e => s" epoch=$e").getOrElse("") +
             spec.qid.map(q => s" qid=$q").getOrElse("") +
             (if (spec.epochCommit) " ecommit=1" else "") +
@@ -977,29 +1059,28 @@ object TradeLogFormat {
             // the head — every commit path carries it without knowing it
             spec.delMode.orElse(prev.flatMap(_.delMode))
               .map(m => s" delmode=$m").getOrElse("")
-          val body = (head +: refs.map(_.line)).mkString("\n")
+          val body = (header +: refs.map(_.line)).mkString("\n")
             .getBytes(StandardCharsets.UTF_8)
+          val claim = new Path(mdir, head.snapshotName(gen))
           val won = lock.synchronized {
-            publishAtomic(filesystem, conf, mdir,
-              new Path(mdir, s"gen-$gen.manifest"), body,
-              overwrite = false) && {
-              publishAtomic(filesystem, conf, root,
-                new Path(root, ManifestName), body, overwrite = true)
-              true
-            }
+            publishAtomic(filesystem, conf, mdir, claim, body,
+              overwrite = false) &&
+              claimHoldsBody(filesystem, claim, body) && {
+                publish(body, gen)
+                true
+              }
           }
           if (won) return Some(gen)
           // lost the generation race: drop this attempt's shards, wait for
           // the winner's head (or reclaim a dead claim), then recompute
-          attemptShards.foreach(f =>
-            filesystem.delete(new Path(mdir, f), false))
-          awaitHeadOrTakeover(filesystem, dir, root, gen, claimPatienceMs)
+          dropAttemptShards()
+          awaitHeadOrTakeover(filesystem, claim, gen, claimPatienceMs, headGen)
       }
     }
     throw new IllegalStateException(
-      s"graft-tradelog commit to $dir lost $maxAttempts generation races — " +
-        "either contention is pathological or an abandoned claim is " +
-        "blocking (compare _manifests/gen-*.manifest to the head gen)")
+      s"graft-tradelog commit to $dir ($head) lost $maxAttempts generation " +
+        "races — either contention is pathological or an abandoned claim " +
+        "is blocking (compare _manifests/gen-*.manifest to the head gen)")
   }
 
   /** Full-replace commit under the optimistic protocol (compat surface —
@@ -1106,48 +1187,89 @@ object TradeLogFormat {
     * set (r16 advice: the two counters measure different things by
     * design). */
   def purgeBefore(dir: String, cutoffUs: Long,
-      vacuumGraceMs: Long = 0L): (Int, Int) = {
-    // (dropped block count, delist candidates) from the WINNING attempt
-    val outcome = new java.util.concurrent.atomic.AtomicReference[
-      (Int, Seq[String])]((0, Seq.empty))
+      vacuumGraceMs: Long = 0L): (Int, Int) =
+    // fully-retained shards carry forward UNRESOLVED (the O(touched
+    // shards) property); fully-expired shards resolve only for file
+    // accounting, straddlers rewrite their surviving blocks
+    dropCommit(dir, "purge", vacuumGraceMs) { prev =>
+      Some(triageShards(dir, prev, _.minTsUs < cutoffUs)(_.maxTsUs < cutoffUs))
+    }
+
+  /** One commit's plan over the head's shards: refs carried forward
+    * unresolved (`reuse`), the kept blocks of each touched shard to
+    * re-emit (`rewrite`), the blocks leaving the table (`dropped`), and
+    * every resolved kept block (`kept`). */
+  final case class ShardTriage(reuse: Seq[ShardRef],
+      rewrite: Seq[Seq[BlockMeta]], dropped: Seq[BlockMeta],
+      kept: Seq[BlockMeta]) {
+    /** Delist-journal candidates: files with a dropped block and no
+      * resolved kept block. A file also referenced by an unresolved
+      * reused shard is protected by vacuum's own still-referenced check
+      * at GC time — the journal is a hint, the manifest is the authority. */
+    def delisted: Seq[String] = {
+      val keptFiles = kept.map(_.file).toSet
+      dropped.map(_.file).distinct.filterNot(keptFiles)
+    }
+  }
+  object ShardTriage {
+    val Empty: ShardTriage = ShardTriage(Nil, Nil, Nil, Nil)
+  }
+
+  /** The shard walk of every replace-shaped commit (purge, exact ts
+    * DELETE, copy-on-write replace, DV compaction, OPTIMIZE): a shard
+    * `touches` rejects carries forward unresolved; a touched shard
+    * resolves and splits into the blocks `drops` selects and the blocks
+    * it keeps. A touched shard that drops nothing carries forward as is;
+    * otherwise its kept blocks re-emit as one shard. A legacy flat head
+    * (inline blocks, no shards) walks as one always-touched pseudo-shard,
+    * so its kept blocks re-emit sharded. */
+  private[source] def triageShards(dir: String, prev: ManifestInfo,
+      touches: ShardRef => Boolean)(
+      drops: BlockMeta => Boolean): ShardTriage = {
+    val reuse = scala.collection.mutable.ArrayBuffer.empty[ShardRef]
+    val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
+    val dropped = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
+    val kept = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
+    def split(ref: Option[ShardRef], bs: Seq[BlockMeta]): Unit = {
+      val (drop, keep) = bs.partition(drops)
+      dropped ++= drop
+      kept ++= keep
+      if (drop.isEmpty && ref.isDefined) reuse ++= ref
+      else if (keep.nonEmpty) rewrite += keep
+    }
+    if (prev.shards.isEmpty && prev.blocks.nonEmpty)
+      split(None, normalizeSeq(prev.blocks))
+    prev.shards.foreach(r =>
+      if (touches(r)) split(Some(r), readShardBlocks(dir, r)) else reuse += r)
+    ShardTriage(reuse.toSeq, rewrite.toSeq, dropped.toSeq, kept.toSeq)
+  }
+
+  /** The metadata-only drop commit shared by [[purgeBefore]] and
+    * [[deleteWhereTs]]: `triage` plans the head (re-run inside every
+    * optimistic retry; None = no-op, nothing committed), the commit
+    * carries the streaming (epoch, qid) stamp and the schema forward,
+    * then the delisted files journal and the piggybacked [[vacuum]] runs
+    * under `graceMs`. Returns (#blocks dropped, #files GC'd). */
+  private def dropCommit(dir: String, verb: String, graceMs: Long)(
+      triage: ManifestInfo => Option[ShardTriage]): (Int, Int) = {
+    val outcome = new java.util.concurrent.atomic.AtomicReference(
+      ShardTriage.Empty)
     commitManifest(dir) { prevOpt =>
+      // reset per attempt: a retry that aborts (a concurrent commit
+      // already removed the blocks) must not journal or report the
+      // PREVIOUS attempt's drop set
+      outcome.set(ShardTriage.Empty)
       val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
-        s"graft-tradelog $dir has no committed manifest to purge"))
-      val reuse = scala.collection.mutable.ArrayBuffer.empty[ShardRef]
-      val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
-      val dropped = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      val keptResolved = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      // shard triage: fully-retained refs carry forward UNRESOLVED (the
-      // O(touched shards) property), fully-expired shards resolve only for
-      // file accounting, straddlers rewrite their surviving blocks
-      prev.shards.foreach { r =>
-        if (r.minTsUs >= cutoffUs) reuse += r
-        else if (r.maxTsUs < cutoffUs) dropped ++= readShardBlocks(dir, r)
-        else {
-          val bs = readShardBlocks(dir, r)
-          val (keep, drop) = bs.partition(_.maxTsUs >= cutoffUs)
-          dropped ++= drop
-          keptResolved ++= keep
-          if (keep.nonEmpty) rewrite += keep
-        }
+        s"graft-tradelog $dir has no committed manifest to $verb"))
+      triage(prev).map { t =>
+        outcome.set(t)
+        CommitSpec(reuse = t.reuse, rewrite = t.rewrite,
+          epoch = prev.epoch, qid = prev.qid, xcols = prev.xcols)
       }
-      // delist candidates: files with dropped blocks and no RESOLVED kept
-      // block. A file also referenced by an unresolved retained shard is
-      // protected by vacuum's own still-referenced check at GC time — the
-      // journal is a hint, the manifest is the authority.
-      val keptFiles = keptResolved.map(_.file).toSet
-      val delisted = dropped.map(_.file).distinct.filterNot(keptFiles)
-      outcome.set((dropped.size, delisted.toSeq))
-      Some(CommitSpec(reuse = reuse.toSeq, rewrite = rewrite.toSeq,
-        epoch = prev.epoch, qid = prev.qid, xcols = prev.xcols))
     }
-    val (nDropped, delisted) = outcome.get()
-    if (delisted.nonEmpty) {
-      val now = System.currentTimeMillis()
-      writeTrash(dir, readTrash(dir) ++
-        delisted.map(f => TrashEntry(f, now, adopted = false)))
-    }
-    (nDropped, vacuum(dir, vacuumGraceMs))
+    val t = outcome.get()
+    journalDelisted(dir, t.delisted, System.currentTimeMillis())
+    (t.dropped.size, vacuum(dir, graceMs))
   }
 
   // ---- exact metadata-only DELETE (SQL row-level fast path) ------------
@@ -1159,43 +1281,24 @@ object TradeLogFormat {
     * rows with their block — this is the SQL DELETE contract: a block may
     * be dropped metadata-only ONLY when EVERY one of its rows provably
     * matches (span inside the range and `nTsNull == 0`; legacy blocks
-    * with unknown null counts never qualify). Returns the commit plan
-    * `(reuse refs, shard rewrites, dropped blocks)`, or None when any
-    * block STRADDLES the range — the caller then falls back to the
-    * row-level copy-on-write rewrite, which Spark plans automatically
-    * when `canDeleteWhere` says no. */
+    * with unknown null counts never qualify). Returns the commit plan,
+    * or None when any block STRADDLES the range — the caller then falls
+    * back to the row-level copy-on-write rewrite, which Spark plans
+    * automatically when `canDeleteWhere` says no. */
   private[source] def tsDeleteTriage(dir: String, prev: ManifestInfo,
-      loUs: Long, hiUs: Long, all: Boolean)
-      : Option[(Seq[ShardRef], Seq[Seq[BlockMeta]], Seq[BlockMeta])] = {
+      loUs: Long, hiUs: Long, all: Boolean): Option[ShardTriage] = {
     // an EMPTY range (lo > hi — contradictory bounds, or a strict
     // comparison against the Long µs extreme) matches no row: exact
     // no-op, every shard carries forward
-    if (!all && loUs > hiUs) return Some((prev.shards, Seq.empty, Seq.empty))
-    val reuse = scala.collection.mutable.ArrayBuffer.empty[ShardRef]
-    val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
-    val dropped = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-    val shards =
-      if (prev.shards.nonEmpty) prev.shards
-      else if (prev.blocks.isEmpty) Seq.empty
-      // legacy flat manifest: triage its inline blocks as one pseudo-shard
-      else Seq(null: ShardRef)
-    shards.foreach { r =>
-      val inline = r == null
-      if (!inline && !all && !r.intersectsTs(loUs, hiUs)) reuse += r
-      else {
-        val bs = if (inline) normalizeSeq(prev.blocks)
-          else readShardBlocks(dir, r)
-        val (keep, rest) = bs.partition(b => !all &&
-          (b.minTsUs == Long.MinValue || b.maxTsUs < loUs || b.minTsUs > hiUs))
-        val (drop, straddle) = rest.partition(b => all ||
-          (loUs <= b.minTsUs && b.maxTsUs <= hiUs && b.nTsNull == 0))
-        if (straddle.nonEmpty) return None
-        dropped ++= drop
-        if (drop.isEmpty && !inline) reuse += r
-        else if (keep.nonEmpty) rewrite += keep
-      }
+    if (!all && loUs > hiUs)
+      return Some(ShardTriage.Empty.copy(reuse = prev.shards))
+    val t = triageShards(dir, prev, r => all || r.intersectsTs(loUs, hiUs)) {
+      b => all || (loUs <= b.minTsUs && b.maxTsUs <= hiUs && b.nTsNull == 0)
     }
-    Some((reuse.toSeq, rewrite.toSeq, dropped.toSeq))
+    // a kept block whose known span meets the range straddles it
+    val straddles = t.kept.exists(b => b.minTsUs != Long.MinValue &&
+      b.maxTsUs >= loUs && b.minTsUs <= hiUs)
+    if (straddles) None else Some(t)
   }
 
   /** Execute an exact metadata-only ts-range DELETE under the optimistic
@@ -1204,44 +1307,21 @@ object TradeLogFormat {
     * Throws when a straddling block appears — [[tsDeleteTriage]] is the
     * caller's feasibility gate and re-validation is the protocol's job.
     * Fully-dereferenced data files enter the delist journal and the
-    * piggybacked [[vacuum]] pass, exactly like a retention purge.
+    * piggybacked [[vacuum]] pass, exactly like a retention purge — under
+    * the DML retention grace (not a bare 0), so a pinned pre-DELETE read
+    * stays resolvable for the configured window.
     * Returns (#blocks dropped, #files GC'd). */
   def deleteWhereTs(dir: String, loUs: Long, hiUs: Long,
-      all: Boolean): (Int, Int) = {
-    val outcome = new java.util.concurrent.atomic.AtomicReference[
-      (Int, Seq[String])]((0, Seq.empty))
-    commitManifest(dir) { prevOpt =>
-      // reset per attempt: a retry that aborts (a concurrent commit
-      // already removed the blocks) must not journal or report the
-      // PREVIOUS attempt's drop set (r17 review finding)
-      outcome.set((0, Seq.empty))
-      val prev = prevOpt.getOrElse(throw new IllegalArgumentException(
-        s"graft-tradelog $dir has no committed manifest to delete from"))
+      all: Boolean): (Int, Int) =
+    dropCommit(dir, "delete from", dmlVacuumGraceMs()) { prev =>
       tsDeleteTriage(dir, prev, loUs, hiUs, all) match {
         case None => throw new IllegalStateException(
           s"graft-tradelog $dir: a concurrent commit introduced blocks " +
             "straddling the delete range — re-run the DELETE (it will " +
             "take the copy-on-write path)")
-        case Some((_, _, dropped)) if dropped.isEmpty => None // no-op
-        case Some((reuse, rewrite, dropped)) =>
-          // delist candidates: dropped files with no RESOLVED kept block —
-          // a file also referenced by an unresolved reused shard is
-          // protected by vacuum's own still-referenced check at GC time
-          // (the purgeBefore rule: the journal is a hint, the manifest is
-          // the authority)
-          val keptFiles = rewrite.flatten.map(_.file).toSet
-          outcome.set((dropped.size,
-            dropped.map(_.file).distinct.filterNot(keptFiles)))
-          Some(CommitSpec(reuse = reuse, rewrite = rewrite,
-            epoch = prev.epoch, qid = prev.qid, xcols = prev.xcols))
+        case Some(t) => Some(t).filter(_.dropped.nonEmpty) // empty: no-op
       }
     }
-    val (nDropped, delisted) = outcome.get()
-    journalDelisted(dir, delisted, System.currentTimeMillis())
-    // the DML retention grace (not a bare 0): a pinned pre-DELETE read
-    // stays resolvable for the configured window (r17 advice)
-    (nDropped, vacuum(dir, dmlVacuumGraceMs()))
-  }
 
   /** Append freshly-dereferenced data files to the delist journal (the
     * shared epilogue of purge / metadata delete / row-level replace). */
@@ -1298,17 +1378,11 @@ object TradeLogFormat {
   private def writeTrash(dir: String, entries: Seq[TrashEntry]): Unit = {
     val conf = driverConf()
     val (filesystem, root) = fs(dir, conf)
-    val p = filesystem.makeQualified(new Path(root, TrashName))
-    if (entries.isEmpty) { filesystem.delete(p, false); return }
-    val tmp = filesystem.makeQualified(new Path(root,
-      s".$TrashName.tmp-${java.util.UUID.randomUUID().toString.take(8)}"))
-    val out = filesystem.create(tmp, true)
-    try {
-      out.write(entries.map(_.line)
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    } finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val p = new Path(root, TrashName)
+    if (entries.isEmpty) filesystem.delete(p, false)
+    else publishAtomic(filesystem, conf, root, p, entries.map(_.line)
+      .mkString("\n").getBytes(StandardCharsets.UTF_8), overwrite = true)
+    ()
   }
 
   /** Default minimum age an ADOPTED orphan must reach before vacuum may

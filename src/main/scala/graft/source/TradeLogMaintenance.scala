@@ -163,15 +163,7 @@ object TradeLogMaintenance {
       require(gen <= prev.gen,
         s"graft-tradelog $dir: generation $gen is not committed " +
           s"(head is ${prev.gen}) — cannot restore to an in-flight claim")
-      if (snap.shards.nonEmpty)
-        Some(TradeLogFormat.CommitSpec(reuse = snap.shards,
-          epoch = prev.epoch, qid = prev.qid, xcols = snap.xcols))
-      else
-        // legacy flat snapshot: re-emit its blocks (seqs preserved) as
-        // one shard — the same one-time migration cost a legacy head pays
-        Some(TradeLogFormat.CommitSpec(
-          rewrite = Seq(TradeLogFormat.normalizeSeq(snap.blocks)),
-          epoch = prev.epoch, qid = prev.qid, xcols = snap.xcols))
+      Some(TradeLogFormat.adoptSpec(snap, prev))
     }
     committed.getOrElse(throw new IllegalStateException(
       s"graft-tradelog $dir: restore commit aborted unexpectedly"))

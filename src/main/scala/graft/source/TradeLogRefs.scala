@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 
-import TradeLogFormat.{BlockMeta, CommitSpec, ManifestInfo}
+import TradeLogFormat.{CommitHead, ManifestInfo}
 
 /** NAMED REFS over the tradelog's generation ledger — branches and tags
   * (Iceberg refs / the write-audit-publish staging pattern, VERDICT r18
@@ -16,18 +16,23 @@ import TradeLogFormat.{BlockMeta, CommitSpec, ManifestInfo}
   *   - A **branch** is a named WRITABLE lineage forked from a main
   *     generation (`createBranch`): writes with
   *     `option("branch", name)` commit to the branch head — real
-  *     distributed appends, claimed and sequenced under the same
-  *     optimistic discipline as main commits — while the MAIN table is
-  *     untouched. Audit by reading the ref; then `publish` FAST-FORWARDS
-  *     main to the branch head as one re-referencing commit (RESTORE's
-  *     trick: the branch's immutable shard files are adopted by
-  *     reference, nothing is rewritten). Publish is conflict-checked:
-  *     if main advanced past the fork point the fast-forward fails
-  *     loudly — the WAP contract (re-stage against the new head).
+  *     distributed appends — while the MAIN table is untouched. Audit by
+  *     reading the ref; then `publish` FAST-FORWARDS main to the branch
+  *     head as one re-referencing commit (RESTORE's trick: the branch's
+  *     immutable shard files are adopted by reference, nothing is
+  *     rewritten). Publish is conflict-checked: if main advanced past the
+  *     fork point the fast-forward fails loudly — the WAP contract
+  *     (re-stage against the new head).
   *
-  * Storage: `_refs/<name>` is one atomic header line
-  * (`graft-tradelog ref kind=… base=… gen=…`); branch commit `k` claims
-  * `_manifests/gen-<k>-<name>.manifest` with a no-overwrite rename —
+  * One commit protocol, two head targets: a branch commit is
+  * [[TradeLogFormat.commitManifest]] with `CommitHead.Branch(name)`, the
+  * same claim → verify claim → publish → wait-or-take-over loop every
+  * main commit runs. Both heads re-verify that their claim still holds
+  * their body before publishing, and both re-read the head just before
+  * deleting a dead claim to take it over. Only the pointer differs:
+  * `_refs/<name>` is one atomic header line
+  * (`graft-tradelog ref kind=… base=… gen=…`), and branch-local
+  * generation `k` claims `_manifests/gen-<k>-<name>.manifest` —
   * NAMESPACED from main's `gen-<N>.manifest` claims, so a branch never
   * contends with (or blocks) main's generation sequence. GC safety: ref'd
   * snapshots' data files join vacuum's referenced set and ref-anchored
@@ -52,8 +57,9 @@ object TradeLogRefs {
       s"$RefHeader kind=$kind base=$base gen=$gen"
     /** The snapshot file this ref's head resolves to. */
     private[source] def headManifestName: String =
-      if (gen == 0L) s"${TradeLogFormat.ManifestDirName}/gen-$base.manifest"
-      else s"${TradeLogFormat.ManifestDirName}/gen-$gen-$name.manifest"
+      s"${TradeLogFormat.ManifestDirName}/" + (
+        if (gen == 0L) CommitHead.Main.snapshotName(base)
+        else CommitHead.Branch(name).snapshotName(gen))
   }
 
   private def requireRefName(name: String): Unit =
@@ -62,15 +68,6 @@ object TradeLogRefs {
 
   private def refPath(root: Path, name: String): Path =
     new Path(root, s"$RefsDirName/$name")
-
-  /** In-process serialization of ref-file read-modify-writes, keyed by
-    * (log root, ref name) — cross-process racers arbitrate on the branch
-    * snapshot CLAIM (no-overwrite rename), like main commits. */
-  private val refLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def lockFor(root: Path, name: String): Object =
-    refLocks.computeIfAbsent(s"$root#$name", _ => new Object)
 
   /** Create a branch at the CURRENT main head generation. Fails if the
     * name exists (refs are created once, retargeted never — drop and
@@ -113,14 +110,23 @@ object TradeLogRefs {
   }
 
   private def writeNewRef(dir: String, ref: RefInfo): RefInfo = {
+    require(writeRef(dir, ref, overwrite = false),
+      s"graft-tradelog $dir: ref '${ref.name}' already exists")
+    ref
+  }
+
+  /** Publish the ref file atomically; without `overwrite` the rename
+    * fails (false) when the ref exists. A branch commit overwrites its
+    * ref only after winning the generation's claim
+    * ([[TradeLogFormat.commitManifest]]). */
+  private[source] def writeRef(dir: String, ref: RefInfo,
+      overwrite: Boolean): Boolean = {
     val conf = TradeLogFormat.driverConf()
     val (fs, root) = TradeLogFormat.fs(dir, conf)
     fs.mkdirs(new Path(root, RefsDirName))
-    val ok = TradeLogFormat.publishAtomic(fs, conf,
-      new Path(root, RefsDirName), refPath(root, ref.name),
-      ref.line.getBytes(StandardCharsets.UTF_8), overwrite = false)
-    require(ok, s"graft-tradelog $dir: ref '${ref.name}' already exists")
-    ref
+    TradeLogFormat.publishAtomic(fs, conf, new Path(root, RefsDirName),
+      refPath(root, ref.name), ref.line.getBytes(StandardCharsets.UTF_8),
+      overwrite)
   }
 
   def readRef(dir: String, name: String): RefInfo = {
@@ -185,137 +191,6 @@ object TradeLogRefs {
       headerOnly: Boolean = false, refsOnly: Boolean = false): ManifestInfo =
     headInfoOf(dir, RefInfo(name, "branch", 0L, gen), headerOnly, refsOnly)
 
-  /** OPTIMISTIC commit to a branch head — the main protocol re-targeted:
-    * read the ref, build the next branch-local generation's shard set,
-    * claim `gen-<k+1>-<name>.manifest` (no-overwrite), publish the ref.
-    * Exactly one claimant per branch generation wins; losers re-read and
-    * retry; a dead claim is taken over after `claimPatienceMs`. `update`
-    * sees the branch head as refs and returns the next state (or None to
-    * abort). Returns the committed branch-local generation. */
-  def commitToBranch(dir: String, name: String, maxAttempts: Int = 12,
-      claimPatienceMs: Long = 60000L)(
-      update: ManifestInfo => Option[CommitSpec]): Option[Long] = {
-    val conf = TradeLogFormat.driverConf()
-    val (fs, root) = TradeLogFormat.fs(dir, conf)
-    val mdir = new Path(root, TradeLogFormat.ManifestDirName)
-    val lock = lockFor(fs.makeQualified(root), name)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val ref = readRef(dir, name)
-      require(ref.isBranch,
-        s"graft-tradelog $dir: ref '$name' is a tag — tags are immutable")
-      val attemptShards = scala.collection.mutable.ArrayBuffer.empty[String]
-      def newShard(blocks: Seq[BlockMeta]): TradeLogFormat.ShardRef = {
-        val sname = "shard-" + java.util.UUID.randomUUID().toString
-          .replace("-", "").take(16) + ".csv"
-        TradeLogFormat.publishAtomic(fs, conf, mdir, new Path(mdir, sname),
-          blocks.map(_.csv).mkString("\n").getBytes(StandardCharsets.UTF_8),
-          overwrite = true)
-        attemptShards += sname
-        TradeLogFormat.ShardRef.of(sname, blocks)
-      }
-      // branch head as refs; a legacy FLAT base migrates into day shards
-      // exactly like a main commit would
-      val prev0 = headInfoOf(dir, ref, headerOnly = false, refsOnly = true)
-      val prev =
-        if (prev0.shards.isEmpty && prev0.blocks.nonEmpty) {
-          val seqd = TradeLogFormat.normalizeSeq(prev0.blocks)
-          prev0.copy(shards = TradeLogFormat.groupByDay(seqd).map(newShard),
-            maxSeq = seqd.map(_.seq).max)
-        } else prev0
-      update(prev) match {
-        case None =>
-          attemptShards.foreach(f => fs.delete(new Path(mdir, f), false))
-          return None
-        case Some(spec) =>
-          val bgen = ref.gen + 1
-          val baseSeq = math.max(prev.maxSeq,
-            prev.shards.foldLeft(-1L)((a, r) => math.max(a, r.maxSeq))) + 1L
-          val freshSeqd = spec.fresh.zipWithIndex.map { case (b, i) =>
-            b.copy(seq = baseSeq + i) }
-          val newRefs = (spec.rewrite.filter(_.nonEmpty) ++
-            TradeLogFormat.groupByDay(freshSeqd)).map(newShard)
-          val refs = spec.reuse ++ newRefs
-          val maxSeq = math.max(baseSeq + freshSeqd.size - 1,
-            refs.foldLeft(-1L)((a, r) => math.max(a, r.maxSeq)))
-          val head = TradeLogFormat.ManifestHeader + s" gen=$bgen" +
-            spec.epoch.map(e => s" epoch=$e").getOrElse("") +
-            spec.qid.map(q => s" qid=$q").getOrElse("") +
-            TradeLogFormat.xcolsToken(spec.xcols) +
-            s" maxSeq=$maxSeq" +
-            spec.delMode.orElse(prev.delMode)
-              .map(m => s" delmode=$m").getOrElse("")
-          val body = (head +: refs.map(_.line)).mkString("\n")
-            .getBytes(StandardCharsets.UTF_8)
-          val claim = new Path(mdir, s"gen-$bgen-$name.manifest")
-          val won = lock.synchronized {
-            TradeLogFormat.publishAtomic(fs, conf, mdir, claim, body,
-              overwrite = false) &&
-            // re-verify the claim still holds OUR body before the ref
-            // publish: the patience-based takeover below deletes a
-            // stalled claim and re-claims the same path, and a claimant
-            // slow between its claim and its publish (GC pause, FS
-            // stall) is indistinguishable from a dead one — publishing
-            // blindly would point the ref at the other racer's manifest
-            // or at a deleted file (r19 advice, low). A taken-over
-            // claimant loses LOUDLY here and retries instead.
-            claimHoldsBody(fs, claim, body) && {
-              TradeLogFormat.publishAtomic(fs, conf,
-                new Path(root, RefsDirName), refPath(root, name),
-                RefInfo(name, "branch", ref.base, bgen).line
-                  .getBytes(StandardCharsets.UTF_8), overwrite = true)
-              true
-            }
-          }
-          if (won) return Some(bgen)
-          attemptShards.foreach(f => fs.delete(new Path(mdir, f), false))
-          // lost the branch-generation race: wait for the winner's ref
-          // publish, or take over a dead claim (the main protocol's rule)
-          var spins = 0
-          var waiting = true
-          while (waiting && spins < 50) {
-            if (readRef(dir, name).gen >= bgen) waiting = false
-            else {
-              val st =
-                try Some(fs.getFileStatus(claim))
-                catch { case _: java.io.FileNotFoundException => None }
-              st match {
-                case None => waiting = false // claim vanished: re-claim
-                case Some(s) if System.currentTimeMillis() -
-                    s.getModificationTime > claimPatienceMs =>
-                  // dead claimant — but re-read the ref at the last
-                  // instant: if the claim's owner published while this
-                  // racer was deciding, deleting would unlink a LIVE
-                  // branch head (the same check-then-act shape as the
-                  // takeover race this path exists to resolve)
-                  if (readRef(dir, name).gen >= bgen) waiting = false
-                  else { fs.delete(claim, false); waiting = false }
-                case _ => Thread.sleep(50); spins += 1
-              }
-            }
-          }
-      }
-    }
-    throw new IllegalStateException(
-      s"graft-tradelog branch commit to $dir@$name lost $maxAttempts races")
-  }
-
-  /** Does the claim file exist and hold exactly `body`? False on any
-    * read failure — the caller treats that as a lost race. */
-  private[source] def claimHoldsBody(fs: org.apache.hadoop.fs.FileSystem,
-      claim: Path, body: Array[Byte]): Boolean =
-    try {
-      val in = fs.open(claim)
-      try {
-        val buf = new java.io.ByteArrayOutputStream(body.length + 64)
-        val tmp = new Array[Byte](8192)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        java.util.Arrays.equals(buf.toByteArray, body)
-      } finally in.close()
-    } catch { case _: java.io.IOException => false }
-
   /** FAST-FORWARD PUBLISH — the WAP "publish" verb: main adopts the
     * branch head as ONE re-referencing commit (nothing rewritten — the
     * branch's immutable shard files join the main manifest, RESTORE's
@@ -339,13 +214,7 @@ object TradeLogRefs {
           s"${ref.base} but main is at ${prev.gen} — the fast-forward " +
           "publish is not possible; re-stage the branch against the " +
           "current head")
-      if (bh.shards.nonEmpty)
-        Some(CommitSpec(reuse = bh.shards,
-          epoch = prev.epoch, qid = prev.qid, xcols = bh.xcols))
-      else
-        Some(CommitSpec(
-          rewrite = Seq(TradeLogFormat.normalizeSeq(bh.blocks)),
-          epoch = prev.epoch, qid = prev.qid, xcols = bh.xcols))
+      Some(TradeLogFormat.adoptSpec(bh, prev))
     }
     committed.getOrElse(throw new IllegalStateException(
       s"graft-tradelog $dir: branch publish aborted unexpectedly"))

@@ -123,65 +123,45 @@ final class TradeLogRowLevelOperation(path: String, tableSchema: StructType,
   * retry. Writers are the normal distributed tradelog writers. */
 final class TradeLogReplaceDataWrite(path: String, blockRows: Int,
     xcols: Seq[org.apache.spark.sql.types.StructField],
-    replacedBlocks: () => Seq[BlockMeta]) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new TradeLogWriterFactory(path, blockRows,
-      xcols.map(_.dataType).toArray, HadoopConfBox.active())
+    replacedBlocks: () => Seq[BlockMeta])
+    extends TradeLogBlockWrite(path, blockRows, xcols) {
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.flatMap { case m: TradeLogCommit => m.blocks }
-      .sortBy(b => (b.file, b.offset)).toIndexedSeq
+    val fresh = TradeLogCommit.blocksOf(messages)
     val replaced = replacedBlocks()
     val replacedKeys = replaced.map(b => (b.file, b.offset)).toSet
     if (replaced.isEmpty && fresh.isEmpty) return // nothing read or written
     TradeLogFormat.commitManifest(path) { prevOpt =>
       val prev = prevOpt.getOrElse(throw new IllegalStateException(
         s"graft-tradelog $path lost its manifest during a row-level write"))
-      val reuse = scala.collection.mutable.ArrayBuffer.empty[
-        TradeLogFormat.ShardRef]
-      val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
-      var seen = 0
       // a block's ts span is contained in its shard's span (ShardRef.of),
       // so only shards intersecting some replaced block's span can hold
       // one — the rest carry forward unresolved (O(touched shards) work)
-      def mightHold(r: TradeLogFormat.ShardRef): Boolean =
+      val plan = TradeLogFormat.triageShards(path, prev, r =>
         replaced.exists(b => b.minTsUs == Long.MinValue ||
           r.intersectsTs(b.minTsUs, b.maxTsUs))
-      val headGone = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      prev.shards.foreach { r =>
-        if (!mightHold(r)) reuse += r
-        else {
-          val bs = TradeLogFormat.readShardBlocks(path, r)
-          val (gone, keep) =
-            bs.partition(b => replacedKeys((b.file, b.offset)))
-          seen += gone.size
-          headGone ++= gone
-          if (gone.isEmpty) reuse += r
-          else if (keep.nonEmpty) rewrite += keep
-        }
-      }
+      )(b => replacedKeys((b.file, b.offset)))
       // conflict validation (re-runs on every optimistic retry): every
       // scanned block must still be committed — a concurrent rewrite that
       // removed one invalidates this operation's read snapshot
-      if (seen != replacedKeys.size) throw new IllegalStateException(
-        s"graft-tradelog $path: ${replacedKeys.size - seen} of the blocks " +
-          "this row-level operation read were removed by a concurrent " +
-          "commit — the operation's snapshot is stale; re-run it")
+      if (plan.dropped.size != replacedKeys.size)
+        throw new IllegalStateException(
+          s"graft-tradelog $path: ${replacedKeys.size - plan.dropped.size} " +
+            "of the blocks this row-level operation read were removed by a " +
+            "concurrent commit — the operation's snapshot is stale; re-run it")
       // ... and each must still carry the DELETE-VECTOR state the scan
       // read. A DV preserves block identity, so a concurrent MoR DELETE
       // would pass the existence check while this COW rewrite — computed
       // from the PRE-delete read — resurrects its masked rows. The
       // exact-identity fingerprint (compaction's token) closes that hole.
-      if (TradeLogFormat.dvFingerprint(headGone.toSeq) !=
+      if (TradeLogFormat.dvFingerprint(plan.dropped) !=
           TradeLogFormat.dvFingerprint(replaced))
         throw new IllegalStateException(
           s"graft-tradelog $path: the delete-vector state of the blocks " +
             "this row-level operation read changed under a concurrent " +
             "commit — the operation's snapshot is stale; re-run it")
-      Some(TradeLogFormat.CommitSpec(reuse = reuse.toSeq,
-        rewrite = rewrite.toSeq, fresh = fresh,
+      Some(TradeLogFormat.CommitSpec(reuse = plan.reuse,
+        rewrite = plan.rewrite, fresh = fresh,
         epoch = prev.epoch, qid = prev.qid,
         xcols = TradeLogFormat.mergeXcols(prev.xcols, xcols)))
     }
@@ -193,15 +173,6 @@ final class TradeLogReplaceDataWrite(path: String, blockRows: Int,
     // pre-DELETE time travel resolvable for the configured window.
     TradeLogFormat.vacuum(path, TradeLogFormat.dmlVacuumGraceMs())
     ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogCommit => m.blocks.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
-    }
   }
 }
 
@@ -452,7 +423,9 @@ final class TradeLogDeltaWrite(path: String, blockRows: Int,
       var found = 0
       // only shards whose span intersects a touched block's can hold one
       // (block spans are contained in their shard's) — the rest carry
-      // forward unresolved, O(touched shards) commit work
+      // forward unresolved, O(touched shards) commit work. This walk stays
+      // outside TradeLogFormat.triageShards: it drops no block, it
+      // rewrites touched blocks in place with their merged delete vectors
       def mightHold(r: TradeLogFormat.ShardRef): Boolean =
         touched.exists(b => b.minTsUs == Long.MinValue ||
           r.intersectsTs(b.minTsUs, b.maxTsUs))
@@ -502,16 +475,12 @@ final class TradeLogDeltaWrite(path: String, blockRows: Int,
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // deletes leave no files; an UPDATE's reinserted images do
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogDeltaCommit =>
-        m.inserted.map(_.file).distinct.foreach(f =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
-    }
-  }
+  // deletes leave no files; an UPDATE's reinserted images do
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    TradeLogCommit.deleteFiles(path, messages.toSeq.flatMap {
+      case m: TradeLogDeltaCommit => m.inserted.map(_.file)
+      case _ => Nil
+    })
 }
 
 /** V2-predicate vocabulary for the metadata-only DELETE tier: a

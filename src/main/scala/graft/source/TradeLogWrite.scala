@@ -140,9 +140,7 @@ final class TradeLogStreamingWrite(path: String, queryId: String,
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    val fresh = messages.flatMap { case m: TradeLogCommit => m.blocks }
-      .sortBy(b => (b.file, b.offset)).toIndexedSeq
+    val fresh = TradeLogCommit.blocksOf(messages)
     // optimistic commit: the replay check re-runs inside every retry
     // against the CURRENT head, so a concurrent writer landing between
     // read and claim can never outdate the guard. ecommit marks this
@@ -162,19 +160,12 @@ final class TradeLogStreamingWrite(path: String, queryId: String,
     if (committed.isEmpty)
       // epoch replay BY THIS QUERY: the previous attempt already
       // published — drop the duplicates, leave the manifest untouched
-      fresh.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
+      TradeLogCommit.deleteFiles(path, fresh.map(_.file))
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogCommit => m.blocks.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
-    }
-  }
+      messages: Array[WriterCommitMessage]): Unit =
+    TradeLogCommit.abort(path, messages)
 }
 
 final class TradeLogStreamingWriterFactory(path: String, blockRows: Int,
@@ -186,31 +177,29 @@ final class TradeLogStreamingWriterFactory(path: String, blockRows: Int,
       confBox)
 }
 
-final class TradeLogBatchWrite(path: String,
-    truncateFirst: Boolean, blockRows: Int,
-    xcols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
-    branch: Option[String] = None) extends BatchWrite {
+/** A batch write through the plain per-task tradelog writers: every
+  * subclass differs only in its driver-side commit. An aborted job
+  * deletes the files its successful tasks wrote. */
+abstract class TradeLogBlockWrite(path: String, blockRows: Int,
+    xcols: Seq[org.apache.spark.sql.types.StructField]) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
     new TradeLogWriterFactory(path, blockRows,
       xcols.map(_.dataType).toArray, HadoopConfBox.active())
 
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    TradeLogCommit.abort(path, messages)
+}
+
+final class TradeLogBatchWrite(path: String,
+    truncateFirst: Boolean, blockRows: Int,
+    xcols: Seq[org.apache.spark.sql.types.StructField] = Seq.empty,
+    branch: Option[String] = None)
+    extends TradeLogBlockWrite(path, blockRows, xcols) {
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    val fresh = messages.flatMap { case m: TradeLogCommit => m.blocks }
-      .sortBy(b => (b.file, b.offset)).toIndexedSeq
-    if (branch.isDefined) {
-      // branch append (WAP staging): same spec shape as the main append,
-      // committed to the branch head; main is untouched until publish
-      TradeLogRefs.commitToBranch(path, branch.get) { prev =>
-        Some(TradeLogFormat.CommitSpec(
-          reuse = prev.shards, fresh = fresh,
-          epoch = prev.epoch, qid = prev.qid,
-          xcols = TradeLogFormat.mergeXcols(prev.xcols, xcols)))
-      }
-      return
-    }
+    val fresh = TradeLogCommit.blocksOf(messages)
     if (truncateFirst) {
       // overwrite: PUBLISH FIRST, then garbage-collect. The atomic
       // claim+rename pair is the commit point — a crash before it leaves
@@ -232,20 +221,23 @@ final class TradeLogBatchWrite(path: String,
           resetSeq = true))
       }
       val keep = fresh.map(_.file).toSet
-      oldFiles.get().filterNot(keep).foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
+      TradeLogCommit.deleteFiles(path, oldFiles.get().filterNot(keep))
     } else {
-      // append (SaveMode.Append): the new blocks JOIN the committed set —
-      // the untouched day shards carry forward as refs (O(touched days)
-      // commit). The streaming (epoch, qid) stamp is CARRIED FORWARD:
-      // erasing it would disarm the replay guard for a restartable
-      // streaming query whose epoch committed just before this batch
-      // append (the restart would double-append that epoch). A WIDENING
-      // append merges its extras with the committed ones (append-only
-      // prefix rule) — old blocks keep their own nCols and null-fill on
-      // read. The merge re-validates inside every optimistic retry, so a
-      // conflicting concurrent evolution loses deterministically.
-      TradeLogFormat.commitManifest(path) { prev =>
+      // append (SaveMode.Append) to main, or to a named branch head (the
+      // WAP staging door — main is untouched until TradeLogRefs.publish):
+      // the new blocks JOIN the committed set — the untouched day shards
+      // carry forward as refs (O(touched days) commit). The streaming
+      // (epoch, qid) stamp is CARRIED FORWARD: erasing it would disarm
+      // the replay guard for a restartable streaming query whose epoch
+      // committed just before this batch append (the restart would
+      // double-append that epoch). A WIDENING append merges its extras
+      // with the committed ones (append-only prefix rule) — old blocks
+      // keep their own nCols and null-fill on read. The merge re-validates
+      // inside every optimistic retry, so a conflicting concurrent
+      // evolution loses deterministically.
+      val head = branch.fold[TradeLogFormat.CommitHead](
+        TradeLogFormat.CommitHead.Main)(TradeLogFormat.CommitHead.Branch)
+      TradeLogFormat.commitManifest(path, head) { prev =>
         Some(TradeLogFormat.CommitSpec(
           reuse = prev.map(_.shards).getOrElse(Seq.empty),
           fresh = fresh,
@@ -256,13 +248,72 @@ final class TradeLogBatchWrite(path: String,
       ()
     }
   }
+}
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogCommit => m.blocks.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
+/** The REPLACE commit shared by delete-vector compaction and OPTIMIZE:
+  * the fresh blocks — the paired read's live rows, rewritten by the
+  * normal distributed writers — replace the head blocks `select` drops,
+  * every other block carries forward. Re-checked inside every optimistic
+  * retry: the subclass's conflict validation (`select`, and `validate`
+  * once there is something to replace), then the row-count invariant —
+  * the replaced blocks' live rows must equal the rows rewritten. The
+  * fresh blocks carry replace provenance over every dropped seq
+  * (dataChange=false: a seq-watermark stream or changes-since diff
+  * positioned past the sources skips the restatement instead of
+  * re-emitting every survivor — the offset-stability contract in
+  * TradeLogStream.scala; transitive across prior replaces). After the
+  * commit: the CDF-retention fold sidecar (the dropped blocks' final DV
+  * state, keyed by the fold's generation — best-effort, see
+  * [[TradeLogFormat.writeFoldSidecar]]), the delist journal and the
+  * graced vacuum. Nothing to replace and nothing written
+  * is a no-op: no commit, the job's files are dropped. */
+abstract class TradeLogReplaceWrite(path: String, blockRows: Int,
+    xcols: Seq[org.apache.spark.sql.types.StructField], verb: String)
+    extends TradeLogBlockWrite(path, blockRows, xcols) {
+
+  /** Plan the head: which shards carry forward and which blocks drop. */
+  protected def select(prev: TradeLogFormat.ManifestInfo)
+      : TradeLogFormat.ShardTriage
+
+  /** Conflict validation that runs only when the commit replaces
+    * something. */
+  protected def validate(plan: TradeLogFormat.ShardTriage): Unit = ()
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val fresh = TradeLogCommit.blocksOf(messages)
+    val outcome = new java.util.concurrent.atomic.AtomicReference(
+      TradeLogFormat.ShardTriage.Empty)
+    val committed = TradeLogFormat.commitManifest(path) { prevOpt =>
+      val prev = prevOpt.getOrElse(throw new IllegalStateException(
+        s"graft-tradelog $path lost its manifest during $verb"))
+      val plan = select(prev)
+      outcome.set(plan)
+      if (plan.dropped.isEmpty && fresh.isEmpty) None
+      else {
+        validate(plan)
+        val live = plan.dropped.map(_.liveRows.toLong).sum
+        val rewrote = fresh.map(_.nRows.toLong).sum
+        if (live != rewrote) throw new IllegalStateException(
+          s"graft-tradelog $path: $verb rewrote $rewrote rows but the " +
+            s"replaced blocks hold $live live rows — a concurrent commit " +
+            "moved the target or the paired read did not cover it; re-run it")
+        val (srcMin, srcMax) = TradeLogFormat.replaceProvenance(plan.dropped)
+        Some(TradeLogFormat.CommitSpec(reuse = plan.reuse,
+          rewrite = plan.rewrite,
+          fresh = fresh.map(_.copy(srcMinSeq = srcMin, srcMaxSeq = srcMax)),
+          epoch = prev.epoch, qid = prev.qid,
+          xcols = TradeLogFormat.mergeXcols(prev.xcols, xcols)))
+      }
+    }
+    committed match {
+      case None => abort(messages)
+      case Some(gen) =>
+        val plan = outcome.get()
+        TradeLogFormat.writeFoldSidecar(path, gen, plan.dropped)
+        TradeLogFormat.journalDelisted(path, plan.delisted,
+          System.currentTimeMillis())
+        TradeLogFormat.vacuum(path, TradeLogFormat.dmlVacuumGraceMs())
+        ()
     }
   }
 }
@@ -284,94 +335,20 @@ final class TradeLogBatchWrite(path: String,
   * for the graced vacuum, like every delete tier. */
 final class TradeLogCompactDeletesWrite(path: String, blockRows: Int,
     xcols: Seq[org.apache.spark.sql.types.StructField],
-    expectDvFingerprint: String) extends BatchWrite {
+    expectDvFingerprint: String)
+    extends TradeLogReplaceWrite(path, blockRows, xcols, "DV compaction") {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new TradeLogWriterFactory(path, blockRows,
-      xcols.map(_.dataType).toArray, HadoopConfBox.active())
+  // refs-tier pruning: only shards with deletes resolve (nDel > 0)
+  override protected def select(prev: TradeLogFormat.ManifestInfo)
+      : TradeLogFormat.ShardTriage =
+    TradeLogFormat.triageShards(path, prev, _.nDel > 0L)(_.nDel > 0)
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.flatMap { case m: TradeLogCommit => m.blocks }
-      .sortBy(b => (b.file, b.offset)).toIndexedSeq
-    val delisted = new java.util.concurrent.atomic.AtomicReference[
-      Seq[String]](Seq.empty)
-    val droppedRef = new java.util.concurrent.atomic.AtomicReference[
-      Seq[BlockMeta]](Seq.empty)
-    val committed = TradeLogFormat.commitManifest(path) { prevOpt =>
-      delisted.set(Seq.empty) // reset per optimistic retry
-      droppedRef.set(Seq.empty)
-      val prev = prevOpt.getOrElse(throw new IllegalStateException(
-        s"graft-tradelog $path lost its manifest during a DV compaction"))
-      val reuse = scala.collection.mutable.ArrayBuffer.empty[
-        TradeLogFormat.ShardRef]
-      val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
-      val dropped = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      val keptResolved = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      // refs-tier pruning: only shards with deletes resolve (nDel > 0)
-      prev.shards.foreach { r =>
-        if (r.nDel == 0L) reuse += r
-        else {
-          val bs = TradeLogFormat.readShardBlocks(path, r)
-          val (dv, keep) = bs.partition(_.nDel > 0)
-          dropped ++= dv
-          keptResolved ++= keep
-          if (keep.nonEmpty) rewrite += keep
-        }
-      }
-      if (dropped.isEmpty && fresh.isEmpty) None // nothing to fold: no-op
-      else {
-        // exact-identity conflict check: the head's DV state must be the
-        // one the paired read captured (see class doc — counts alone can
-        // be defeated by offsetting concurrent deletes)
-        val headFp = TradeLogFormat.dvFingerprint(dropped.toSeq)
-        if (headFp != expectDvFingerprint) throw new IllegalStateException(
-          s"graft-tradelog $path: the delete-vector state changed between " +
-            "the compaction's read and its commit (a concurrent DELETE " +
-            "landed) — re-run the compaction")
-        val live = dropped.map(_.liveRows.toLong).sum
-        val rewrote = fresh.map(_.nRows.toLong).sum
-        if (live != rewrote) throw new IllegalStateException(
-          s"graft-tradelog $path: DV compaction read $rewrote live rows " +
-            s"but the head's delete vectors now mask to $live — a " +
-            "concurrent delete moved the target; re-run the compaction")
-        val keptFiles = keptResolved.map(_.file).toSet
-        delisted.set(dropped.map(_.file).distinct.filterNot(keptFiles).toSeq)
-        droppedRef.set(dropped.toSeq)
-        // dataChange=false provenance: the fresh blocks RESTATE rows whose
-        // original blocks' seqs span [srcMin, srcMax] — a seq-watermark
-        // stream or changes-since diff positioned past the sources skips
-        // them instead of re-emitting every survivor (r18 advice, high;
-        // the offset-stability contract in TradeLogStream.scala).
-        // Transitive across prior replaces (r19 advice, high).
-        val (srcMin, srcMax) =
-          TradeLogFormat.replaceProvenance(dropped.toSeq)
-        Some(TradeLogFormat.CommitSpec(reuse = reuse.toSeq,
-          rewrite = rewrite.toSeq,
-          fresh = fresh.map(_.copy(srcMinSeq = srcMin, srcMaxSeq = srcMax)),
-          epoch = prev.epoch, qid = prev.qid,
-          xcols = TradeLogFormat.mergeXcols(prev.xcols, xcols)))
-      }
-    }
-    if (committed.isEmpty) { abort(messages); return } // no-op: drop files
-    // CDF-retention sidecar: the dropped blocks' final DV state, keyed by
-    // the fold's generation (best-effort — see writeFoldSidecar)
-    committed.foreach(g =>
-      TradeLogFormat.writeFoldSidecar(path, g, droppedRef.get()))
-    TradeLogFormat.journalDelisted(path, delisted.get(),
-      System.currentTimeMillis())
-    TradeLogFormat.vacuum(path, TradeLogFormat.dmlVacuumGraceMs())
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogCommit => m.blocks.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
-    }
-  }
+  override protected def validate(plan: TradeLogFormat.ShardTriage): Unit =
+    if (TradeLogFormat.dvFingerprint(plan.dropped) != expectDvFingerprint)
+      throw new IllegalStateException(
+        s"graft-tradelog $path: the delete-vector state changed between " +
+          "the compaction's read and its commit (a concurrent DELETE " +
+          "landed) — re-run the compaction")
 }
 
 /** Whole-log OPTIMIZE commit (the rewrite half of
@@ -392,19 +369,14 @@ final class TradeLogCompactDeletesWrite(path: String, blockRows: Int,
   * Accumulated delete vectors FOLD into the rewrite (the masked read
   * never emits masked rows, and the fresh blocks carry no DV) — OPTIMIZE
   * over a DV'd log compacts and clusters in one commit (r18 verdict #5).
-  * Fresh blocks carry replace provenance over every dropped seq, so
-  * streams and changes-since diffs positioned past the sources skip the
-  * restatement (the same dataChange=false rule as compaction). Old data
-  * files journal for the graced vacuum, like every rewrite tier. */
+  * The scoped variant touches only scope-intersecting shards: untouched
+  * day shards carry forward by ref — the property that makes the scoped
+  * verb the schedulable per-partition maintenance shape at 100 TB. */
 final class TradeLogOptimizeWrite(path: String, blockRows: Int,
     xcols: Seq[org.apache.spark.sql.types.StructField],
     expectGeneration: Long,
-    scope: Option[(Long, Long)] = None) extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new TradeLogWriterFactory(path, blockRows,
-      xcols.map(_.dataType).toArray, HadoopConfBox.active())
+    scope: Option[(Long, Long)] = None)
+    extends TradeLogReplaceWrite(path, blockRows, xcols, "OPTIMIZE") {
 
   /** The same fully-contained test as the paired `optimizeScope` read
     * (unknown spans never qualify) — read and commit MUST agree on the
@@ -415,87 +387,41 @@ final class TradeLogOptimizeWrite(path: String, blockRows: Int,
       b.minTsUs != Long.MinValue && b.minTsUs >= lo && b.maxTsUs <= hi
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fresh = messages.flatMap { case m: TradeLogCommit => m.blocks }
-      .sortBy(b => (b.file, b.offset)).toIndexedSeq
-    val delisted = new java.util.concurrent.atomic.AtomicReference[
-      Seq[String]](Seq.empty)
-    val droppedRef = new java.util.concurrent.atomic.AtomicReference[
-      Seq[BlockMeta]](Seq.empty)
-    val committed = TradeLogFormat.commitManifest(path) { prevOpt =>
-      delisted.set(Seq.empty) // reset per optimistic retry
-      droppedRef.set(Seq.empty)
-      val prev = prevOpt.getOrElse(throw new IllegalStateException(
-        s"graft-tradelog $path lost its manifest during an OPTIMIZE"))
-      if (prev.gen != expectGeneration) throw new IllegalStateException(
-        s"graft-tradelog $path: a commit landed between this OPTIMIZE's " +
-          s"read (generation $expectGeneration) and its publish (head is " +
-          s"${prev.gen}) — the clustered rewrite is stale; re-run it")
-      // O(scope-intersecting shards) commit work: untouched day shards
-      // carry forward by ref — the property that makes the scoped verb
-      // the schedulable per-partition maintenance shape at 100 TB
-      val reuse = scala.collection.mutable.ArrayBuffer.empty[
-        TradeLogFormat.ShardRef]
-      val rewrite = scala.collection.mutable.ArrayBuffer.empty[Seq[BlockMeta]]
-      val dropped = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      val keptResolved = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
-      def shardIntersects(r: TradeLogFormat.ShardRef): Boolean =
-        scope.forall { case (lo, hi) => r.intersectsTs(lo, hi) }
-      // commitManifest migrates a legacy flat head into day shards before
-      // update runs, so an empty `shards` here means an EMPTY log
-      prev.shards.foreach { r =>
-        if (!shardIntersects(r)) reuse += r
-        else {
-          val bs = TradeLogFormat.readShardBlocks(path, r)
-          val (drop, keep) = bs.partition(contained)
-          dropped ++= drop
-          keptResolved ++= keep
-          if (drop.isEmpty) reuse += r
-          else if (keep.nonEmpty) rewrite += keep
-        }
-      }
-      if (dropped.isEmpty && fresh.isEmpty) None // nothing in scope: no-op
-      else {
-        val live = dropped.map(_.liveRows.toLong).sum
-        val rewrote = fresh.map(_.nRows.toLong).sum
-        if (live != rewrote) throw new IllegalStateException(
-          s"graft-tradelog $path: OPTIMIZE rewrote $rewrote rows but the " +
-            s"replaced blocks hold $live live rows — the paired read did " +
-            "not cover the scope; aborting the rewrite")
-        val keptFiles = keptResolved.map(_.file).toSet
-        delisted.set(dropped.map(_.file).distinct.filterNot(keptFiles).toSeq)
-        droppedRef.set(dropped.toSeq)
-        // transitive provenance across prior replace commits (r19 advice)
-        val (srcMin, srcMax) =
-          TradeLogFormat.replaceProvenance(dropped.toSeq)
-        Some(TradeLogFormat.CommitSpec(reuse = reuse.toSeq,
-          rewrite = rewrite.toSeq,
-          fresh = fresh.map(_.copy(srcMinSeq = srcMin, srcMaxSeq = srcMax)),
-          epoch = prev.epoch, qid = prev.qid,
-          xcols = TradeLogFormat.mergeXcols(prev.xcols, xcols)))
-      }
-    }
-    if (committed.isEmpty) { abort(messages); return } // no-op: drop files
-    committed.foreach(g =>
-      TradeLogFormat.writeFoldSidecar(path, g, droppedRef.get()))
-    TradeLogFormat.journalDelisted(path, delisted.get(),
-      System.currentTimeMillis())
-    TradeLogFormat.vacuum(path, TradeLogFormat.dmlVacuumGraceMs())
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, root) = TradeLogFormat.fs(path)
-    messages.foreach {
-      case m: TradeLogCommit => m.blocks.map(_.file).distinct.foreach(f =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
-      case _ => ()
-    }
+  override protected def select(prev: TradeLogFormat.ManifestInfo)
+      : TradeLogFormat.ShardTriage = {
+    if (prev.gen != expectGeneration) throw new IllegalStateException(
+      s"graft-tradelog $path: a commit landed between this OPTIMIZE's " +
+        s"read (generation $expectGeneration) and its publish (head is " +
+        s"${prev.gen}) — the clustered rewrite is stale; re-run it")
+    TradeLogFormat.triageShards(path, prev,
+      r => scope.forall { case (lo, hi) => r.intersectsTs(lo, hi) })(contained)
   }
 }
 
+/** The commit message of one tradelog writer task: the blocks it wrote. */
 final case class TradeLogCommit(blocks: Seq[BlockMeta])
     extends WriterCommitMessage
+
+object TradeLogCommit {
+  /** Every block the tasks wrote, in (file, offset) order. Failed tasks'
+    * slots (null or foreign messages) carry none. */
+  def blocksOf(messages: Array[WriterCommitMessage]): IndexedSeq[BlockMeta] =
+    messages.toIndexedSeq.flatMap {
+      case m: TradeLogCommit => m.blocks
+      case _ => Nil
+    }.sortBy(b => (b.file, b.offset))
+
+  /** Delete data files of the log at `path` (each at most once). */
+  def deleteFiles(path: String, files: Seq[String]): Unit = {
+    val (fs, root) = TradeLogFormat.fs(path)
+    files.distinct.foreach(f =>
+      fs.delete(new org.apache.hadoop.fs.Path(root, f), false))
+  }
+
+  /** A write's abort: drop every file its successful tasks wrote. */
+  def abort(path: String, messages: Array[WriterCommitMessage]): Unit =
+    deleteFiles(path, blocksOf(messages).map(_.file))
+}
 
 final class TradeLogWriterFactory(path: String, blockRows: Int,
     xtypes: Array[org.apache.spark.sql.types.DataType],

@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The ONE bench-session recipe shared by every timing tool (RepeatTimer,
-  * IvfSweep, SemSweep): identical session config — so sweep numbers stay
-  * comparable across tools — plus the median-timing and noop-sink
+/** The ONE bench-session recipe shared by every timing tool (DmlScale,
+  * JobProfile, RepeatTimer, ScaleSweep, ScaleUp): identical session
+  * config — so their numbers stay comparable across tools — plus the median-timing and noop-sink
   * helpers. Config mirrors Bench: local[SPARK_GRAFT_CPUS], matching
   * shuffle partitions, UTC, nanos-as-long for events.ts, and the
   * periodic-GC reclamation backstop (the ContextCleaner frees broadcast/

@@ -49,8 +49,8 @@ class PqSpec extends SparkTestBase {
     // of a 500-vector corpus (3/499 ≈ 0.006) and above both the
     // cosine-trained quantizer this replaced (0.17) and the original
     // 8-byte ks=16 config (0.30–0.37) — the swept (ks=64, 2-round)
-    // gate config lands 0.50 at sf0.01 (tools.PqSweep frontier,
-    // BASELINE.md round-10 table).
+    // gate config lands 0.50 at sf0.01 (BASELINE.md, "Round-10: PQ
+    // compression/recall frontier").
     val rec = SimilarityPq.pqRecall(spark, d001)
       .agg(avg(col("recall"))).head.getDouble(0)
     info(f"PQ recall@3: $rec%.3f")
@@ -127,7 +127,7 @@ class PqSpec extends SparkTestBase {
   }
 
   test("pq_recon: native lookup equals the filter-HOF reconstruction bit-for-bit") {
-    // r20 opt: withReconAt swapped the per-subspace
+    // withRecon swapped the per-subspace
     // element_at(filter(cm[j], s -> s.cid = c_j), 1).ce concat for the
     // native expr.PqRecon. Same inputs (the real trained codebook map +
     // real codes over the driver corpus), both formulations projected

@@ -5,13 +5,14 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Row
 
 import graft.SparkTestBase
-import TradeLogFormat.{BlockMeta, CommitSpec}
+import TradeLogFormat.{BlockMeta, CommitHead, CommitSpec}
 
 /** Contract tests for the round-17 manifest machinery: the OPTIMISTIC
   * commit protocol (exactly one winner per generation, losers re-merge
-  * and retry, dead claims taken over), the TWO-LEVEL manifest (per-day
-  * shard files carried by ref, rewritten only when touched), and the
-  * legacy flat-manifest migration path. */
+  * and retry, dead claims taken over — run against both head targets,
+  * main and a branch), the TWO-LEVEL manifest (per-day shard files
+  * carried by ref, rewritten only when touched), and the legacy
+  * flat-manifest migration path. */
 class TradeLogCommitSpec extends SparkTestBase {
 
   private val Fmt = "graft-tradelog"
@@ -32,6 +33,63 @@ class TradeLogCommitSpec extends SparkTestBase {
     * real data files — readers resolve blocks only through the manifest). */
   private def fakeBlock(tag: String, dayUs: Long): BlockMeta =
     BlockMeta(s"part-$tag.gtl", 0L, 100, 10, dayUs, dayUs + 1000L)
+
+  /** The committed generation of `head` (branch-local for a branch). */
+  private def headGen(dir: String, head: CommitHead): Long = head match {
+    case CommitHead.Main => TradeLogFormat.readManifestHeader(dir).gen
+    case CommitHead.Branch(name) => TradeLogRefs.readRef(dir, name).gen
+  }
+
+  /** The committed state `head` points at, shards resolved. */
+  private def headInfo(dir: String, head: CommitHead) = head match {
+    case CommitHead.Main => TradeLogFormat.readManifestInfo(dir)
+    case CommitHead.Branch(name) => TradeLogRefs.headInfo(dir, name)
+  }
+
+  /** A reuse-only commit: the head's content carried forward unchanged. */
+  private def carryForward(prev: Option[TradeLogFormat.ManifestInfo]) =
+    Some(CommitSpec(reuse = prev.get.shards, epoch = prev.get.epoch,
+      qid = prev.get.qid, xcols = prev.get.xcols))
+
+  /** Plant a crashed claimant's snapshot for `head`'s next generation —
+    * claimed, never published, carrying a tempting epoch stamp and a
+    * ghost block. */
+  private def plantDeadClaim(dir: String, head: CommitHead,
+      dayUs: Long): org.apache.hadoop.fs.Path = {
+    val gen = headGen(dir, head) + 1
+    val (fs, root) = TradeLogFormat.fs(dir)
+    val orphan = new org.apache.hadoop.fs.Path(root,
+      s"${TradeLogFormat.ManifestDirName}/${head.snapshotName(gen)}")
+    val o = fs.create(orphan, true)
+    o.write((TradeLogFormat.ManifestHeader +
+      s" gen=$gen epoch=99 qid=q ecommit=1 maxSeq=9\n" +
+      fakeBlock("ghost", dayUs).csv).getBytes("UTF-8"))
+    o.close()
+    orphan
+  }
+
+  /** Age `orphan` past the patience: the next commit to `head` must take
+    * the dead claim over, win its generation, and publish its own
+    * content there. */
+  private def assertTakesOver(dir: String, head: CommitHead,
+      orphan: org.apache.hadoop.fs.Path, dayUs: Long): Unit = {
+    val (fs, _) = TradeLogFormat.fs(dir)
+    val gen = headGen(dir, head) + 1
+    fs.setTimes(orphan, System.currentTimeMillis() - 10000L, -1)
+    val won = TradeLogFormat.commitManifest(dir, head,
+      claimPatienceMs = 1000L) { prev =>
+      Some(CommitSpec(reuse = prev.get.shards,
+        fresh = Seq(fakeBlock("late", dayUs + 2000000L))))
+    }
+    assert(won.contains(gen),
+      s"takeover must reclaim the dead generation $gen: $won")
+    assert(headGen(dir, head) == gen)
+    val claimed = TradeLogFormat.readManifestFile(dir,
+      s"${TradeLogFormat.ManifestDirName}/${head.snapshotName(gen)}")
+    assert(claimed.blocks.forall(_.file != "part-ghost.gtl") &&
+      claimed.blocks.exists(_.file == "part-late.gtl"),
+      "the dead claim's content must be gone after takeover")
+  }
 
   test("optimistic commit: two racing appenders, exactly one winner per generation, zero lost blocks") {
     val dir = tmpDir("race")
@@ -80,20 +138,11 @@ class TradeLogCommitSpec extends SparkTestBase {
         fresh = Seq(fakeBlock("e2", day + 1000000L)),
         epoch = Some(2L), qid = Some("q"), epochCommit = true))
     }
-    val headGen = TradeLogFormat.readManifestHeader(dir).gen
-    assert(headGen == 2)
+    assert(TradeLogFormat.readManifestHeader(dir).gen == 2)
     // plant a crashed commit's claim: gen 3 snapshot exists, head never
     // advanced — an uncommitted state carrying a tempting epoch stamp
     val (fs, root) = TradeLogFormat.fs(dir)
-    val orphan = new org.apache.hadoop.fs.Path(root,
-      s"${TradeLogFormat.ManifestDirName}/gen-3.manifest")
-    locally {
-      val o = fs.create(orphan, true)
-      o.write((TradeLogFormat.ManifestHeader +
-        " gen=3 epoch=99 qid=q ecommit=1 maxSeq=9\n" +
-        fakeBlock("ghost", day).csv).getBytes("UTF-8"))
-      o.close()
-    }
+    val orphan = plantDeadClaim(dir, CommitHead.Main, day)
     // ADVICE r16 (medium): the orphan must never resolve as a committed
     // epoch — asOfEpoch is bounded by the head generation
     assert(TradeLogFormat.resolveEpochGen(dir, 99L) == 2L,
@@ -106,17 +155,106 @@ class TradeLogCommitSpec extends SparkTestBase {
       "the committed head generation's snapshot must always survive expiry")
     // the next commit finds gen 3 claimed by a dead writer: with the
     // patience elapsed it takes the claim over and wins gen 3 itself
-    fs.setTimes(orphan, System.currentTimeMillis() - 10000L, -1)
-    val won = TradeLogFormat.commitManifest(dir, claimPatienceMs = 1000L) {
-      prev => Some(CommitSpec(reuse = prev.get.shards,
-        fresh = Seq(fakeBlock("late", day + 2000000L))))
-    }
-    assert(won.contains(3L),
-      s"takeover must reclaim the dead generation: $won")
+    assertTakesOver(dir, CommitHead.Main, orphan, day)
     assert(TradeLogFormat.readManifestInfo(dir).blocks.size == 3)
-    assert(TradeLogFormat.readManifestInfoAt(dir, 3L).blocks
-      .forall(_.file != "part-ghost.gtl"),
-      "the dead claim's content must be gone after takeover")
+  }
+
+  test("a dead claimant's orphan branch snapshot is taken over by the next branch commit; main is untouched") {
+    val dir = tmpDir("orphanb")
+    val day = 1704067200000000L
+    TradeLogFormat.writeManifest(dir, Seq(fakeBlock("e1", day)))
+    TradeLogRefs.createBranch(dir, "b")
+    val head = CommitHead.Branch("b")
+    TradeLogFormat.commitManifest(dir, head) { prev =>
+      Some(CommitSpec(reuse = prev.get.shards,
+        fresh = Seq(fakeBlock("e2", day + 1000000L))))
+    }
+    val orphan = plantDeadClaim(dir, head, day)
+    assertTakesOver(dir, head, orphan, day)
+    assert(TradeLogRefs.headInfo(dir, "b").blocks.map(_.file).toSet ==
+      Set("part-e1.gtl", "part-e2.gtl", "part-late.gtl"))
+    val main = TradeLogFormat.readManifestInfo(dir)
+    assert(main.gen == 1L && main.blocks.map(_.file) == Seq("part-e1.gtl"),
+      "a branch takeover must leave main untouched")
+  }
+
+  test("a claimant only publishes a claim that still holds ITS body") {
+    // the takeover guard's primitive, tested directly: a claimant slow
+    // between claim and publish whose claim was deleted and re-claimed
+    // by a patient racer must LOSE (mismatched or missing body), never
+    // point the head at the other racer's manifest or a deleted file
+    val dir = tmpDir("claimck")
+    val (fs, root) = TradeLogFormat.fs(dir)
+    fs.mkdirs(root)
+    val p = new org.apache.hadoop.fs.Path(root, "claim.manifest")
+    val mine = "graft-tradelog gen=1 mine".getBytes("UTF-8")
+    val theirs = "graft-tradelog gen=1 theirs".getBytes("UTF-8")
+    assert(!TradeLogFormat.claimHoldsBody(fs, p, mine),
+      "a deleted claim must read as lost")
+    val out = fs.create(p); out.write(mine); out.close()
+    assert(TradeLogFormat.claimHoldsBody(fs, p, mine))
+    val out2 = fs.create(p, true); out2.write(theirs); out2.close()
+    assert(!TradeLogFormat.claimHoldsBody(fs, p, mine),
+      "a re-claimed path holding another racer's body must read as lost")
+  }
+
+  Seq(CommitHead.Main, CommitHead.Branch("storm")).foreach { head =>
+    val label = head match {
+      case CommitHead.Main => "main"
+      case CommitHead.Branch(_) => "branch"
+    }
+    test(s"aggressive-takeover storm on the $label head: every acknowledged commit survives; the head always resolves") {
+      // claimPatienceMs=0 makes every loser treat every claim as dead —
+      // the maximal takeover pressure. The invariants that must hold
+      // regardless of who wins which race: (1) a writer that RETURNED
+      // success owns its generation and finds the content at the head
+      // (no silent clobber of an acknowledged commit), (2) the head
+      // resolves to a readable manifest at every point after the storm
+      // (no head-to-deleted-file).
+      val dir = tmpDir(s"storm-$label")
+      val rows = (0L to 3L).map(i => Row(i, ts(s"2024-01-01 00:0$i:00"),
+        100L + i, s"t$i", i * 1.5, s"p$i"))
+      df(rows).coalesce(1).write.format(Fmt).mode("overwrite")
+        .option("blockRows", 4).save(dir)
+      head match {
+        case CommitHead.Branch(name) => TradeLogRefs.createBranch(dir, name)
+        case CommitHead.Main => ()
+      }
+      val before = headGen(dir, head)
+      val n = 4
+      val barrier = new java.util.concurrent.CyclicBarrier(n)
+      val acked = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+      val threads = (0 until n).map { _ =>
+        new Thread(() => {
+          barrier.await()
+          try {
+            // the raw protocol call with zero patience (the writer path
+            // uses the 60 s production default)
+            TradeLogFormat.commitManifest(dir, head, claimPatienceMs = 0L)(
+              carryForward).foreach(acked.add)
+          } catch { case _: IllegalStateException => () } // lost loudly: fine
+        })
+      }
+      threads.foreach(_.start()); threads.foreach(_.join(120000L))
+      import scala.jdk.CollectionConverters._
+      val gens = acked.asScala.toSeq
+      assert(gens.distinct.size == gens.size,
+        s"two acknowledged commits share a generation: $gens")
+      assert(headGen(dir, head) - before >= gens.size,
+        s"head gen ${headGen(dir, head)} below ${gens.size} acknowledged " +
+          s"commits past $before")
+      // the head must resolve — its manifest exists and parses
+      assert(headInfo(dir, head).shards.nonEmpty)
+      val opts = head match {
+        case CommitHead.Branch(name) => Map("ref" -> name)
+        case CommitHead.Main => Map.empty[String, String]
+      }
+      val got = opts.foldLeft(spark.read.format(Fmt)) {
+        case (r, (k, v)) => r.option(k, v)
+      }.load(dir).select("event_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == (0L to 3L),
+        "reuse-only commits must preserve the head content")
+    }
   }
 
   test("two-level manifest: appends rewrite only touched day shards; untouched refs carry by file identity") {

@@ -21,6 +21,10 @@ import graft.SparkTestBase
   *      ref lives, and reclaims them (via orphan adoption) once dropped;
   *   5. concurrent branch commits serialize under the claim protocol —
   *      both land, neither is lost.
+  *
+  * The claim protocol itself (takeover, claim re-verification, the
+  * zero-patience storm) is specified once for both heads in
+  * [[TradeLogCommitSpec]].
   */
 class TradeLogRefsSpec extends SparkTestBase {
 
@@ -268,68 +272,5 @@ class TradeLogRefsSpec extends SparkTestBase {
             s"round $i: a failed createTag left a dangling ref")
       }
     }
-  }
-
-  test("a branch claimant only publishes a claim that still holds ITS body (r19 advice)") {
-    // the takeover guard's primitive, tested directly: a claimant slow
-    // between claim and publish whose claim was deleted and re-claimed
-    // by a patient racer must LOSE (mismatched or missing body), never
-    // point the ref at the other racer's manifest or a deleted file
-    val dir = tmpDir("claimck")
-    val (fs, root) = TradeLogFormat.fs(dir)
-    fs.mkdirs(root)
-    val p = new org.apache.hadoop.fs.Path(root, "claim.manifest")
-    val mine = "graft-tradelog gen=1 mine".getBytes("UTF-8")
-    val theirs = "graft-tradelog gen=1 theirs".getBytes("UTF-8")
-    assert(!TradeLogRefs.claimHoldsBody(fs, p, mine),
-      "a deleted claim must read as lost")
-    val out = fs.create(p); out.write(mine); out.close()
-    assert(TradeLogRefs.claimHoldsBody(fs, p, mine))
-    val out2 = fs.create(p, true); out2.write(theirs); out2.close()
-    assert(!TradeLogRefs.claimHoldsBody(fs, p, mine),
-      "a re-claimed path holding another racer's body must read as lost")
-  }
-
-  test("aggressive-takeover storm: every acknowledged commit survives; the ref always resolves") {
-    // claimPatienceMs=0 makes every loser treat every claim as dead —
-    // the maximal takeover pressure. The invariants that must hold
-    // regardless of who wins which race: (1) a writer that RETURNED
-    // success finds its rows at the branch head (no silent clobber of
-    // an acknowledged commit), (2) the ref resolves to a readable
-    // manifest at every point after the storm (no ref-to-deleted-file).
-    val dir = tmpDir("storm")
-    df(dayRows(1, 0)).write.format(Fmt).mode("overwrite")
-      .option("blockRows", 4).save(dir)
-    TradeLogRefs.createBranch(dir, "storm")
-    val n = 4
-    val barrier = new java.util.concurrent.CyclicBarrier(n)
-    val acked = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val threads = (0 until n).map { i =>
-      new Thread(() => {
-        barrier.await()
-        val base = 100L * (i + 1)
-        try {
-          // the raw protocol call with zero patience (the writer path
-          // uses the 60 s production default)
-          TradeLogRefs.commitToBranch(dir, "storm",
-              claimPatienceMs = 0L) { prev =>
-            Some(TradeLogFormat.CommitSpec(reuse = prev.shards,
-              epoch = prev.epoch, qid = prev.qid, xcols = prev.xcols))
-          } match {
-            case Some(_) => acked.add(base); ()
-            case None => ()
-          }
-        } catch { case _: IllegalStateException => () } // lost loudly: fine
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join(120000L))
-    // the ref must resolve — its head manifest exists and parses
-    val ref = TradeLogRefs.readRef(dir, "storm")
-    val head = TradeLogRefs.headInfo(dir, "storm", refsOnly = true)
-    assert(ref.gen >= acked.size,
-      s"ref gen ${ref.gen} below ${acked.size} acknowledged commits")
-    assert(head.shards.nonEmpty || ref.gen == 0L)
-    assert(ids(dir, Map("ref" -> "storm")) == (0L to 3L),
-      "reuse-only commits must preserve the branch content")
   }
 }

@@ -4,7 +4,7 @@ import java.io.{DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 
 /** The `graft-tradelog` on-disk format — a block-framed binary event log
   * with a committed manifest, built so the DataSource V2 connector
@@ -553,7 +553,7 @@ object TradeLogFormat {
 
   /** A PINNED generation snapshot (`_manifests/gen-N.manifest`) — the
     * read-at-version surface. Every commit CLAIMS its snapshot (atomic
-    * no-overwrite rename) before publishing the main manifest, so any
+    * no-overwrite publish) before publishing the main manifest, so any
     * committed state is addressable. Data-file availability bounds the
     * horizon: purge+vacuum may have GC'd files an old generation
     * references (the delist-journal grace window is the retention knob —
@@ -574,8 +574,8 @@ object TradeLogFormat {
   private[source] def readManifestFile(dir: String, name: String,
       headerOnly: Boolean = false, refsOnly: Boolean = false): ManifestInfo = {
     val (filesystem, root) = fs(dir)
-    val in = filesystem.open(new Path(root, name))
-    val (head, refs, inline) =
+    val (head, refs, inline) = rereadTorn {
+      val in = filesystem.open(new Path(root, name))
       try {
         val src = scala.io.Source.fromInputStream(in, "UTF-8")
         val lineIt = src.getLines().map(_.trim).filter(_.nonEmpty)
@@ -589,6 +589,7 @@ object TradeLogFormat {
             blockLines.map(BlockMeta.fromCsv))
         }
       } finally in.close()
+    }
     val epoch = "epoch=(\\d+)".r.findFirstMatchIn(head).map(_.group(1).toLong)
     val qid = "qid=(\\S+)".r.findFirstMatchIn(head).map(_.group(1))
     val gen = "gen=(\\d+)".r.findFirstMatchIn(head).map(_.group(1).toLong)
@@ -701,19 +702,27 @@ object TradeLogFormat {
     val committed = listSnapshotGens(filesystem, mdir).filter(_ <= headGen)
       .sorted
     val victims = committed.dropRight(keepLast).filterNot(anchored)
-    // re-read the anchor set immediately before each unlink: a tag
-    // published after the batch read above would otherwise anchor an
-    // already-victimized generation and dangle (r19 advice, low; the
-    // tag side re-validates after publishing — both checks together
-    // shrink the check-then-act window to the unlink itself)
-    val n = victims.count(g =>
-      !TradeLogRefs.anchoredGens(dir).contains(g) &&
-        filesystem.delete(new Path(mdir, s"gen-$g.manifest"), false) && {
+    // a tag published after the batch read above may anchor a victim:
+    // park the snapshot, THEN re-read the anchors and put it back if a tag
+    // appeared. createTag re-validates after publishing its ref, so it
+    // either saw the snapshot before it was parked (this re-read sees its
+    // ref) or fails loudly — no check-then-act window is left (r19 advice)
+    val n = victims.count { g =>
+      val snap = new Path(mdir, s"gen-$g.manifest")
+      val parked = new Path(mdir, s".gen-$g.manifest.expiring")
+      filesystem.rename(snap, parked) && {
+        val tagged = TradeLogRefs.anchoredGens(dir).contains(g)
+        if (tagged) require(filesystem.rename(parked, snap),
+          s"graft-tradelog $dir: could not restore tagged snapshot $parked")
+        else {
+          filesystem.delete(parked, false)
           // the CDF-retention sidecar rides the same horizon: past it a
           // changes-since read across that fold refuses instead of serving
           filesystem.delete(new Path(mdir, s"fold-$g.csv"), false)
-          true
-        })
+        }
+        !tagged
+      }
+    }
     // shard sweep: collect every shard still referenced by the head, any
     // surviving snapshot (claims above headGen included — their refs are a
     // racer's in-flight commit), or any named ref's snapshot (staged
@@ -859,14 +868,24 @@ object TradeLogFormat {
   /** In-process commit serialization, keyed by qualified log root (every
     * head of one log shares it): local racers take the optimistic path
     * deterministically (read outside the lock, claim+publish inside), and
-    * the filesystem's no-overwrite rename arbitrates cross-process racers
-    * — the Delta LogStore split. */
+    * the claim in [[publishAtomic]] arbitrates cross-process racers —
+    * `link(2)` on a local log, `FileContext`'s no-overwrite rename
+    * elsewhere — the Delta LogStore split. */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Write `body` to a temp file and atomically rename it to `target`.
-    * With `overwrite = false` the rename is the commit CLAIM: it fails
-    * (returns false) when the target already exists — the lost race. */
+  /** Write `body` to a temp file and atomically publish it as `target`.
+    * With `overwrite = false` the publish is the commit CLAIM: it fails
+    * (returns false) when the target already exists — the lost race.
+    * A checksummed local log publishes through java.nio, because Hadoop's
+    * local FileSystem forks a `chmod`/`stat` child per permission set and
+    * link probe when libhadoop is absent: the temp gets a Hadoop-format
+    * `.crc` sidecar ([[crcSidecar]]), a claim is `link(2)` — which fails
+    * atomically on a taken name — and moves the sidecar in only after the
+    * link wins, and an overwrite renames the body, then its sidecar.
+    * Every other filesystem writes with `create` and publishes with
+    * `FileContext.rename`. Reads stay on Hadoop, which verifies the
+    * sidecar. No failure path leaves the temp (or its sidecar) behind. */
   private[source] def publishAtomic(filesystem: FileSystem, conf: Configuration,
       tmpDir: Path, target0: Path, body: Array[Byte],
       overwrite: Boolean): Boolean = {
@@ -874,22 +893,74 @@ object TradeLogFormat {
     val tmp = filesystem.makeQualified(new Path(tmpDir,
       s".${target0.getName}.tmp-" +
         java.util.UUID.randomUUID().toString.take(8)))
-    val out = filesystem.create(tmp, true)
-    try out.write(body) finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
-    if (overwrite) {
-      fc.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      true
-    } else {
-      try { fc.rename(tmp, target); true }
-      catch {
-        case e: java.io.IOException =>
-          filesystem.delete(tmp, false)
-          // lost claim only if the destination really exists; anything
+    filesystem match {
+      case local: LocalFileSystem =>
+        import java.nio.file.{FileAlreadyExistsException, Files}
+        import java.nio.file.StandardCopyOption.ATOMIC_MOVE
+        def nio(p: Path) = local.pathToFile(p).toPath
+        val (tmpBody, tmpCrc) = (nio(tmp), nio(local.getChecksumFile(tmp)))
+        val (dstBody, dstCrc) =
+          (nio(target), nio(local.getChecksumFile(target)))
+        try {
+          Files.write(tmpBody, body)
+          Files.write(tmpCrc, crcSidecar(body, local.getBytesPerSum))
+          val won =
+            if (overwrite) { Files.move(tmpBody, dstBody, ATOMIC_MOVE); true }
+            else try { Files.createLink(dstBody, tmpBody); true }
+            catch { case _: FileAlreadyExistsException => false }
+          if (won) Files.move(tmpCrc, dstCrc, ATOMIC_MOVE)
+          won
+        } finally {
+          Files.deleteIfExists(tmpBody)
+          Files.deleteIfExists(tmpCrc)
+        }
+      case _ =>
+        import org.apache.hadoop.fs.{FileContext, Options}
+        val fc = FileContext.getFileContext(target.toUri, conf)
+        try {
+          val out = filesystem.create(tmp, true)
+          try out.write(body) finally out.close()
+          if (overwrite) fc.rename(tmp, target, Options.Rename.OVERWRITE)
+          else fc.rename(tmp, target)
+          true
+        } catch {
+          // a claim is lost only if the destination really exists; anything
           // else is a genuine IO failure and must surface
-          if (filesystem.exists(target)) false else throw e
-      }
+          case e: java.io.IOException =>
+            filesystem.delete(tmp, false)
+            if (!overwrite && filesystem.exists(target)) false else throw e
+        }
     }
+  }
+
+  /** Re-run a metadata read that failed its checksum. An overwrite
+    * publish renames the body, then its sidecar, so a reader that opens
+    * both between the two renames pairs the new body with the old
+    * sidecar; a re-read a moment later sees the finished publish. Real
+    * corruption fails every attempt and surfaces. */
+  private[source] def rereadTorn[T](read: => T, tries: Int = 4): T =
+    try read
+    catch {
+      case _: org.apache.hadoop.fs.ChecksumException if tries > 1 =>
+        Thread.sleep(5L)
+        rereadTorn(read, tries - 1)
+    }
+
+  /** The `.crc` sidecar `ChecksumFileSystem` writes beside `body`: magic
+    * `crc\0`, the bytes-per-checksum int, then one big-endian CRC32 per
+    * chunk. */
+  private[source] def crcSidecar(body: Array[Byte],
+      bytesPerSum: Int): Array[Byte] = {
+    val chunks = (body.length + bytesPerSum - 1) / bytesPerSum
+    val buf = java.nio.ByteBuffer.allocate(8 + 4 * chunks)
+      .put(Array[Byte]('c', 'r', 'c', 0)).putInt(bytesPerSum)
+    val crc = new java.util.zip.CRC32()
+    for (off <- 0 until body.length by bytesPerSum) {
+      crc.reset()
+      crc.update(body, off, math.min(bytesPerSum, body.length - off))
+      buf.putInt(crc.getValue.toInt)
+    }
+    buf.array()
   }
 
   /** Does the claim file exist and hold exactly `body`? False on any
@@ -938,7 +1009,7 @@ object TradeLogFormat {
     * Read the head, build the next generation's shard set, then CLAIM the
     * generation's snapshot (`gen-N.manifest` for main,
     * `gen-k-<branch>.manifest` for a branch) with an atomic no-overwrite
-    * rename. Before publishing, the claimant re-verifies that the claim
+    * publish. Before publishing, the claimant re-verifies that the claim
     * still holds ITS body: a patience-based takeover deletes a stalled
     * claim and re-claims the same path, and a claimant slow between its
     * claim and its publish (GC pause, FS stall) is indistinguishable from

@@ -216,6 +216,27 @@ object TradeLogQueries {
   def tradelogAppend(s: SparkSession, dir: String): DataFrame =
     digestOver(s.read.format(FormatName).load(ensureAppendLog(s, dir)))
 
+  /** Build-once gate for an artifact whose build runs past its first
+    * commit: unless `marker` exists under `path`, run `build` (after
+    * wiping any half-built log when `fresh`; a pass staged on an existing
+    * artifact keeps it), then publish the marker LAST — the whole-build
+    * success-marker rule: a crash anywhere in `build` leaves no marker,
+    * so the next call rebuilds instead of freezing a half-built log
+    * (review finding r14). Returns `path`. */
+  private def buildOnce(path: String, marker: String, fresh: Boolean = true)(
+      build: => Unit): String = {
+    val conf = TradeLogFormat.driverConf()
+    val (fs, root) = TradeLogFormat.fs(path, conf)
+    val done = new org.apache.hadoop.fs.Path(root, marker)
+    if (!fs.exists(done)) {
+      if (fresh && fs.exists(root)) fs.delete(root, true)
+      build
+      TradeLogFormat.publishAtomic(fs, conf, root, done, Array.emptyByteArray,
+        overwrite = true)
+    }
+    path
+  }
+
   /** Two-commit artifacts gate on "head generation == 2", not bare
     * manifest existence: the first commit already publishes a manifest,
     * so a crash between the two would otherwise freeze a half-built
@@ -504,9 +525,7 @@ object TradeLogQueries {
   def ensurePurged(s: SparkSession, dir: String): String = {
     val src = ensureLog(s, dir)
     val path = s"$src-purged"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_PURGED")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_PURGED") {
       s.read.format(FormatName).load(src)
         .repartitionByRange(8, col("ts"))
         .sortWithinPartitions("ts")
@@ -515,9 +534,7 @@ object TradeLogQueries {
         .save(path)
       TradeLogFormat.purgeBefore(path,
         java.sql.Timestamp.valueOf(PurgeCutoff).getTime * 1000L)
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_asof (TIME TRAVEL) ------------------------------------
@@ -699,9 +716,7 @@ object TradeLogQueries {
     * success-marker rule). */
   def ensureDeleteSqlLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-delsql"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_DML_DONE") {
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -715,9 +730,7 @@ object TradeLogQueries {
       cs.sql(s"DELETE FROM graft_tlog.`$path` " +
         s"WHERE ts < TIMESTAMP '$DelCutoff'")
       cs.sql(s"DELETE FROM graft_tlog.`$path` WHERE user_id = $DelUser")
-      fs.create(done, true).close()
     }
-    path
   }
 
   private val tradelogDeleteSqlOracle: String = digestOracleWhere(
@@ -763,11 +776,9 @@ object TradeLogQueries {
 
   def ensureUpdateSqlLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-updsql"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      // a crash between save and marker rebuilds from the overwrite
-      // (truncate-first), so a half-applied UPDATE can never freeze in
+    buildOnce(path, "_DML_DONE") {
+      // a crash between save and marker rebuilds from a wiped log, so a
+      // half-applied UPDATE can never freeze in
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -780,9 +791,7 @@ object TradeLogQueries {
         classOf[TradeLogCatalog].getName)
       cs.sql(s"UPDATE graft_tlog.`$path` SET value = value * 2 " +
         s"WHERE user_id IN ($UpdUsers)")
-      fs.create(done, true).close()
     }
-    path
   }
 
   private val tradelogUpdateSqlOracle: String = digestOracleExpr(
@@ -808,9 +817,7 @@ object TradeLogQueries {
 
   def ensureMergeSqlLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-mergesql"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_DML_DONE") {
       import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -844,9 +851,7 @@ object TradeLogQueries {
            |  (event_id, ts, user_id, event_type, value, props)
            |  VALUES (c.event_id, c.ts, c.user_id, c.event_type, c.value,
            |          c.props)""".stripMargin)
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_delete_mor (MERGE-ON-READ DELETE) -----------------------
@@ -876,9 +881,7 @@ object TradeLogQueries {
   private def buildMorDeleted(s: SparkSession, dir: String,
       suffix: String): String = {
     val path = s"${logPath(s, dir)}$suffix"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_DML_DONE") {
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -893,9 +896,7 @@ object TradeLogQueries {
       cs.sql(s"DELETE FROM graft_tlog.`$path` WHERE user_id = $MorUser")
       cs.sql(s"DELETE FROM graft_tlog.`$path` " +
         s"WHERE event_id % 10 = $MorMod")
-      fs.create(done, true).close()
     }
-    path
   }
 
   private val tradelogDeleteMorOracle: String = digestOracleWhere(
@@ -918,10 +919,7 @@ object TradeLogQueries {
 
   def ensureUpdateMorLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-updmor"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -935,9 +933,7 @@ object TradeLogQueries {
         classOf[TradeLogCatalog].getName)
       cs.sql(s"UPDATE graft_tlog.`$path` SET value = value * 2 " +
         s"WHERE user_id IN ($UpdUsers)")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_mor_streamed (43rd bridge: the STREAMED masked read) ----
@@ -978,13 +974,9 @@ object TradeLogQueries {
 
   def ensureMorCompacted(s: SparkSession, dir: String): String = {
     val path = buildMorDeleted(s, dir, "-morc")
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_COMPACTED")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_COMPACTED", fresh = false) {
       TradeLogMaintenance.compactDeletes(s, path, blockRows = 256)
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_merge_sync (MERGE … NOT MATCHED BY SOURCE) --------------
@@ -1005,9 +997,7 @@ object TradeLogQueries {
 
   def ensureMergeSyncLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-mergesync"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_DML_DONE") {
       import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -1044,9 +1034,7 @@ object TradeLogQueries {
            |WHEN NOT MATCHED BY SOURCE AND t.user_id % 2 = 0 THEN DELETE
            |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET value = -1
            |""".stripMargin)
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_merge_mor (MERGE-ON-READ MERGE INTO) ---------------------
@@ -1067,10 +1055,7 @@ object TradeLogQueries {
 
   def ensureMergeMorLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-mergemor"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -1108,9 +1093,7 @@ object TradeLogQueries {
            |WHEN NOT MATCHED BY SOURCE AND t.user_id % 2 = 0 THEN DELETE
            |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET value = -1
            |""".stripMargin)
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_merge_evolve (MERGE × SCHEMA EVOLUTION) ------------------
@@ -1145,10 +1128,7 @@ object TradeLogQueries {
       mor: Boolean): String = {
     val lane = if (mor) "mor" else "cow"
     val path = s"${logPath(s, dir)}-mergeevolve-$lane"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       import org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -1193,9 +1173,7 @@ object TradeLogQueries {
            |WHEN NOT MATCHED BY SOURCE AND t.user_id % 2 = 0 THEN DELETE
            |WHEN NOT MATCHED BY SOURCE THEN UPDATE SET value = -1
            |""".stripMargin)
-      fs.create(done, true).close()
     }
-    path
   }
 
   /** [[tradelogMergeSyncOracle]]'s fold extended with the evolved
@@ -1280,10 +1258,7 @@ object TradeLogQueries {
 
   def ensureRestoredLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-restore"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_RESTORED")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_RESTORED") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1295,9 +1270,7 @@ object TradeLogQueries {
         .option("blockRows", 256).save(path)
       val gen = TradeLogMaintenance.restoreTo(path, 1L)
       require(gen == 3L, s"restore artifact expected generation 3, got $gen")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_optimize_z (OPTIMIZE with Z-ORDER clustering) -----------
@@ -1340,10 +1313,7 @@ object TradeLogQueries {
   def ensureZordered(s: SparkSession, dir: String): String = {
     val src = ensureLog(s, dir)
     val path = s"$src-zorder"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_OPTIMIZED")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_OPTIMIZED") {
       // gen 1: the table as it lived before maintenance (ts-sorted copy);
       // gen 2: OPTIMIZE ZORDER as a commit on the SAME path — history
       // spans the rewrite instead of being orphaned at an old path
@@ -1354,9 +1324,7 @@ object TradeLogQueries {
       val gen = TradeLogMaintenance.optimize(s, path, blockRows = 256)(
         zorderCluster)
       require(gen == 2L, s"optimize artifact expected generation 2, got $gen")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_optimize_mor (OPTIMIZE × DELETE VECTORS) -----------------
@@ -1373,15 +1341,11 @@ object TradeLogQueries {
 
   def ensureMorOptimized(s: SparkSession, dir: String): String = {
     val path = buildMorDeleted(s, dir, "-morz")
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_OPTIMIZED")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_OPTIMIZED", fresh = false) {
       TradeLogMaintenance.optimize(s, path, blockRows = 256)(zorderCluster)
       require(TradeLogFormat.readManifestRefs(path).totalDeletes == 0L,
         "OPTIMIZE over a MoR log must fold every delete vector")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_optimize_scoped (PER-PARTITION OPTIMIZE) -----------------
@@ -1404,9 +1368,7 @@ object TradeLogQueries {
 
   def ensureMorScoped(s: SparkSession, dir: String): String = {
     val path = buildMorDeleted(s, dir, "-mors")
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_OPTIMIZED")
-    if (!fs.exists(done)) {
+    buildOnce(path, "_OPTIMIZED", fresh = false) {
       val before = TradeLogFormat.readManifestRefs(path).totalDeletes
       TradeLogMaintenance.optimizeRange(s, path,
         usOf("2024-01-08 00:00:00"), usOf("2024-01-18 00:00:00"),
@@ -1414,9 +1376,7 @@ object TradeLogQueries {
       val after = TradeLogFormat.readManifestRefs(path).totalDeletes
       require(after < before && after > 0L,
         s"scoped optimize must fold in-scope vectors only ($before -> $after)")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_cdf (CHANGE DATA FEED WITH DELETE ROWS) ------------------
@@ -1458,10 +1418,7 @@ object TradeLogQueries {
 
   def ensureCdfLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-cdf"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1478,9 +1435,7 @@ object TradeLogQueries {
       cs.conf.set("spark.sql.catalog.graft_tlog",
         classOf[TradeLogCatalog].getName)
       cs.sql(s"DELETE FROM graft_tlog.`$path` WHERE user_id = $MorUser")
-      fs.create(done, true).close()
     }
-    path
   }
 
   /** The two CDF branches, declaratively: inserts = post-sync additions
@@ -1525,10 +1480,7 @@ object TradeLogQueries {
 
   def ensureCdfCompactedLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-cdfc"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1556,9 +1508,7 @@ object TradeLogQueries {
         case Some(v) => hconf.set(graceKey, v)
         case None => hconf.unset(graceKey)
       }
-      fs.create(done, true).close()
     }
-    path
   }
 
   private val tradelogCdfOracle: String = {
@@ -1611,10 +1561,7 @@ object TradeLogQueries {
 
   def ensureBranchLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-branch"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_WAP_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_WAP_DONE") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1630,9 +1577,7 @@ object TradeLogQueries {
         "staging to a branch must leave main untouched")
       val gen = TradeLogRefs.publish(path, "audit")
       require(gen == 2L, s"WAP artifact expected generation 2, got $gen")
-      fs.create(done, true).close()
     }
-    path
   }
 
   // ---- q_tradelog_evolve_sql (CATALOG-DOOR SCHEMA EVOLUTION) --------------
@@ -1669,10 +1614,7 @@ object TradeLogQueries {
 
   def ensureEvolveSqlLog(s: SparkSession, dir: String): String = {
     val path = s"${logPath(s, dir)}-evolvesql"
-    val (fs, root) = TradeLogFormat.fs(path)
-    val done = new org.apache.hadoop.fs.Path(root, "_DML_DONE")
-    if (!fs.exists(done)) {
-      if (fs.exists(root)) fs.delete(root, true)
+    buildOnce(path, "_DML_DONE") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -1695,9 +1637,7 @@ object TradeLogQueries {
         .createOrReplaceTempView("graft_tlog_evolve_src")
       cs.sql(s"INSERT INTO graft_tlog.`$path` " +
         "SELECT * FROM graft_tlog_evolve_src")
-      fs.create(done, true).close()
     }
-    path
   }
 
   /** q_cdc_apply's snapshot⊕changes fold (Stats.cdcApplyOracle) reduced

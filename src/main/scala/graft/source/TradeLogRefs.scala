@@ -92,11 +92,11 @@ object TradeLogRefs {
     val ref = writeNewRef(dir, RefInfo(name, "tag", g, 0L))
     // …and must STILL exist after the ref is visible: expireSnapshots
     // reads the anchor set before its deletes, so a tag racing an
-    // in-flight expiry can slip between that read and the unlink and
-    // anchor a victimized generation (r19 advice, low). Re-validate
-    // after publishing — the expiry re-reads anchors per unlink, so once
-    // this check passes the tag is in every later read's anchor set —
-    // and drop the dangling ref loudly if the snapshot is gone.
+    // in-flight expiry can anchor a victimized generation (r19 advice).
+    // Re-validate after publishing — the expiry parks a victim before
+    // re-reading anchors and restores it if this ref appeared, so once
+    // this check passes the snapshot stays — and drop the dangling ref
+    // loudly if the snapshot is gone.
     try TradeLogFormat.readManifestInfoAt(dir, g, headerOnly = true)
     catch {
       case e: Exception =>
@@ -115,7 +115,7 @@ object TradeLogRefs {
     ref
   }
 
-  /** Publish the ref file atomically; without `overwrite` the rename
+  /** Publish the ref file atomically; without `overwrite` the publish
     * fails (false) when the ref exists. A branch commit overwrites its
     * ref only after winning the generation's claim
     * ([[TradeLogFormat.commitManifest]]). */
@@ -133,11 +133,12 @@ object TradeLogRefs {
     val (fs, root) = TradeLogFormat.fs(dir)
     val p = refPath(root, name)
     require(fs.exists(p), s"graft-tradelog $dir has no ref '$name'")
-    val in = fs.open(p)
-    val head =
+    val head = TradeLogFormat.rereadTorn {
+      val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
         .find(_.nonEmpty).getOrElse("")
       finally in.close()
+    }
     require(head.startsWith(RefHeader), s"not a graft-tradelog ref: $name")
     def tok(k: String): String =
       s"$k=(\\S+)".r.findFirstMatchIn(head).map(_.group(1)).getOrElse(
@@ -149,8 +150,9 @@ object TradeLogRefs {
     val (fs, root) = TradeLogFormat.fs(dir)
     val d = new Path(root, RefsDirName)
     if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.filter(_.isFile)
-      .map(st => readRef(dir, st.getPath.getName))
+    else fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath.getName)
+      // a ref name never starts with a dot; an in-flight publish's temp does
+      .filterNot(_.startsWith(".")).map(readRef(dir, _))
   }
 
   /** Drop a ref; a branch's own snapshot files go with it (their data
@@ -231,11 +233,13 @@ object TradeLogRefs {
     }.toSet
 
   /** Shard files referenced by any ref's head snapshot — the snapshot
-    * sweep's protection set. */
+    * sweep's protection set. A tag whose snapshot is already gone protects
+    * nothing: its racing [[createTag]] drops it. */
   private[source] def referencedShards(dir: String): Set[String] =
     listRefs(dir).flatMap(r =>
-      headInfoOf(dir, r, headerOnly = false, refsOnly = true)
-        .shards.map(_.file)).toSet
+      try headInfoOf(dir, r, headerOnly = false, refsOnly = true)
+        .shards.map(_.file)
+      catch { case _: java.io.FileNotFoundException => Nil }).toSet
 
   /** Main generations anchored by a ref (tag targets, branch fork
     * points) — excluded from snapshot expiry. */

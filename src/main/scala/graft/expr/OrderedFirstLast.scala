@@ -379,11 +379,17 @@ object GraftFunctions {
       })
   )
 
+  /** Register the functions; install [[graft.stream.LocalCheckpointFileManager]]
+    * unless the session names a checkpoint manager (an explicit setting wins).
+    * A query copies the conf when it starts: call before `start()`. */
   def register(spark: SparkSession): Unit = {
     val reg: FunctionRegistry = spark.sessionState.functionRegistry
     functions.foreach { case (id, inf, builder) =>
       reg.registerFunction(id, inf, builder)
     }
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    if (spark.conf.getOption(key).isEmpty)
+      spark.conf.set(key, classOf[graft.stream.LocalCheckpointFileManager].getName)
   }
 }
 

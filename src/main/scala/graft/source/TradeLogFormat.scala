@@ -877,15 +877,10 @@ object TradeLogFormat {
   /** Write `body` to a temp file and atomically publish it as `target`.
     * With `overwrite = false` the publish is the commit CLAIM: it fails
     * (returns false) when the target already exists — the lost race.
-    * A checksummed local log publishes through java.nio, because Hadoop's
-    * local FileSystem forks a `chmod`/`stat` child per permission set and
-    * link probe when libhadoop is absent: the temp gets a Hadoop-format
-    * `.crc` sidecar ([[crcSidecar]]), a claim is `link(2)` — which fails
-    * atomically on a taken name — and moves the sidecar in only after the
-    * link wins, and an overwrite renames the body, then its sidecar.
-    * Every other filesystem writes with `create` and publishes with
-    * `FileContext.rename`. Reads stay on Hadoop, which verifies the
-    * sidecar. No failure path leaves the temp (or its sidecar) behind. */
+    * A checksummed local log publishes fork-free through
+    * [[graft.core.LocalPublish]]; every other filesystem writes with
+    * `create` and publishes with `FileContext.rename`. Reads stay on Hadoop,
+    * which verifies the `.crc` sidecar. No failure path leaves a temp. */
   private[source] def publishAtomic(filesystem: FileSystem, conf: Configuration,
       tmpDir: Path, target0: Path, body: Array[Byte],
       overwrite: Boolean): Boolean = {
@@ -895,25 +890,7 @@ object TradeLogFormat {
         java.util.UUID.randomUUID().toString.take(8)))
     filesystem match {
       case local: LocalFileSystem =>
-        import java.nio.file.{FileAlreadyExistsException, Files}
-        import java.nio.file.StandardCopyOption.ATOMIC_MOVE
-        def nio(p: Path) = local.pathToFile(p).toPath
-        val (tmpBody, tmpCrc) = (nio(tmp), nio(local.getChecksumFile(tmp)))
-        val (dstBody, dstCrc) =
-          (nio(target), nio(local.getChecksumFile(target)))
-        try {
-          Files.write(tmpBody, body)
-          Files.write(tmpCrc, crcSidecar(body, local.getBytesPerSum))
-          val won =
-            if (overwrite) { Files.move(tmpBody, dstBody, ATOMIC_MOVE); true }
-            else try { Files.createLink(dstBody, tmpBody); true }
-            catch { case _: FileAlreadyExistsException => false }
-          if (won) Files.move(tmpCrc, dstCrc, ATOMIC_MOVE)
-          won
-        } finally {
-          Files.deleteIfExists(tmpBody)
-          Files.deleteIfExists(tmpCrc)
-        }
+        graft.core.LocalPublish.publish(local, tmp, target, body, overwrite)
       case _ =>
         import org.apache.hadoop.fs.{FileContext, Options}
         val fc = FileContext.getFileContext(target.toUri, conf)
@@ -945,23 +922,6 @@ object TradeLogFormat {
         Thread.sleep(5L)
         rereadTorn(read, tries - 1)
     }
-
-  /** The `.crc` sidecar `ChecksumFileSystem` writes beside `body`: magic
-    * `crc\0`, the bytes-per-checksum int, then one big-endian CRC32 per
-    * chunk. */
-  private[source] def crcSidecar(body: Array[Byte],
-      bytesPerSum: Int): Array[Byte] = {
-    val chunks = (body.length + bytesPerSum - 1) / bytesPerSum
-    val buf = java.nio.ByteBuffer.allocate(8 + 4 * chunks)
-      .put(Array[Byte]('c', 'r', 'c', 0)).putInt(bytesPerSum)
-    val crc = new java.util.zip.CRC32()
-    for (off <- 0 until body.length by bytesPerSum) {
-      crc.reset()
-      crc.update(body, off, math.min(bytesPerSum, body.length - off))
-      buf.putInt(crc.getValue.toInt)
-    }
-    buf.array()
-  }
 
   /** Does the claim file exist and hold exactly `body`? False on any
     * read failure — the caller treats that as a lost race. */

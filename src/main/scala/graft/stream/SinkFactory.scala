@@ -11,9 +11,10 @@ object SinkFactory {
 
   /** Per-query checkpoint isolation (reference main.py:201-206): each query
     * gets its own subdirectory so concurrent queries against one cluster
-    * never collide. */
+    * never collide. A Hadoop path join keeps a URI root's authority. */
   def checkpointDir(root: String, queryName: String): String =
-    new java.io.File(root, queryName).getPath
+    new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(root),
+      queryName).toString
 
   /** The exact writer option map the reference sets (main.py:208-217),
     * exposed as data for the same broker-less golden test as

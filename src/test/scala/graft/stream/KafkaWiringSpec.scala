@@ -44,6 +44,20 @@ class KafkaWiringSpec extends SparkTestBase {
       SinkFactory.kafkaSinkOptions("b:1", "/c", "q2").last._2)
   }
 
+  test("sink checkpoint: a URI root keeps its scheme and authority") {
+    Seq(
+      "hdfs://nn:8020/ckpt" -> "hdfs://nn:8020/ckpt/kafka_sink",
+      "s3a://bucket/ckpt" -> "s3a://bucket/ckpt/kafka_sink",
+      "file:///tmp/ck" -> "file:/tmp/ck/kafka_sink",
+      "/ckpt/" -> "/ckpt/kafka_sink"
+    ).foreach { case (root, joined) =>
+      val dir = SinkFactory.checkpointDir(root, "kafka_sink")
+      assert(dir == joined, root)
+      assert(new org.apache.hadoop.fs.Path(dir).toUri.getAuthority ==
+        java.net.URI.create(root).getAuthority, root)
+    }
+  }
+
   test("sink projection: exactly (topic, key, value) with key/value cast to STRING") {
     import spark.implicits._
     val out = SinkFactory.kafkaProjection(

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{Artifacts, QueryDef, Tables}
 import graft.core.QueryDef.OrderedOut
 import graft.ohlc.OhlcPipeline
 
@@ -192,27 +192,13 @@ object Catalog {
     * update-mode bridges (one layout, one claim; 4 files until r20 —
     * one fewer micro-batch keeps every cross-batch claim: windows still
     * span the round-robin split, revisions still happen, and the specs
-    * pin both). Staging root is
-    * conf-routed (spark.graft.stream.stageDir) so a cluster run stages
-    * on shared storage its executors can read; the path is fingerprinted
-    * by the source file's (length, mtime) — same rule as every build-once
-    * artifact — so warm-up + timed bench runs re-use the layout instead
-    * of re-writing the whole events table per invocation, and a testdata
-    * regen lands in a FRESH path by construction. */
+    * pin both). Build-once: [[Tables.stageOnce]]. */
   private def stagedEvents3(spark: SparkSession, d: String)
       : (String, org.apache.spark.sql.types.StructType) = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val st = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    val tmp = Tables.stageDir(spark,
-      s"ohlc_mb3_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        s"_${st.getLen}_${st.getModificationTime}")
     val ev = Tables.events(spark, d)
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    if (!done.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(done))
-      ev.repartition(3).write.mode("overwrite").parquet(tmp)
-    (tmp, ev.schema)
+    (Tables.stageOnce(spark, "ohlc_mb3", d, "events") { p =>
+      ev.repartition(3).write.mode("overwrite").parquet(p)
+    }, ev.schema)
   }
 
   /** UPDATE-MODE bridge (21st — closes the last spec-only streaming row,
@@ -448,25 +434,13 @@ object Catalog {
   /** The event-TTL slice layout: three single-file slices whose order IS
     * the micro-batch order (maxFilesPerTrigger=1; mtimes forced to a
     * strict ladder so the file source's mtime ordering is never a race).
-    * Build-once, fingerprinted by the source file's (length, mtime) —
-    * the [[stagedEvents3]] rule. Event times are synthetic constants per
-    * slice (T0, T0+1h, sentinel at +2h, against a 60 s ttl): the TTL
-    * contract only reads event-time DIFFERENCES, so pinning them to a
-    * grid makes every expiry decision exact while n/sum stay the real
-    * table's. */
+    * Build-once: [[Tables.stageOnce]] (v3 = 3 slices, v4 = published by
+    * rename). Event times are synthetic constants per slice (T0, T0+1h,
+    * sentinel at +2h, against a 60 s ttl): the TTL contract only reads
+    * event-time DIFFERENCES, so pinning them to a grid makes every expiry
+    * decision exact while n/sum stay the real table's. */
   private def stagedTtlEvent(spark: SparkSession, d: String)
       : (String, org.apache.spark.sql.types.StructType) = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val st = src.getFileSystem(hconf).getFileStatus(src)
-    // layout-versioned name (v3 = 3-slice): a layout change must land in
-    // a FRESH path — the fingerprint alone only tracks the source table
-    val tmp = Tables.stageDir(spark,
-      s"ttl_ev3_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        s"_${st.getLen}_${st.getModificationTime}")
-    val root = new org.apache.hadoop.fs.Path(tmp)
-    val fs = root.getFileSystem(hconf)
-    val done = new org.apache.hadoop.fs.Path(root, "_STAGED")
     val t0Ms = 1700000000000L
     val gapMs = 3600000L
     def withEt(df: DataFrame, ms: Long): DataFrame =
@@ -474,7 +448,9 @@ object Catalog {
         col("event_id").cast("long").as("event_id"),
         col("value").cast("double").as("value"),
         timestamp_millis(lit(ms)).as("et"))
-    if (!fs.exists(done)) {
+    val tmp = Tables.stageOnce(spark, "ttl_ev4", d, "events") { staging =>
+      val root = new org.apache.hadoop.fs.Path(staging)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val ev = Tables.events(spark, d)
         .select(col("user_id"), col("event_id"), col("value"))
       val sent = (u: Long) => spark.range(1).select(
@@ -491,7 +467,6 @@ object Catalog {
         withEt(ev.filter(pmod(col("event_id"), lit(5)) < 3), t0Ms),
         withEt(ev.filter(pmod(col("event_id"), lit(5)) >= 3), t0Ms + gapMs),
         withEt(sent(-1L), t0Ms + 2 * gapMs))
-      fs.delete(root, true)
       slices.zipWithIndex.foreach { case (df, i) =>
         val stage = new org.apache.hadoop.fs.Path(root, s"_build_$i")
         df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
@@ -502,7 +477,6 @@ object Catalog {
         fs.delete(stage, true)
         fs.setTimes(dst, 1000L * (i + 1), -1) // strict mtime ladder
       }
-      fs.create(done, true).close()
     }
     (tmp, withEt(spark.range(0).select(lit(0L).as("user_id"),
       lit(0L).as("event_id"), lit(0.0).as("value")), t0Ms).schema)
@@ -648,38 +622,25 @@ object Catalog {
 
   /** [[qOhlcRollup]] served from a PERSISTED 1-minute candle tier — the
     * build-once artifact lifecycle (the q_sim_ivfpq_persisted /
-    * q_dedup_cc_persisted pattern) applied to the reference's own domain:
-    * a production OHLC archive materializes the 1-minute tier ONCE and
-    * every coarser resolution, chart query, and backtest reads candles,
-    * never raw trades. The tier path is fingerprinted by the events
-    * file's (length, mtime) + a code-version tag, so a regenerated corpus
-    * or a semantics change is a FRESH path by construction; _SUCCESS is
-    * written last so partial builds rebuild. Serve-side plan scans ONLY
-    * the candle artifact (CatalogSpec pins build-once + no events scan on
-    * the serve plan); the oracle is the direct-from-raw 5-minute SQL, so
-    * the hash proves persist → read-back → merge ≡ direct aggregation. */
+    * q_dedup_cc_persisted pattern; rule in [[graft.core.Artifacts]])
+    * applied to the reference's own domain: a production OHLC archive
+    * materializes the 1-minute tier ONCE and every coarser resolution,
+    * chart query, and backtest reads candles, never raw trades. The tier
+    * path is the events file's fingerprint + a code-version tag. Serve-side
+    * plan scans ONLY the candle artifact (CatalogSpec pins build-once + no
+    * events scan on the serve plan); the oracle is the direct-from-raw
+    * 5-minute SQL, so the hash proves persist → read-back → merge ≡ direct
+    * aggregation. */
   def qOhlcTiered(spark: SparkSession, dir: String): DataFrame = {
     // LOAD-BEARING register: the serve path reads the persisted tier and
     // never calls OhlcPipeline.candles (which registers as a side
     // effect), yet rollupCandles resolves first_by_ordered by name
     graft.expr.GraftFunctions.register(spark)
-    val path = candleTierPath(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")))
-      m1Candles(spark, dir).write.mode("overwrite").parquet(path)
+    val path = Artifacts.publishOnce(spark, s"${Tables.artifactRoot(spark)}" +
+        s"/graft_candles/v1_${Artifacts.fingerprint(spark, dir, "events")}") { p =>
+      m1Candles(spark, dir).write.mode("overwrite").parquet(p)
+    }
     rollupCandles(spark.read.parquet(path)).orderedBy("ws", "base")
-  }
-
-  /** Candle-tier artifact location, fingerprinted like the CC label and
-    * IVFPQ index artifacts (llm/Dedup.scala labelArtifactPath). */
-  private def candleTierPath(spark: SparkSession, dir: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val st = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    val dsafe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${Tables.artifactRoot(spark)}/graft_candles/" +
-      s"v1_${dsafe}_${st.getLen}_${st.getModificationTime}"
   }
 
   private val ohlcRollupOracle =

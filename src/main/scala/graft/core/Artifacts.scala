@@ -3,23 +3,43 @@ package graft.core
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Single-winner publication for build-once artifacts (merge tables,
-  * persisted indexes, label stores): stage the whole build under a hidden
-  * sibling temp dir, then atomically rename it into place — the TradeLog
-  * manifest commit pattern lifted to directory artifacts. Readers never
-  * observe a partial artifact (the directory appears in one rename), and
-  * when two cold-path sessions race, `Rename.NONE` lets exactly one
-  * publish; the loser discards its staging dir and reads the winner's —
-  * a plain `_SUCCESS`-guarded in-place overwrite would instead let one
-  * racer read the other's half-replaced files. */
+/** The build-once rule, for every artifact derived from the testdata (merge
+  * tables, persisted indexes, label stores, the candle tier) and every
+  * staged streaming layout ([[Tables.stageOnce]]):
+  *
+  *   - NAME: the artifact path carries its source's [[fingerprint]] (plus a
+  *     code-version tag the caller bumps when the build's semantics or shape
+  *     change), so a regenerated corpus or a new layout is a fresh path by
+  *     construction and a published artifact is never stale;
+  *   - PUBLISH: [[publishOnce]] builds the whole artifact under a hidden
+  *     sibling staging dir and renames it into place — the TradeLog manifest
+  *     commit pattern lifted to directories. Readers (a streaming file
+  *     source replaying a micro-batch included) never observe a partial or
+  *     changing artifact; when two cold-path sessions race, `Rename.NONE`
+  *     lets exactly one publish and the loser reads the winner's. A
+  *     `_SUCCESS`-guarded in-place overwrite would instead let one racer
+  *     read the other's half-replaced files. */
 object Artifacts {
 
   private def marked(fs: FileSystem, p: Path): Boolean =
     fs.exists(new Path(p, "_SUCCESS"))
 
+  /** `<dir>_<len>_<mtime>[_<len>_<mtime>…]`: the dataset dir, made
+    * path-safe, then each source table's parquet (length, mtime). */
+  def fingerprint(s: SparkSession, dir: String, tables: String*): String = {
+    val conf = s.sparkContext.hadoopConfiguration
+    (dir.replaceAll("[^A-Za-z0-9.]", "_") +: tables.map { t =>
+      val src = new Path(s"$dir/$t.parquet")
+      val st = src.getFileSystem(conf).getFileStatus(src)
+      s"${st.getLen}_${st.getModificationTime}"
+    }).mkString("_")
+  }
+
   /** Build `path` if it is not already published (marked by `_SUCCESS`).
     * `build` receives a staging path and must leave a COMPLETE artifact
-    * there, `_SUCCESS` included (Spark's parquet committer does).
+    * there; the `_SUCCESS` marker is written for it when the build leaves
+    * none (a hive-partitioned write, a multi-directory artifact, a layout
+    * of renamed files).
     *
     * Crash leftovers vs concurrent winners: an unmarked directory at
     * `path` is normally a pre-atomic-writer crash leftover (staged builds
@@ -37,8 +57,8 @@ object Artifacts {
     * move→restore window can transiently fail (open handles are
     * unaffected on posix filesystems), after which the identical artifact
     * is back at the same path — a transient read retry, never a
-    * half-read or lost artifact. */
-  def publishOnce(s: SparkSession, path: String)(build: String => Unit): Unit = {
+    * half-read or lost artifact. Returns `path`. */
+  def publishOnce(s: SparkSession, path: String)(build: String => Unit): String = {
     val conf = s.sparkContext.hadoopConfiguration
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -67,11 +87,11 @@ object Artifacts {
             // publishes first, both are complete builds of the same
             // deterministic artifact, so the tombstone copy is redundant.
             if (!renameNoReplace(tomb, p)) fs.delete(tomb, true)
-            if (marked(fs, p)) return
+            if (marked(fs, p)) return path
           } else fs.delete(tomb, true) // crash debris, quiesced off-path
         }
       }
-      if (stageAndPublish(s, path)(build)) return
+      if (stageAndPublish(s, path)(build)) return path
       // rename lost: somebody else owns the destination — if it is a
       // marked artifact they won fairly; if it is unmarked debris (their
       // crash between our move-aside and rename), loop and clear it again
@@ -80,6 +100,7 @@ object Artifacts {
       throw new IllegalStateException(
         s"publishOnce($path): destination still unmarked after $attempts " +
           "attempts — a writer is crash-looping or the path is not writable")
+    path
   }
 
   /** The stage→rename step, exists-check-free (so a spec can drive the
@@ -98,6 +119,7 @@ object Artifacts {
       s".${p.getName}.staging-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
       build(fs.makeQualified(tmp).toString)
+      if (!marked(fs, tmp)) fs.create(new Path(tmp, "_SUCCESS"), true).close()
       fs.mkdirs(p.getParent)
       val ctx = FileContext.getFileContext(fs.makeQualified(p).toUri, conf)
       try {

@@ -43,13 +43,19 @@ object LocalPublish {
       try { if (inChunk > 0) endChunk(); body.close() } finally sums.close()
   }
 
-  /** Move `tmp` and its sidecar to `target`: an overwrite renames the body,
-    * then the sidecar; a claim is `link(2)`, false on a taken name, and moves
-    * the sidecar only after the link wins. Neither temp file survives. */
+  /** Move `tmp` and its sidecar to `target`: an overwrite deletes the
+    * target's sidecar, renames the body, then the sidecar, so a crash
+    * between the two renames leaves the new body readable unverified, never
+    * paired with the old sidecar; a claim is `link(2)`, false on a taken
+    * name, and moves the sidecar only after the link wins. Neither temp
+    * file survives. */
   def move(local: LocalFileSystem, tmp: Path, target: Path, overwrite: Boolean): Boolean =
     try {
       val won =
-        if (overwrite) { Files.move(nio(local, tmp), nio(local, target), ATOMIC_MOVE); true }
+        if (overwrite) {
+          Files.deleteIfExists(crc(local, target))
+          Files.move(nio(local, tmp), nio(local, target), ATOMIC_MOVE); true
+        }
         else try { Files.createLink(nio(local, target), nio(local, tmp)); true }
         catch { case _: FileAlreadyExistsException => false }
       if (won) Files.move(crc(local, tmp), crc(local, target), ATOMIC_MOVE)

@@ -92,32 +92,22 @@ object Tables {
     s"$root/$sub"
   }
 
-  /** BUILD-ONCE staged input layout (the q_ohlc_multibatch rule applied
-    * catalog-wide, r20 optimization round): a streaming-fold bridge's
-    * staged source files are a pure function of the source table, so the
-    * layout is fingerprinted by the source file's (length, mtime) and
-    * re-used across invocations — before this, seven bridges re-wrote an
-    * identical corpus-derived layout inside EVERY timed run (guide §6:
-    * don't pay an output write the computation doesn't need; measured in
-    * OPTIMIZATION_r20.md). `write` runs only when the layout's own
-    * parquet `_SUCCESS` marker is absent; a regenerated corpus lands in
-    * a fresh path by construction (fingerprint in the name), and a
-    * layout-shape change must bump `tag` (the stagedEvents4 "v3" rule).
-    * The staged bytes are deterministic (keyless repartition sorts
-    * before assigning rows — SPARK-23207 — and the source scan is
-    * deterministic), so re-use is bit-identical to re-writing. */
+  /** BUILD-ONCE staged input layout for a streaming bridge, under
+    * [[stageDir]]: `<tag>_<fingerprint of srcTable>`, built by `write` and
+    * published by [[Artifacts.publishOnce]] — the one build-once rule
+    * (name by source fingerprint, publish by atomic rename; see
+    * [[Artifacts]]). A staged layout is a pure function of its source
+    * table, so it is re-used across invocations instead of re-writing an
+    * identical corpus-derived layout inside every timed run (measured in
+    * OPTIMIZATION_r20.md); a layout-shape change must bump `tag`. The
+    * staged bytes are deterministic (keyless repartition sorts before
+    * assigning rows — SPARK-23207 — and the source scan is deterministic),
+    * so re-use is bit-identical to re-writing, and the file source never
+    * sees a layout change under a running query. */
   def stageOnce(s: SparkSession, tag: String, d: String, srcTable: String)(
-      write: String => Unit): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/$srcTable.parquet")
-    val hconf = s.sparkContext.hadoopConfiguration
-    val st = src.getFileSystem(hconf).getFileStatus(src)
-    val tmp = stageDir(s,
-      s"${tag}_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        s"_${st.getLen}_${st.getModificationTime}")
-    val done = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    if (!done.getFileSystem(hconf).exists(done)) write(tmp)
-    tmp
-  }
+      write: String => Unit): String =
+    Artifacts.publishOnce(s,
+      stageDir(s, s"${tag}_${Artifacts.fingerprint(s, d, srcTable)}"))(write)
 
   /** Root for BUILD-ONCE artifacts (CC labels, the IVFPQ serving index,
     * the 1m candle tier): same cluster rule as [[stageDir]] — the

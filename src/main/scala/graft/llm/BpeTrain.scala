@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{QueryDef, Tables}
+import graft.core.{Artifacts, QueryDef, Tables}
 import graft.core.QueryDef.OrderedOut
 
 /** BPE merge-table training (Sennrich et al. 2016) — the tokenizer-
@@ -179,7 +179,7 @@ object BpeTrain {
     bpeApplyFrom(Tables.documents(s, d), nMerges)
 
   /** [[bpeApply]] served from a PERSISTED merge table — the build-once
-    * artifact lifecycle (candle tier / CC labels / IVFPQ index) applied
+    * artifact lifecycle ([[Artifacts]]) applied
     * to the tokenizer: production trains ONCE and encodes forever, so
     * the inline re-train q_bpe_apply pays per run (~2.2 s of iterative
     * training jobs) is purely a self-containment artifact. The merge
@@ -188,29 +188,14 @@ object BpeTrain {
     * the encode chain. Identical oracle — persisted ≡ inline is itself
     * the claim. */
   def bpeServed(s: SparkSession, d: String): DataFrame = {
-    val path = mergesPath(s, d)
-    // staged build + atomic rename: two sessions racing on a cold
-    // artifact path each train into their own staging dir and exactly
-    // one publishes — never an in-place overwrite another reader could
-    // catch half-replaced (Artifacts.publishOnce)
-    graft.core.Artifacts.publishOnce(s, path) { staging =>
+    val path = Artifacts.publishOnce(s, s"${Tables.artifactRoot(s)}/graft_bpe_merges/" +
+        s"v1_${nMerges}_${Artifacts.fingerprint(s, d, "documents")}") { staging =>
       trainFrom(Tables.documents(s, d), nMerges)
         .write.mode("overwrite").parquet(staging)
     }
     val mrow = s.read.parquet(path)
       .agg(array_sort(collect_list(struct(col("rnk"), col("pair")))).as("ms"))
     encodeWith(Tables.documents(s, d), mrow)
-  }
-
-  /** Merge-table artifact location, fingerprinted like the candle tier
-    * (SparkEntry.candleTierPath). */
-  private def mergesPath(s: SparkSession, d: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val st = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    val dsafe = d.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${Tables.artifactRoot(s)}/graft_bpe_merges/" +
-      s"v1_${dsafe}_${nMerges}_${st.getLen}_${st.getModificationTime}"
   }
 
   private[graft] def bpeApplyFrom(docs: DataFrame, merges: Int): DataFrame = {

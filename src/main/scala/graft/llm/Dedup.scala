@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{OracleSql, QueryDef, Tables}
+import graft.core.{Artifacts, OracleSql, QueryDef, Tables}
 import graft.core.QueryDef.OrderedOut
 
 /** Deduplication operators for an LLM training-data pipeline.
@@ -305,12 +305,9 @@ object Dedup {
     * labels, so the serve plan never re-shingles the corpus — candidate
     * discovery broadcasts the increment's bands against the persisted
     * index, and the only corpus scan left is the candidates-only token
-    * fetch for the exact-Jaccard verify. The artifact path is
-    * fingerprinted by the source file's (length, mtime), so a testdata
-    * regen can never serve stale artifacts; each artifact (bands, labels)
-    * carries its own _SUCCESS, so a partial write rebuilds just that
-    * artifact. Serve cost
-    * at 100 TB: band-index read + label read (both node-sized), LSH work
+    * fetch for the exact-Jaccard verify. Bands and labels are separate
+    * build-once artifacts (rule in [[Artifacts]]). Serve cost at 100 TB:
+    * band-index read + label read (both node-sized), LSH work
     * increment-sized, merge graph = labels + new pairs. */
   def ccPersisted(s: SparkSession, d: String, threshold: Double = 0.8,
                   checkpointDir: Option[String] = None): DataFrame = {
@@ -320,11 +317,8 @@ object Dedup {
     val root = labelArtifactPath(s, d, threshold)
     val bandPath = s"$root/bands"
     // ---- BUILD (once per corpus fingerprint): the corpus BAND TABLE
-    // (the LSH index, 4 fixed-width rows/doc) and the contraction labels —
-    // each artifact publishes independently via the staged atomic rename
-    // (Artifacts.publishOnce), so a crash leaves either a whole artifact
-    // or none, and racing sessions never read a half-replaced one
-    graft.core.Artifacts.publishOnce(s, bandPath) { staging =>
+    // (the LSH index, 4 fixed-width rows/doc) and the contraction labels
+    Artifacts.publishOnce(s, bandPath) { staging =>
       graft.expr.GraftFunctions.register(s)
       // fanOut: the nearPairsUnordered rationale (build-once, but the
       // first build's corpus band pass was 1-task)
@@ -383,9 +377,7 @@ object Dedup {
   private[llm] def ccStreamedStats(s: SparkSession, d: String,
       threshold: Double = 0.8, nFiles: Int = 3): (DataFrame, Int) = {
     val docs = Tables.documents(s, d)
-    // build-once staged layout (r20 opt): the 4-file split is a pure
-    // function of the corpus — re-writing it per run put a corpus write
-    // inside every timed run of this bridge
+    // build-once staged layout (r20 opt, Tables.stageOnce rationale)
     val tmp = Tables.stageOnce(s, s"cc_str_f$nFiles", d, "documents") { p =>
       docs.repartition(nFiles).write.mode("overwrite").parquet(p)
     }
@@ -441,10 +433,9 @@ object Dedup {
       .orderedBy("doc_id"), batches)
   }
 
-  /** Build-once star-contraction labels for an arbitrary pair chain,
-    * persisted under the fingerprinted artifact root: builds (and writes)
-    * when `<root>/<scope>/_SUCCESS` is absent, then reads the node-sized
-    * (id, lbl) table back. `scope` separates label sets over different
+  /** Build-once ([[Artifacts.publishOnce]]) star-contraction labels for
+    * an arbitrary pair chain under the fingerprinted artifact root, read
+    * back as the node-sized (id, lbl) table. `scope` separates label sets over different
     * graphs of the same corpus file — "labels" (corpus-only, the
     * [[ccPersisted]] daily artifact) vs "full" (whole-graph, the
     * [[graft.llm.Pipeline.splitLeakfree]] split key). */
@@ -453,9 +444,7 @@ object Dedup {
       pairs: => DataFrame,
       checkpointDir: Option[String] = None): DataFrame = {
     val path = s"${labelArtifactPath(s, d, threshold)}/$scope"
-    // staged build + atomic rename (Artifacts.publishOnce): racing cold
-    // sessions each contract into their own staging dir, one publishes
-    graft.core.Artifacts.publishOnce(s, path) { staging =>
+    Artifacts.publishOnce(s, path) { staging =>
       val lbl = starLabels(pairs, checkpointDir)
       lbl.write.mode("overwrite").parquet(staging)
       // the parquet write was the pinned labeling's last reader
@@ -464,23 +453,18 @@ object Dedup {
     s.read.parquet(path)
   }
 
-  /** Label-artifact location for [[ccPersisted]]: keyed by dataset dir,
-    * threshold, and the documents file's (length, modification time) so
-    * scale factors never share labels and a regenerated corpus
-    * invalidates the artifact by construction (a fresh fingerprint is a
-    * fresh path — no staleness check to forget). */
+  /** Label-artifact location for [[ccPersisted]]: keyed by threshold and
+    * the documents fingerprint ([[Artifacts.fingerprint]]), so
+    * scale factors never share labels and a regenerated corpus is a fresh
+    * path by construction. */
   private def labelArtifactPath(s: SparkSession, d: String,
                                 threshold: Double): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-    val st = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    val fp = s"${st.getLen}_${st.getModificationTime}"
-    val dsafe = d.replaceAll("[^A-Za-z0-9.]", "_")
     val tsafe = threshold.toString.replace('.', '_')
     // v2 (v1 had no band index): bump when the pair chain / contraction
     // CODE changes semantics — the data fingerprint only invalidates on
     // regen
-    s"${graft.core.Tables.artifactRoot(s)}/graft_labels/v2_${dsafe}_t${tsafe}_$fp"
+    s"${Tables.artifactRoot(s)}/graft_labels/v2_t${tsafe}_" +
+      Artifacts.fingerprint(s, d, "documents")
   }
 
   /** Lazy audit plan for [[ccIncremental]] (tools.ExplainAudit): the

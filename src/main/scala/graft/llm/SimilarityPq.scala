@@ -721,23 +721,14 @@ object SimilarityPq {
        |ORDER BY m.vec_id""".stripMargin
   }
 
-  /** Index-artifact location for [[ivfPqPersisted]] — under the build
-    * directory, keyed by the source dataset AND the embeddings file's
-    * (length, mtime) fingerprint (r13, the q_dedup_cc_persisted rule): a
-    * regenerated corpus is a fresh path by construction, so the build can
-    * safely be skipped whenever the artifacts already exist — "index
-    * once, query many" with the build amortized across runs instead of
-    * paid on every invocation. */
-  private def indexRoot(s: SparkSession, d: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-    val st = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    // v1 + knob tag: bump the version when the trainer/encoder CODE
-    // changes semantics — the data fingerprint only invalidates on regen
+  /** Index-artifact location for [[ivfPqPersisted]]: the embeddings
+    * fingerprint under a version + knob tag — "index once, query many"
+    * ([[graft.core.Artifacts]]). Bump the version when the trainer/encoder
+    * CODE changes semantics. */
+  private def indexRoot(s: SparkSession, d: String): String =
     s"${graft.core.Tables.artifactRoot(s)}/graft_index/" +
       s"v1_m${m}k${ks}r${rounds}h${trainHexLt}_" +
-      s"${d.replaceAll("[^A-Za-z0-9.]", "_")}_${st.getLen}_${st.getModificationTime}"
-  }
+      graft.core.Artifacts.fingerprint(s, d, "embeddings")
 
   /** IVFPQ as a PERSISTED serving index — the on-disk half of the corpus-
     * scale similarity story ("index once, query many", the FAISS
@@ -767,26 +758,12 @@ object SimilarityPq {
 
   /** The BUILD half of [[ivfPqPersisted]] — train (pinned), encode,
     * persist the three artifacts (centroids, codebooks, bucket-partitioned
-    * codes) once per corpus fingerprint, via the staged atomic publish
-    * (Artifacts.publishOnce: the whole three-artifact root appears in one
-    * rename, so a crash or a racing builder can never leave a partial
-    * index a server could read). Returns the artifact root. */
+    * codes) once per corpus fingerprint as ONE build-once root
+    * ([[graft.core.Artifacts.publishOnce]]). Returns the artifact root. */
   private[llm] def ensureIndex(s: SparkSession, d: String,
       nCentroids: Int = 8, trainIters: Int = 2): String = {
-    val root = indexRoot(s, d)
     val all = Similarity.vecs(s, d)
-    // marker migration: pre-r15 builds completed under _GRAFT_INDEX_DONE
-    // (no root _SUCCESS) — adopt them in place instead of letting
-    // publishOnce classify a complete legacy index as crash debris and
-    // silently rebuild it (r15 review finding)
-    locally {
-      val rp = new org.apache.hadoop.fs.Path(root)
-      val fs = rp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val legacy = new org.apache.hadoop.fs.Path(rp, "_GRAFT_INDEX_DONE")
-      val marker = new org.apache.hadoop.fs.Path(rp, "_SUCCESS")
-      if (fs.exists(legacy) && !fs.exists(marker)) fs.create(marker, true).close()
-    }
-    graft.core.Artifacts.publishOnce(s, root) { staging =>
+    graft.core.Artifacts.publishOnce(s, indexRoot(s, d)) { staging =>
       // the two trained artifacts are independent — train them
       // concurrently (QueryDef.pinPar, guide §2.6); the writes below read
       // the pinned frames, so the artifact bytes are unchanged
@@ -804,14 +781,7 @@ object SimilarityPq {
         encodeWith(assigned, cb)
           .select(col("vec_id") +: col("bucket") +: (1 to m).map(j => col(s"c$j")): _*),
         s"$staging/codes", "bucket")
-      // root-level completion marker (the hive-partitioned codes write
-      // emits none): publishOnce's skip check and the historical
-      // partial-build rebuild rule both key on it
-      val stRoot = new org.apache.hadoop.fs.Path(staging)
-      stRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .create(new org.apache.hadoop.fs.Path(stRoot, "_SUCCESS"), true).close()
     }
-    root
   }
 
   /** The SERVE half of [[ivfPqPersisted]]: everything reads the
@@ -908,9 +878,6 @@ object SimilarityPq {
         col("vec_id") === col("tomb_id"), "left_anti")
     graft.core.Artifacts.publishOnce(s, s"$root/codes_live") { staging =>
       graft.core.Layout.writePartitioned(live, staging, "bucket")
-      val st = new org.apache.hadoop.fs.Path(staging)
-      st.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .create(new org.apache.hadoop.fs.Path(st, "_SUCCESS"), true).close()
     }
     root
   }

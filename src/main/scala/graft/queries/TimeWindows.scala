@@ -250,29 +250,23 @@ object TimeWindows {
     * plus the 2-row sentinel file, with mtimes FORCED ascending in range
     * order so the file source's oldest-first pick delivers ranges in
     * time order and the sentinel strictly last (parallel-written parts
-    * share an mtime, so natural ordering would race). Fingerprinted
-    * build-once layout, same rule as the multibatch staging; `_STAGED`
-    * is the done marker because BOTH parquet writes must land before the
-    * layout is usable. */
+    * share an mtime, so natural ordering would race). Build-once:
+    * [[Tables.stageOnce]] — the layout is only published after BOTH
+    * parquet writes and the mtime ladder. */
   private def stagedEventsSentinel(s: SparkSession, d: String)
       : (String, org.apache.spark.sql.types.StructType) = {
-    val srcPath = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val conf = s.sparkContext.hadoopConfiguration
-    val st = srcPath.getFileSystem(conf).getFileStatus(srcPath)
+    val ev = Tables.events(s, d).filter(col("ts").isNotNull)
     // v3: 3 range files, not 4 (r18 adjudication — the 6-batch harness
     // cost 7.7 s calm; one fewer micro-batch keeps every semantic the
     // bridge exists for: matched pairs still span files, eviction still
-    // needs the sentinel pair). v2 grew the second sentinel batch.
-    val tmp = Tables.stageDir(s,
-      s"join_outer_v3_${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        s"_${st.getLen}_${st.getModificationTime}")
-    val ev = Tables.events(s, d).filter(col("ts").isNotNull)
-    val root = new org.apache.hadoop.fs.Path(tmp)
-    val fs = root.getFileSystem(conf)
-    val done = new org.apache.hadoop.fs.Path(root, "_STAGED")
-    if (!fs.exists(done)) {
+    // needs the sentinel pair). v2 grew the second sentinel batch. v4:
+    // published by rename (a v3 build that crashed after its first write
+    // holds a _SUCCESS and must not be adopted).
+    val tmp = Tables.stageOnce(s, "join_outer_v4", d, "events") { staging =>
+      val root = new org.apache.hadoop.fs.Path(staging)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       ev.repartitionByRange(3, col("ts"))
-        .write.mode("overwrite").parquet(tmp)
+        .write.mode("overwrite").parquet(staging)
       // range files FIRST-WRITE only: part-0000k's k is the ascending
       // range id (RangePartitioner assigns ranges in partition order)
       val ranged = fs.listStatus(root).map(_.getPath)
@@ -298,7 +292,7 @@ object TimeWindows {
             "purchase", 0.0, null: String))
         s.createDataFrame(rows)
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("append").parquet(tmp)
+          .coalesce(1).write.mode("append").parquet(staging)
         val added = fs.listStatus(root).map(_.getPath)
           .filter(_.getName.startsWith("part-")).filterNot(before.contains)
         require(added.length == 1,
@@ -313,7 +307,6 @@ object TimeWindows {
       }
       fs.setTimes(s1, base + 600000L, -1L)
       fs.setTimes(s2, base + 1200000L, -1L)
-      fs.create(done, true).close()
     }
     (tmp, ev.schema)
   }

@@ -911,10 +911,11 @@ object TradeLogFormat {
   }
 
   /** Re-run a metadata read that failed its checksum. An overwrite
-    * publish renames the body, then its sidecar, so a reader that opens
-    * both between the two renames pairs the new body with the old
-    * sidecar; a re-read a moment later sees the finished publish. Real
-    * corruption fails every attempt and surfaces. */
+    * publish swaps the body, then its sidecar
+    * ([[graft.core.LocalPublish.move]]), so a reader that opened the old
+    * body before the swap can still meet the new sidecar; a re-read a
+    * moment later sees the finished publish. Real corruption fails every
+    * attempt and surfaces. */
   private[source] def rereadTorn[T](read: => T, tries: Int = 4): T =
     try read
     catch {

@@ -3,7 +3,7 @@ package graft.source
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{OracleSql, QueryDef, Tables}
+import graft.core.{Artifacts, OracleSql, QueryDef, Tables}
 import graft.core.QueryDef.OrderedOut
 
 /** Catalog queries for the DataSource V2 tradelog connector
@@ -49,19 +49,14 @@ object TradeLogQueries {
 
   private val FormatName = "graft-tradelog"
 
-  /** Fingerprinted artifact path (the candleTierPath rule). */
-  private def logPath(s: SparkSession, dir: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val st = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(src)
-    val dsafe = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    // v4: two-level manifests (per-day shard files under _manifests),
-    // optimistic commit claims, per-block commit seq / null-ts count /
-    // user range — a format-semantics change is a FRESH artifact path by
-    // construction (the build-once rule; v3 added generations, v2 blooms)
+  /** Fingerprinted artifact path ([[Artifacts.fingerprint]]).
+    * v4: two-level manifests (per-day shard files under _manifests),
+    * optimistic commit claims, per-block commit seq / null-ts count /
+    * user range — a format-semantics change is a FRESH artifact path by
+    * construction (v3 added generations, v2 blooms). */
+  private def logPath(s: SparkSession, dir: String): String =
     s"${Tables.artifactRoot(s)}/graft_tradelog/" +
-      s"v4_${dsafe}_${st.getLen}_${st.getModificationTime}"
-  }
+      s"v4_${Artifacts.fingerprint(s, dir, "events")}"
 
   /** Build the log once through the DSv2 WRITE path; the committed
     * manifest is the success marker (its rename is atomic, so a torn

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Synthetic next-decade corpus (VERDICT r16 #4): sf1 ≈ 10× sf0.1, built
   * as the union of 10 id-remapped copies of the tables the steepest
@@ -25,8 +25,8 @@ import graft.core.Tables
   *   - lineitem: verbatim rows with offset order keys (Q1 groups by
   *     returnflag/linestatus — output stays 6 rows, scan grows 10×).
   *
-  * Build-once under target/ (fingerprinted by the source documents
-  * file), `_BUILT` marker last. Usage:
+  * Build-once under the artifact root ([[Artifacts]]),
+  * fingerprinted by all four source tables. Usage:
   *
   *   runMain graft.tools.ScaleUp            # build, print the dir
   *   runMain graft.tools.ScaleSweep 3 q_dedup_near <dir>   # then sweep
@@ -42,18 +42,11 @@ object ScaleUp {
     (lower + upper, rot(lower) + rot(upper))
   }
 
-  def buildDir(s: SparkSession, srcDir: String, copies: Int): String = {
-    // fingerprint ALL THREE source tables (r17 advice): the corpus also
-    // derives from events and lineitem, so regenerating either without
-    // touching documents must invalidate the cached build
-    val conf = s.sparkContext.hadoopConfiguration
-    val fp = Seq("documents", "events", "lineitem", "customer").map { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$srcDir/$t.parquet")
-      val st = p.getFileSystem(conf).getFileStatus(p)
-      s"${st.getLen}_${st.getModificationTime}"
-    }.mkString("_")
-    s"${Tables.artifactRoot(s)}/graft_x${copies}_$fp"
-  }
+  // every source table is fingerprinted: regenerating any one of them
+  // must invalidate the cached build
+  def buildDir(s: SparkSession, srcDir: String, copies: Int): String =
+    s"${Tables.artifactRoot(s)}/graft_x${copies}_" +
+      Artifacts.fingerprint(s, srcDir, "documents", "events", "lineitem", "customer")
 
   /** Build (once) and return the synthetic decade dir. `copies = 1` is
     * the CONTROL: the source tables re-laid through the identical writer
@@ -63,60 +56,51 @@ object ScaleUp {
     * parallelism starvation, not work (both earlier sweep attempts showed
     * sf1 FASTER than sf0.1 for the scan-heavy families). */
   def ensure(s: SparkSession, srcDir: String = "/root/testdata/sf0.1",
-      copies: Int = Copies): String = {
-    val out = buildDir(s, srcDir, copies)
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(root, "_BUILT")
-    if (fs.exists(done)) return out
-    fs.delete(root, true)
+      copies: Int = Copies): String =
+    Artifacts.publishOnce(s, buildDir(s, srcDir, copies)) { out =>
+      def tenfold(base: DataFrame)(remap: (DataFrame, Int) => DataFrame)
+          : DataFrame =
+        (0 until copies).map(k => remap(base, k)).reduce(_ unionByName _)
 
-    def tenfold(base: DataFrame)(remap: (DataFrame, Int) => DataFrame)
-        : DataFrame =
-      (0 until copies).map(k => remap(base, k)).reduce(_ unionByName _)
+      val docs = Tables.documents(s, srcDir)
+      tenfold(docs) { (d, k) =>
+        val (from, to) = rotated(k)
+        d.select(
+          (col("doc_id") + lit(k * 10000000L)).as("doc_id"),
+          (if (k == 0) col("text") else translate(col("text"), from, to))
+            .as("text"),
+          col("lang"), col("source"), col("n_chars"))
+      }.repartition(32).write.mode("overwrite")
+        .parquet(s"$out/documents.parquet")
 
-    val docs = Tables.documents(s, srcDir)
-    tenfold(docs) { (d, k) =>
-      val (from, to) = rotated(k)
-      d.select(
-        (col("doc_id") + lit(k * 10000000L)).as("doc_id"),
-        (if (k == 0) col("text") else translate(col("text"), from, to))
-          .as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.repartition(32).write.mode("overwrite")
-      .parquet(s"$out/documents.parquet")
+      val ev = Tables.events(s, srcDir)
+      tenfold(ev) { (d, k) =>
+        d.select(
+          (col("event_id") + lit(k * 1000000000000L)).as("event_id"),
+          col("ts"),
+          (col("user_id") + lit(k * 1000000L)).as("user_id"),
+          (if (k == 0) col("event_type")
+           else concat(col("event_type"), lit(s"_$k"))).as("event_type"),
+          col("value"), col("props"))
+      }.repartition(32).write.mode("overwrite")
+        .parquet(s"$out/events.parquet")
 
-    val ev = Tables.events(s, srcDir)
-    tenfold(ev) { (d, k) =>
-      d.select(
-        (col("event_id") + lit(k * 1000000000000L)).as("event_id"),
-        col("ts"),
-        (col("user_id") + lit(k * 1000000L)).as("user_id"),
-        (if (k == 0) col("event_type")
-         else concat(col("event_type"), lit(s"_$k"))).as("event_type"),
-        col("value"), col("props"))
-    }.repartition(32).write.mode("overwrite")
-      .parquet(s"$out/events.parquet")
+      val li = Tables.lineitem(s, srcDir)
+      tenfold(li) { (d, k) =>
+        d.withColumn("l_orderkey", col("l_orderkey") + lit(k * 1000000000L))
+      }.repartition(32).write.mode("overwrite")
+        .parquet(s"$out/lineitem.parquet")
 
-    val li = Tables.lineitem(s, srcDir)
-    tenfold(li) { (d, k) =>
-      d.withColumn("l_orderkey", col("l_orderkey") + lit(k * 1000000000L))
-    }.repartition(32).write.mode("overwrite")
-      .parquet(s"$out/lineitem.parquet")
-
-    // customer: keys offset in lockstep with events.user_id, so the
-    // tradelog-semi join family (dim-driven runtime block filtering)
-    // scales both sides of the join by the same factor (r18: the
-    // tradelog/DML decade sweep, VERDICT r17 #7)
-    val cu = Tables.customer(s, srcDir)
-    tenfold(cu) { (d, k) =>
-      d.withColumn("c_custkey", col("c_custkey") + lit(k * 1000000L))
-    }.repartition(32).write.mode("overwrite")
-      .parquet(s"$out/customer.parquet")
-
-    fs.create(done, true).close()
-    out
-  }
+      // customer: keys offset in lockstep with events.user_id, so the
+      // tradelog-semi join family (dim-driven runtime block filtering)
+      // scales both sides of the join by the same factor (r18: the
+      // tradelog/DML decade sweep, VERDICT r17 #7)
+      val cu = Tables.customer(s, srcDir)
+      tenfold(cu) { (d, k) =>
+        d.withColumn("c_custkey", col("c_custkey") + lit(k * 1000000L))
+      }.repartition(32).write.mode("overwrite")
+        .parquet(s"$out/customer.parquet")
+    }
 
   def main(args: Array[String]): Unit = {
     val spark = BenchSession.build()

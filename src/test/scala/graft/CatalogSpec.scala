@@ -614,4 +614,23 @@ class CatalogSpec extends SparkTestBase {
     assert(plan.contains("ReusedExchange") || plan.contains("ReusedQueryStage"),
       s"q_quality_lm no longer reuses the bigram-count exchange:\n$plan")
   }
+
+  test("build-once gates leave no staging or tombstone debris") {
+    // declared last: every catalog build above published through
+    // Artifacts.publishOnce, which consumes or deletes its staging dir and
+    // tombstone on every path; one left beside an artifact (or a layout
+    // under the stageDir root) is a gate that skipped the cleanup
+    import scala.jdk.CollectionConverters._
+    val roots = new java.io.File(graft.core.Tables.artifactRoot(spark))
+      .listFiles().filter(f => f.isDirectory && f.getName.startsWith("graft_"))
+      .map(_.toPath).toSeq :+
+      java.nio.file.Paths.get(graft.core.Tables.stageDir(spark, ""))
+    val debris = roots.distinct.filter(java.nio.file.Files.isDirectory(_))
+      .flatMap(r => java.nio.file.Files.walk(r, 2).iterator().asScala.toSeq)
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.contains(".staging-") || n.contains(".tomb-")
+      }
+    assert(debris.isEmpty, s"build-once debris left: ${debris.mkString(", ")}")
+  }
 }

@@ -3,12 +3,14 @@ package graft.core
 import graft.SparkTestBase
 import org.apache.hadoop.fs.Path
 
-/** Artifacts.publishOnce: the staged-rename build-once lifecycle. The
-  * claims under test: a published artifact is never rebuilt, a crash
-  * leftover (directory without _SUCCESS) is cleared and rebuilt, and the
-  * collision branch (two cold-path racers) leaves exactly the winner's
-  * artifact with no staging debris — the in-place-overwrite hazard the
-  * helper exists to remove. */
+/** Artifacts: the build-once rule. The claims under test: a fingerprint
+  * names its sources and changes only with them; a published artifact is
+  * never rebuilt, a crash leftover (directory without _SUCCESS) is cleared
+  * and rebuilt, a build that leaves no _SUCCESS is marked for it, a staged
+  * layout appears whole with its file mtimes intact, and the collision
+  * branch (two cold-path racers) leaves exactly the winner's artifact with
+  * no staging debris — the in-place-overwrite hazard the helper exists to
+  * remove. */
 class ArtifactsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -94,5 +96,82 @@ class ArtifactsSpec extends SparkTestBase {
     assert(winnerPlanted)
     assert(spark.read.parquet(path).collect().head.getString(0) == "winner",
       "publishOnce must defer to a concurrently published artifact")
+  }
+
+  private def siblings(parent: String, keep: String): Seq[String] =
+    fs(parent).listStatus(new Path(parent)).map(_.getPath.getName)
+      .filterNot(_ == keep).toSeq
+
+  test("fingerprint is <dir>_<len>_<mtime> per table and changes only with its sources") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fp").toString
+    for (t <- Seq("a", "b"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$t.parquet"), t.getBytes)
+    def file(t: String) = new Path(s"$dir/$t.parquet")
+    val mtime = fs(dir).getFileStatus(file("a")).getModificationTime
+    val one = Artifacts.fingerprint(spark, dir, "a")
+    val both = Artifacts.fingerprint(spark, dir, "a", "b")
+    assert(one == s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_1_$mtime")
+    assert(both.startsWith(s"${one}_1_"))
+    assert(Artifacts.fingerprint(spark, dir, "a") == one)
+    assert(Artifacts.fingerprint(spark, dir, "a", "b") == both)
+    // any one of the named sources changing is a fresh name (ScaleUp's
+    // four-table form); an untouched source keeps its name
+    fs(dir).setTimes(file("b"), mtime + 60000L, -1L)
+    assert(Artifacts.fingerprint(spark, dir, "a") == one)
+    assert(Artifacts.fingerprint(spark, dir, "a", "b") != both)
+    fs(dir).setTimes(file("a"), mtime + 60000L, -1L)
+    assert(Artifacts.fingerprint(spark, dir, "a") != one)
+  }
+
+  test("publishOnce marks a build that wrote no _SUCCESS of its own") {
+    val root = java.nio.file.Files.createTempDirectory("graft-art5").toString
+    val path = s"$root/index/v1"
+    var builds = 0
+    def build(staging: String): Unit = {
+      builds += 1
+      // a hive-partitioned table under a sub-directory: nothing marks the root
+      Seq((1L, 0), (2L, 1)).toDF("id", "bucket")
+        .write.partitionBy("bucket").parquet(s"$staging/codes")
+    }
+    assert(Artifacts.publishOnce(spark, path)(build) == path)
+    assert(fs(path).exists(new Path(path, "_SUCCESS")))
+    Artifacts.publishOnce(spark, path)(build)
+    assert(builds == 1, "a build marked by publishOnce was rebuilt")
+    assert(spark.read.parquet(s"$path/codes").count() == 2)
+    assert(siblings(s"$root/index", "v1").isEmpty)
+  }
+
+  test("a layout built by a write, appends and an mtime ladder appears whole, ladder intact") {
+    // the sentinel-layout shape of the streaming bridges: the file source
+    // delivers files oldest-mtime first, so the forced ladder IS the
+    // micro-batch order and must survive the publishing rename
+    val root = java.nio.file.Files.createTempDirectory("graft-art6").toString
+    val path = s"$root/stage/join_v4"
+    val base = 1700000000000L
+    Artifacts.publishOnce(spark, path) { staging =>
+      val st = new Path(staging)
+      def parts() = fs(staging).listStatus(st).map(_.getPath)
+        .filter(_.getName.startsWith("part-")).toSet
+      val files = (1L to 3L).map { v =>
+        val before = if (v == 1L) Set.empty[Path] else parts()
+        Seq(v).toDF("v").coalesce(1).write
+          .mode(if (v == 1L) "overwrite" else "append").parquet(staging)
+        assert(!fs(path).exists(new Path(path)),
+          "the layout is visible at its final path before the build ends")
+        val added = parts() -- before
+        assert(added.size == 1)
+        added.head
+      }
+      files.zipWithIndex.foreach { case (f, i) =>
+        fs(staging).setTimes(f, base + 1000L * i, -1L)
+      }
+    }
+    val published = fs(path).listStatus(new Path(path))
+      .filter(_.getPath.getName.startsWith("part-")).sortBy(_.getModificationTime)
+    assert(published.map(_.getModificationTime).toSeq == Seq(base, base + 1000L, base + 2000L))
+    assert(published.map(f => spark.read.parquet(f.getPath.toString).head.getLong(0)).toSeq
+      == Seq(1L, 2L, 3L))
+    assert(fs(path).exists(new Path(path, "_SUCCESS")))
+    assert(siblings(s"$root/stage", "join_v4").isEmpty)
   }
 }

@@ -112,6 +112,31 @@ class TradeLogPublishSpec extends SparkTestBase {
     }
   }
 
+  test("publishAtomic [local (nio)]: an overwrite torn between the body and " +
+      "the sidecar rename leaves the new body readable; the next publish " +
+      "succeeds") {
+    val dir = new Path(tmpDir("torn"))
+    val target = new Path(dir, "index.manifest")
+    assert(publish(local, target, "body A", overwrite = true))
+    // a temp without its sidecar: the move fails exactly between the body
+    // rename and the sidecar rename, as a crash there would leave it
+    val tmp = new Path(dir, ".index.manifest.tmp-torn")
+    val out = graft.core.LocalPublish.create(local, tmp)
+    try out.write("body B".getBytes(UTF_8)) finally out.close()
+    Files.delete(local.pathToFile(local.getChecksumFile(tmp)).toPath)
+    intercept[java.io.IOException] {
+      graft.core.LocalPublish.move(local, tmp, target, overwrite = true)
+    }
+    def read(): String = {
+      val in = local.open(target)
+      try new String(in.readAllBytes(), UTF_8) finally in.close()
+    }
+    assert(read() == "body B")
+    assert(publish(local, target, "body C", overwrite = true))
+    assert(read() == "body C" && sidecar(target).nonEmpty)
+    assert(temps(dir).isEmpty, temps(dir))
+  }
+
   test("a flipped byte in a published manifest fails the next header read " +
       "with ChecksumException") {
     val dir = tmpDir("flip")

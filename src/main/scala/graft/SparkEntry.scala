@@ -632,10 +632,6 @@ object Catalog {
     * 5-minute SQL, so the hash proves persist → read-back → merge ≡ direct
     * aggregation. */
   def qOhlcTiered(spark: SparkSession, dir: String): DataFrame = {
-    // LOAD-BEARING register: the serve path reads the persisted tier and
-    // never calls OhlcPipeline.candles (which registers as a side
-    // effect), yet rollupCandles resolves first_by_ordered by name
-    graft.expr.GraftFunctions.register(spark)
     val path = Artifacts.publishOnce(spark, s"${Tables.artifactRoot(spark)}" +
         s"/graft_candles/v1_${Artifacts.fingerprint(spark, dir, "events")}") { p =>
       m1Candles(spark, dir).write.mode("overwrite").parquet(p)
@@ -926,15 +922,14 @@ object Catalog {
     * increment's partials are a day's candles (broadcast-small); the
     * tier never rescans, only joins on its own key. */
   def qOhlcTierIncr(spark: SparkSession, dir: String): DataFrame =
-    tierIncrFrom(spark, Tables.events(spark, dir),
+    tierIncrFrom(Tables.events(spark, dir),
       pmod(col("event_id"), lit(5)) === 4)
 
   /** The merge body over an explicit events frame — split out so the
     * spec can drive the same-µs tie arms with a constructed fixture
     * (measure-zero in real data, so the oracle alone never fires them). */
-  private[graft] def tierIncrFrom(spark: SparkSession, ev: DataFrame,
+  private[graft] def tierIncrFrom(ev: DataFrame,
       isIncr: org.apache.spark.sql.Column): DataFrame = {
-    graft.expr.GraftFunctions.register(spark)
     def partial(src: DataFrame): DataFrame =
       src.groupBy(window(col("ts"), "1 minute"), col("event_type").as("base"))
         .agg(

@@ -3,12 +3,11 @@ package graft.expr
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, Expression, ExpressionInfo, GreaterThan, If, IsNotNull, LessThan, Literal, Not, Or, UnixMicros}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Mutable (key, value) pair tracked by the ordered-first/last aggregates.
   * `set=false` = empty group so far (all-null input stays null). */
@@ -257,12 +256,11 @@ case class LastByOrderedDecl(tsExpr: Expression, priceExpr: Expression)
     copy(tsExpr = c(0), priceExpr = c(1))
 }
 
-/** Registration: SQL names `first_by_ordered(ts, price)` /
+/** The SQL functions: `first_by_ordered(ts, price)` /
   * `last_by_ordered(ts, price)` (ts integral or TIMESTAMP — timestamps
-  * widen µs-safely inside the aggregate, no manual unix_micros needed)
-  * and `vec_dot(a, b)`. Idempotent per session. Two paths:
-  * `GraftFunctions.register(spark)` imperatively, or
-  * `--conf spark.sql.extensions=graft.expr.GraftExtensions` at submit time.
+  * widen µs-safely inside the aggregate, no manual unix_micros needed),
+  * `vec_dot(a, b)` and the rest below. [[graft.GraftExtensionsProvider]]
+  * injects them into every session.
   */
 object GraftFunctions {
   // each ExpressionInfo names the actual implementing class so DESCRIBE
@@ -378,28 +376,14 @@ object GraftFunctions {
         CollectUpTo(children(0), k)
       })
   )
-
-  /** Register the functions; install [[graft.stream.LocalCheckpointFileManager]]
-    * unless the session names a checkpoint manager (an explicit setting wins).
-    * A query copies the conf when it starts: call before `start()`. */
-  def register(spark: SparkSession): Unit = {
-    val reg: FunctionRegistry = spark.sessionState.functionRegistry
-    functions.foreach { case (id, inf, builder) =>
-      reg.registerFunction(id, inf, builder)
-    }
-    val key = "spark.sql.streaming.checkpointFileManagerClass"
-    if (spark.conf.getOption(key).isEmpty)
-      spark.conf.set(key, classOf[graft.stream.LocalCheckpointFileManager].getName)
-  }
 }
 
-/** SparkSessionExtensions hook — the cluster-deployment registration path:
-  * `spark-submit --conf spark.sql.extensions=graft.expr.GraftExtensions`.
-  * Injects the function registry AND the min_by/max_by → ordered-first/last
-  * optimizer rewrite ([[graft.plans.OrderedFirstLastRewrite]]). */
+/** The opt-in `spark.sql.extensions` hook:
+  * `spark-submit --conf spark.sql.extensions=graft.expr.GraftExtensions`
+  * adds the min_by/max_by → ordered-first/last optimizer rewrite
+  * ([[graft.plans.OrderedFirstLastRewrite]]). Opt-in, not part of the
+  * provider: `q_ohlc_minby` measures stock `min_by`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.functions.foreach(ext.injectFunction)
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     ext.injectOptimizerRule(_ => graft.plans.OrderedFirstLastRewrite)
-  }
 }

@@ -104,17 +104,17 @@ object Dedup {
                       bands: Int = 4, rows: Int = 3): DataFrame = {
     val docs = Tables.documents(s, d)
     val isBatch = pmod(col("doc_id"), lit(5)) === 4
-    nearIncrementalFrom(s, docs.filter(isBatch), docs.filter(!isBatch),
+    nearIncrementalFrom(docs.filter(isBatch), docs.filter(!isBatch),
       threshold, bands, rows)
   }
 
   /** The ingest-verdict chain over EXPLICIT increment/corpus frames — split
     * from [[nearIncremental]] so the streaming bridge can hand the
     * micro-batch in as the increment (both need (doc_id, text)). */
-  private[llm] def nearIncrementalFrom(s: SparkSession, batchDocs: DataFrame,
+  private[llm] def nearIncrementalFrom(batchDocs: DataFrame,
       corpusDocs: DataFrame, threshold: Double = 0.8,
       bands: Int = 4, rows: Int = 3): DataFrame = {
-    val pairs = incrementPairs(s, batchDocs, corpusDocs, threshold, bands, rows)
+    val pairs = incrementPairs(batchDocs, corpusDocs, threshold, bands, rows)
     // per-batch-doc verdict counts from the shared pair engine; the hit
     // table is O(near-dups in the increment) — broadcast the left join so
     // the batch scan never sorts or exchanges
@@ -141,16 +141,15 @@ object Dedup {
     * scan plus a candidates-only shingle pass, and the within-batch
     * self-join carries an explicit broadcast so a large increment can't
     * silently fall to SortMergeJoin. */
-  private[llm] def incrementPairs(s: SparkSession, batchDocs: DataFrame,
+  private[llm] def incrementPairs(batchDocs: DataFrame,
       corpusDocs: DataFrame, threshold: Double = 0.8,
       bands: Int = 4, rows: Int = 3): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     // fanOut: the nearPairsUnordered rationale (1-task corpus band pass)
     val shC = graft.core.QueryDef.fanOut(corpusDocs)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextStats.shinglesExpr("toks").as("sh"))
       .filter(size(col("sh")) > 0)
-    incrementPairsFromBands(s, batchDocs, corpusDocs,
+    incrementPairsFromBands(batchDocs, corpusDocs,
       bandSignatures(shC, bands, rows), threshold, bands, rows)
   }
 
@@ -160,10 +159,9 @@ object Dedup {
     * [[nearIncremental]] scaladoc names): the serve plan then shingles
     * ONLY the increment; the corpus contributes the band-table read plus
     * one candidates-only token scan for the exact-Jaccard verify. */
-  private[llm] def incrementPairsFromBands(s: SparkSession,
+  private[llm] def incrementPairsFromBands(
       batchDocs: DataFrame, corpusDocs: DataFrame, bandC: DataFrame,
       threshold: Double = 0.8, bands: Int = 4, rows: Int = 3): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     // increment side deliberately NOT fanned (r21, verdict r20 #2): the
     // increment is small by the operator's contract (a daily batch vs the
     // corpus), so its shingle pass is sub-second on one task — the r20 fan
@@ -173,7 +171,7 @@ object Dedup {
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextStats.shinglesExpr("toks").as("sh"))
       .filter(size(col("sh")) > 0)
-    incrementPairsPrebanded(s, shB, bandSignatures(shB, bands, rows),
+    incrementPairsPrebanded(shB, bandSignatures(shB, bands, rows),
       corpusDocs, bandC, threshold)
   }
 
@@ -182,10 +180,9 @@ object Dedup {
     * bands once and both feeds them here and accumulates them into its
     * seen-band state, so the batch is shingled exactly once per
     * micro-batch. `bandBDf` carries (doc_id, band, sig). */
-  private[llm] def incrementPairsPrebanded(s: SparkSession, shB: DataFrame,
+  private[llm] def incrementPairsPrebanded(shB: DataFrame,
       bandBDf: DataFrame, corpusDocs: DataFrame, bandC: DataFrame,
       threshold: Double = 0.8): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val corpusTok = corpusDocs
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
     val bandB = bandBDf
@@ -259,7 +256,7 @@ object Dedup {
       checkpointDir)
     val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_a"), col("lbl").as("doc_b"))
-    val newPairs = incrementPairs(s, docs.filter(isBatch), corpus, threshold)
+    val newPairs = incrementPairs(docs.filter(isBatch), corpus, threshold)
       .select(col("doc_a"), col("doc_b"))
     starLabels(labelEdges.unionByName(newPairs), checkpointDir)
       .select(col("id").as("doc_id"), col("lbl").as("cluster"))
@@ -283,7 +280,7 @@ object Dedup {
       checkpointDir)
     val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_a"), col("lbl").as("doc_b"))
-    val newPairs = incrementPairs(s, docs.filter(isBatch), corpus, threshold)
+    val newPairs = incrementPairs(docs.filter(isBatch), corpus, threshold)
       .select(col("doc_a"), col("doc_b"))
     starLabels(labelEdges.unionByName(newPairs), checkpointDir)
       .select(col("id").as("doc_id"), col("lbl").as("cluster"))
@@ -319,7 +316,6 @@ object Dedup {
     // ---- BUILD (once per corpus fingerprint): the corpus BAND TABLE
     // (the LSH index, 4 fixed-width rows/doc) and the contraction labels
     Artifacts.publishOnce(s, bandPath) { staging =>
-      graft.expr.GraftFunctions.register(s)
       // fanOut: the nearPairsUnordered rationale (build-once, but the
       // first build's corpus band pass was 1-task)
       val shC = graft.core.QueryDef.fanOut(corpus)
@@ -336,7 +332,7 @@ object Dedup {
       checkpointDir)
     val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
       .select(col("id").as("doc_a"), col("lbl").as("doc_b"))
-    val newPairs = incrementPairsFromBands(s, docs.filter(isBatch), corpus,
+    val newPairs = incrementPairsFromBands(docs.filter(isBatch), corpus,
         s.read.parquet(bandPath), threshold)
       .select(col("doc_a"), col("doc_b"))
     starLabels(labelEdges.unionByName(newPairs), checkpointDir)
@@ -389,7 +385,6 @@ object Dedup {
       cs.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(tmp)
     } { (bs, batch, _) =>
-      graft.expr.GraftFunctions.register(bs)
       // fanOut: each micro-batch is ONE staged file → 1-task shingle+band
       // pass per batch without it (the nearPairsUnordered rationale)
       val shB = graft.core.QueryDef.fanOut(batch)
@@ -403,7 +398,7 @@ object Dedup {
       // be a same-lineage self-join on its using-columns
       val noBands = bs.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), bandB.schema)
-      val newPairs = incrementPairsPrebanded(bs, shB, bandB,
+      val newPairs = incrementPairsPrebanded(shB, bandB,
           Tables.documents(bs, d),
           if (prevBands == null) noBands else prevBands, threshold)
         .select(col("doc_a"), col("doc_b"))
@@ -478,7 +473,7 @@ object Dedup {
                              threshold: Double = 0.8): DataFrame = {
     val docs = Tables.documents(s, d)
     val isBatch = pmod(col("doc_id"), lit(5)) === 4
-    incrementPairs(s, docs.filter(isBatch), docs.filter(!isBatch), threshold)
+    incrementPairs(docs.filter(isBatch), docs.filter(!isBatch), threshold)
   }
 
   /** [[nearIncremental]] under the STREAMING engine (the 14th
@@ -498,7 +493,7 @@ object Dedup {
       requireSingleBatch = true) { cs =>
       Tables.documentsStream(cs, d).filter(isBatch)
     } { (cs, batch) =>
-      nearIncrementalFrom(cs, batch,
+      nearIncrementalFrom(batch,
         Tables.documents(cs, d).filter(!isBatch), threshold, bands, rows)
     }.orderedBy("doc_id")
   }
@@ -672,7 +667,6 @@ object Dedup {
     * repartition(1) in the lineage would serialize every later stage. */
   private[llm] def nearPairsUnordered(docs: DataFrame, threshold: Double = 0.8,
       bands: Int = 4, rows: Int = 3, maxBucket: Option[Int] = None): DataFrame = {
-    graft.expr.GraftFunctions.register(docs.sparkSession)
     // fanOut (r20 opt): one-row-group corpus → the tokenize+shingle+
     // minhash band pass ran as ONE task (JobProfile: 1.96 s single-task
     // job inside q_dedup_cc); round-robin split is a no-op at corpus
@@ -755,18 +749,15 @@ object Dedup {
     * evaluations vs 2·|docs| (measured 6.2 → 1.9 s median with the
     * candidate cut combined). */
   def ngramPairs(s: SparkSession, d: String, threshold: Double = 0.8,
-                 maxDf: Int = 10, minShared: Int = 2): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+                 maxDf: Int = 10, minShared: Int = 2): DataFrame =
     ngramPairsFor(Tables.documents(s, d), threshold, maxDf, minShared)
       .orderedBy("doc_a", "doc_b")
-  }
 
   /** [[ngramPairs]] over an arbitrary (doc_id, text) frame without the
     * harness ordering trailer — the composition entry point (the recall
     * gauge consumes it as the reference pair set). */
   private[llm] def ngramPairsFor(docs: DataFrame, threshold: Double,
       maxDf: Int, minShared: Int): DataFrame = {
-    graft.expr.GraftFunctions.register(docs.sparkSession)
     // fanOut: the nearPairsUnordered rationale (1-task gram/md5 pass)
     val docsTok = graft.core.QueryDef.fanOut(docs)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
@@ -898,16 +889,13 @@ object Dedup {
     * excerpt). Same scale shape as ngramPairs: only doc-id pairs and
     * shingle SETS of candidates move, never the corpus text. */
   def containPairs(s: SparkSession, d: String, threshold: Double = 0.5,
-                   maxDf: Int = 10, minShared: Int = 2): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+                   maxDf: Int = 10, minShared: Int = 2): DataFrame =
     containPairsFrom(Tables.documents(s, d), threshold, maxDf, minShared)
-  }
 
   /** [[containPairs]] over an arbitrary (doc_id, text) frame — the
     * fixture entry point. */
   private[llm] def containPairsFrom(docs: DataFrame, threshold: Double,
                                     maxDf: Int, minShared: Int): DataFrame = {
-    graft.expr.GraftFunctions.register(docs.sparkSession)
     // fanOut: the nearPairsUnordered rationale (1-task gram/md5 pass)
     val docsTok = graft.core.QueryDef.fanOut(docs)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
@@ -978,16 +966,13 @@ object Dedup {
     * map-side); buckets are df-capped before the quadratic pairing;
     * verification materializes span STRINGS only for candidate docs. */
   def substrPairs(s: SparkSession, d: String, n: Int = 20,
-                  maxDf: Int = 10): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+                  maxDf: Int = 10): DataFrame =
     substrPairsFrom(Tables.documents(s, d), n, maxDf)
-  }
 
   /** The chain over an explicit (doc_id, text) frame — split out so the
     * embedded-span fixture spec can drive it. */
   private[llm] def substrPairsFrom(docs: DataFrame, n: Int,
                                    maxDf: Int): DataFrame = {
-    graft.expr.GraftFunctions.register(docs.sparkSession)
     // fanOut: the nearPairsUnordered rationale (1-task gram/md5 pass)
     val docsTok = graft.core.QueryDef.fanOut(docs)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
@@ -1525,7 +1510,6 @@ object Dedup {
   def nearRecallGauge(s: SparkSession, d: String, threshold: Double = 0.8,
       bands: Int = 4, rows: Int = 3, maxDf: Int = 10,
       minShared: Int = 2): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val truth = ngramPairsFor(docs, threshold, maxDf, minShared)
       .select(col("doc_a"), col("doc_b"))
@@ -1699,7 +1683,6 @@ object Dedup {
     * entry point for the embedding cluster graph ([[embedClusters]]). */
   private[llm] def embedPairsUnordered(s: SparkSession, d: String,
       threshold: Double = 0.45, maxBucket: Option[Int] = None): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       call_function("vec_dot", a, b) // native codegen loop (expr.VectorExprs)
     // pre-normalize ONCE (n rows) so pair verification is a single dot
@@ -1757,7 +1740,6 @@ object Dedup {
     * dot verification, edge-sized contraction loop. */
   def embedClusters(s: SparkSession, d: String, threshold: Double = 0.45,
                     checkpointDir: Option[String] = None): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val pairs = embedPairsUnordered(s, d, threshold, None)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     starLabels(pairs, checkpointDir)
@@ -1837,7 +1819,6 @@ object Dedup {
     * scores 1.0. */
   def winnowPairs(s: SparkSession, d: String, w: Int = 4, maxDf: Int = 10,
                   minShared: Int = 2, threshold: Double = 0.5): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val fp = TextStats.winnowSets(s, d, w)
     val post = fp.select(col("doc_id"), explode(col("fps")).as("f"))
     // fps are distinct within a doc (array_distinct), so a bucket holds a

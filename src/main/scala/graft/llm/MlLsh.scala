@@ -18,7 +18,6 @@ object MlLsh {
 
   /** Near-dup pairs by shingle-set Jaccard distance <= 1 - threshold. */
   def nearMl(s: SparkSession, d: String, threshold: Double = 0.8): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextStats.shinglesExpr("toks").as("sh"))

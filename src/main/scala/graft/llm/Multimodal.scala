@@ -46,10 +46,8 @@ object Multimodal {
             s"CAST($pgmW * floor(length(text) / $pgmW) AS INT))")).as("img"))
   }
 
-  def pgmDecode(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def pgmDecode(s: SparkSession, d: String): DataFrame =
     decodeImg(packAsPgm(Tables.documents(s, d))).orderedBy("doc_id")
-  }
 
   /** The PGM decode chain executed by the STREAMING engine (13th
     * batch≡streaming bridge): file source over the same documents parquet,
@@ -61,7 +59,6 @@ object Multimodal {
     * the streaming engine like every other operator family. */
   def pgmStreamed(s: SparkSession, d: String): DataFrame =
     Tables.runStreamAppend(s, "media_streamed_") { cs =>
-      graft.expr.GraftFunctions.register(cs)
       decodeImg(packAsPgm(Tables.documentsStream(cs, d)))
     }.orderedBy("doc_id")
 
@@ -120,8 +117,7 @@ object Multimodal {
     * the hash gate; the oracle replays the block averaging over the
     * source text's character codes with pure list arithmetic. Requires
     * h ≥ 2 (a one-row image has nothing to average). */
-  def pgmResize(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def pgmResize(s: SparkSession, d: String): DataFrame =
     parsedImg(packAsPgm(Tables.documents(s, d)))
       .filter(col("h") >= 2)
       .withColumn("sh", call_function("pgm_shrink",
@@ -134,7 +130,6 @@ object Multimodal {
         call_function("byte_min", col("sh")).as("out_min"),
         call_function("byte_max", col("sh")).as("out_max"))
       .orderedBy("doc_id")
-  }
 
   /** Block-average replay over source character codes: output pixel i at
     * (ox, oy) = (i % ow, i // ow) averages input indices
@@ -205,10 +200,8 @@ object Multimodal {
         col("text").cast("binary")).as("aud"))
   }
 
-  def wavDecode(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def wavDecode(s: SparkSession, d: String): DataFrame =
     decodeAud(packAsWav(Tables.documents(s, d))).orderedBy("doc_id")
-  }
 
   /** The audio decode stage over any (doc_id, aud) frame. */
   private[llm] def decodeAud(packed: DataFrame): DataFrame = {
@@ -247,8 +240,7 @@ object Multimodal {
     * through the plan; this moves n_samples/frame), no shuffle, corpus
     * stays put. All-integer outputs; the oracle recomputes every frame
     * from the source text bytes. */
-  def wavFrames(s: SparkSession, d: String, frame: Int = 64): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def wavFrames(s: SparkSession, d: String, frame: Int = 64): DataFrame =
     packAsWav(Tables.documents(s, d))
       .withColumn("n", (length(col("aud")) - 44).cast("long"))
       .filter(col("n") >= 1)
@@ -262,7 +254,6 @@ object Multimodal {
         greatest(call_function("byte_max", col("fb")) - 128L,
           lit(128L) - call_function("byte_min", col("fb"))).as("peak"))
       .orderedBy("doc_id", "frame_id")
-  }
 
   private def wavFramesOracle(frame: Int): String =
     s"""WITH c AS (
@@ -372,7 +363,6 @@ object Multimodal {
   }
 
   def multimodalFeatures(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val fb = ppmFrameBytes
     def chanFold(f: String, off: Int) =
       call_function(f, col("px"), lit(off), lit(3))
@@ -455,7 +445,6 @@ object Multimodal {
     * longs per side — O(candidate pairs), never the corpus. */
   def phashPairs(s: SparkSession, d: String, maxHam: Int = 8,
                  maxBucket: Int = 64): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val parsed = parsedImg(packAsPgm(Tables.documents(s, d)))
       .filter(col("h") >= 2)
       .select(col("doc_id"), col("px"))

@@ -31,7 +31,6 @@ object Pipeline {
   private[llm] def cleanSurvivors(raw: DataFrame,
                                   minTokens: Int, maxTokens: Int,
                                   nearThreshold: Double): DataFrame = {
-    graft.expr.GraftFunctions.register(raw.sparkSession)
     val docs = raw
       .withColumn("n_tokens", size(TextStats.tokens(col("text"))).cast("long"))
       .filter(col("n_tokens") >= minTokens && col("n_tokens") <= maxTokens)
@@ -366,7 +365,6 @@ object Pipeline {
     * move — never shingle text. Docs with zero overlap keep hits = 0 via
     * the corpus-side left join. */
   def decontaminate(s: SparkSession, d: String, benchMax: Long = 10L): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val sh = Tables.documents(s, d)
       .select(col("doc_id"), TextStats.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextStats.shinglesExpr("toks").as("sh"))
@@ -433,7 +431,6 @@ object Pipeline {
     * training time (round-5 verdict #6). Same exact-integer window
     * arithmetic, same per-language parallel packing. */
   def packTokens(s: SparkSession, d: String, budget: Int = 1024): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
     Tables.documents(s, d)

@@ -155,7 +155,6 @@ object SemDedup {
   val textDim: Int = Vectorize.dim
 
   def semanticText(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val hv = Vectorize.hashingCore(s, d)
     val vecs = hv.filter(col("nrm") > 0)
       .select(col("doc_id").as("vec_id"),

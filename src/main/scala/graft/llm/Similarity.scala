@@ -36,15 +36,13 @@ object Similarity {
     * DotProduct expression (graft.expr.VectorExprs) — the HOF formulation
     * (`aggregate(zip_with(...))`) runs its lambda interpreted per element
     * and dominated every similarity operator's cost. Same index-ordered
-    * summation, bit-identical results. Requires GraftFunctions.register
-    * (done by the query builders). */
+    * summation, bit-identical results. */
   def cosine(a: Column, b: Column): Column = {
     def dot(x: Column, y: Column): Column = call_function("vec_dot", x, y)
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
   }
 
   private[llm] def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     // NOT fanned out (r20 opt, measured): a blanket QueryDef.fanOut here
     // parallelized the heavy encode/recon stages but ALSO inserted the
     // round-robin exchange into every tiny Lloyd-round aggregation and
@@ -69,7 +67,6 @@ object Similarity {
     * this query's. */
   def mineHard(s: SparkSession, d: String,
                nQueries: Int = 20, k: Int = 5): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val all = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"),
         col("label").cast("long").as("label"))
@@ -117,7 +114,6 @@ object Similarity {
     * shape). The oracle unrolls the same k steps as SQL CTEs. */
   def simMmr(s: SparkSession, d: String,
              nQueries: Int = 10, nCand: Int = 20, k: Int = 5): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val all = vecs(s, d)
     val q = all.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("e").as("qe"))

@@ -21,8 +21,7 @@ object TextStats {
     * Delegates to the native `word_shingles` expression
     * (graft.expr.WordShingles — one evaluation per row; the HOF
     * formulation's interpreted per-element lambdas were the near-dup
-    * pipeline's cost floor). Callers must have run
-    * `GraftFunctions.register(spark)`. */
+    * pipeline's cost floor). */
   def shinglesExpr(tokensCol: String, n: Int = 3): Column =
     expr(s"word_shingles(`$tokensCol`, $n)")
 
@@ -94,15 +93,13 @@ object TextStats {
     * pre-tokenizer runs at ~4 chars/token), the budget unit a packing
     * stage should use instead of whitespace words. Per-row scalar work,
     * whole-stage codegen end to end. */
-  def tokenBpe(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def tokenBpe(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(
       col("doc_id"),
       size(tokens(col("text"))).cast("long").as("ws_tokens"),
       expr("bpe_count(text)").as("bpe_tokens"),
       length(col("text")).cast("long").as("chars")
     ).orderedBy("doc_id")
-  }
 
   /** DuckDB replay of [[graft.expr.BpeCount]]: the regex formulation the
     * expression's scaladoc documents, piece lengths in codepoints. */
@@ -147,12 +144,10 @@ object TextStats {
     * unlike q_graph_pagerank, whose per-round feedback AMPLIFIES ulp
     * drift and therefore went fixed-point, this is a single non-iterated
     * projection). */
-  def qualityEntropy(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def qualityEntropy(s: SparkSession, d: String): DataFrame =
     // fanOut because the driver parquet is one row group (q_unpivot class)
     qualityEntropyFrom(graft.core.QueryDef.fanOut(Tables.documents(s, d)))
       .orderedBy("doc_id")
-  }
 
   /** The scorer over an arbitrary (doc_id, text) frame — shared with the
     * stateless streaming bridge (pure projections run unchanged under the
@@ -190,13 +185,10 @@ object TextStats {
     * multi-batch, and now stateless row-at-a-time scoring — the shape a
     * production scorer fleet runs on an arriving corpus). Identical
     * oracle SQL as the batch twin. */
-  def entropyStreamed(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def entropyStreamed(s: SparkSession, d: String): DataFrame =
     Tables.runStreamAppend(s, "entropy_streamed_") { cs =>
-      graft.expr.GraftFunctions.register(cs)
       qualityEntropyFrom(Tables.documentsStream(cs, d))
     }.orderedBy("doc_id")
-  }
 
   private def qualityEntropyOracle: String = {
     val classes = ('a' to 'z') ++ ('0' to '9')
@@ -214,7 +206,6 @@ object TextStats {
   }
 
   def qualityRep(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val t = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val uni = t.select(col("doc_id"), explode(col("toks")).as("tok"))
@@ -270,7 +261,6 @@ object TextStats {
     * forever); the argmax window partitions by doc (|langs| rows per
     * group). Nothing global, bodies never shuffle. */
   def langNgram(s: SparkSession, d: String, topM: Int = 8): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), lower(col("text")).as("c"))
     // char_shingles (graft.expr.CharShingles) decodes each string ONCE —
@@ -343,7 +333,6 @@ object TextStats {
     * already-filtered collocation set. */
   def cooccurPmi(s: SparkSession, d: String,
                  minCount: Int = 5, k: Int = 25): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val t = Tables.documents(s, d).select(tokens(col("text")).as("toks"))
     val uni = t.select(explode(col("toks")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cw"))
@@ -412,7 +401,6 @@ object TextStats {
     * the CCNet-style bucket pruner ([[qualityPrune]]), which must not
     * inherit the harness repartition(1) trailer in its lineage. */
   private[llm] def qualityLmCore(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val t = Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val bi = t.filter(size(col("toks")) >= 2)
@@ -1038,7 +1026,6 @@ object TextStats {
     * catastrophic once the pairs query referenced this relation on three
     * join arms (see WinnowFps scaladoc). */
   private[llm] def winnowSets(s: SparkSession, d: String, w: Int): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
     val minToks = 2 + w
     Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks"))

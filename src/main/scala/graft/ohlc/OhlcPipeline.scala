@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * materializes every trade per (window, symbol) group in aggregation state —
   * O(rows) state, ObjectHashAggregate, no partial reduction. Here
   * [[candles]] computes open/close with `first_by_ordered`/`last_by_ordered`,
-  * the DeclarativeAggregate in [[graft.expr.FirstByOrdered]]: one (t, p)
+  * the DeclarativeAggregate [[graft.expr.FirstByOrderedDecl]]: one (t, p)
   * pair of state per group, partial-aggregable, identical tie semantics
   * (lexicographic (t, p): ties on t take lowest price for open, highest for
   * close — main.py array_sort is lexicographic by field order).
@@ -82,7 +82,6 @@ object OhlcPipeline {
       qtyCol: String = "quantity",
       symbolCol: String = "base"
   ): DataFrame = {
-    graft.expr.GraftFunctions.register(trades.sparkSession)
     val withWm = watermark.fold(trades)(trades.withWatermark(tsCol, _))
     val ts = col(tsCol)
     val price = col(priceCol)

@@ -36,7 +36,7 @@ import graft.expr.{FirstByOrderedDecl, LastByOrderedDecl}
   * Registration: `spark.experimental.extraOptimizations` (session-local,
   * the conf-isolated-child pattern) or cluster-wide via
   * `--conf spark.sql.extensions=graft.expr.GraftExtensions`, which injects
-  * this rule alongside the function registry. CatalogSpec's generic
+  * this rule only. CatalogSpec's generic
   * no-SortAggregate guard is the regression net: `q_ohlc_rewrite` would
   * plan SortAggregate the moment this rule stops firing.
   */

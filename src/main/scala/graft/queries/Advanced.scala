@@ -273,8 +273,7 @@ object Advanced {
     * the order key. The whole sample is a pure function of the data — the
     * DuckDB oracle replays it row-for-row — while the Spark plan is an
     * ObjectHashAggregate whose partial state is O(k) pairs per group. */
-  def sampleK(s: SparkSession, d: String, k: Int = 5, seed: Int = 42): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def sampleK(s: SparkSession, d: String, k: Int = 5, seed: Int = 42): DataFrame =
     Tables.lineitem(s, d)
       .withColumn("pri",
         conv(substring(md5(concat_ws("#", lit(seed), col("l_orderkey"),
@@ -285,7 +284,6 @@ object Advanced {
       .agg(expr(s"array_join(transform(sample_bottom_k(pri, l_orderkey, $k)," +
         " x -> CAST(x AS STRING)), ',')").as("sample"))
       .orderedBy("l_returnflag")
-  }
 
   /** DuckDB has no conv(): rebuild the 32-bit priority from the 8 hex chars
     * (strpos over the hex alphabet), then bottom-k per group = row_number

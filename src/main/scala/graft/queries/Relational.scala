@@ -835,7 +835,6 @@ object Relational {
     * runs as the registered `hll_distinct` function, not a rule swap. */
   def distinctStreamed(s: SparkSession, d: String): DataFrame =
     Tables.runStreamComplete(s, "distinct_streamed_") { cs =>
-      graft.expr.GraftFunctions.register(cs)
       Tables.eventsStream(cs, d)
         .groupBy(col("event_type"))
         .agg(expr("CAST(round(hll_distinct(user_id)) AS BIGINT)")

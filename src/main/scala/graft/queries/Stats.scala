@@ -173,10 +173,8 @@ object Stats {
     * price — rank error O(1/√k) — is pinned by StatsSpec's containment
     * window against the exact percentile. */
   def quantileSketch(s: SparkSession, d: String, k: Int = 256,
-                     seed: Int = 7): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+                     seed: Int = 7): DataFrame =
     sketchAgg(Tables.lineitem(s, d), k, seed).orderedBy("l_returnflag")
-  }
 
   /** The sketch aggregation body shared by the batch query and its
     * streaming bridge twin. */
@@ -202,7 +200,6 @@ object Stats {
     * O(k) however long the stream runs. */
   def quantileSketchStreamed(s: SparkSession, d: String): DataFrame =
     Tables.runStreamComplete(s, "sketch_streamed_") { cs =>
-      graft.expr.GraftFunctions.register(cs)
       sketchAgg(Tables.lineitemStream(cs, d), 256, 7)
     }.orderedBy("l_returnflag")
 
@@ -296,8 +293,7 @@ object Stats {
     * HashAggregate with an 17-byte buffer, map-side partials, whole-stage
     * codegen — no sort anywhere. The oracle replays the tie rule with
     * exactly that window formulation. */
-  def latestByKey(s: SparkSession, d: String): DataFrame = {
-    graft.expr.GraftFunctions.register(s)
+  def latestByKey(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .select(col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("us"), col("value"))
@@ -306,7 +302,6 @@ object Stats {
         max(col("us")).as("last_us"),
         count(lit(1)).as("n"))
       .orderedBy("user_id", "event_type")
-  }
 
   private def latestByKeyOracle: String =
     """WITH e AS (

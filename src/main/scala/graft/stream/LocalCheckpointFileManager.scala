@@ -10,8 +10,8 @@ import graft.core.LocalPublish
   * `LocalFileSystem`: temp files, publishes and directories go through
   * [[graft.core.LocalPublish]] (same names, same `.crc`); a lost claim throws
   * Hadoop's `FileAlreadyExistsException`. Reads, listings and deletes stay
-  * on `FileContext`, other filesystems on Spark's code. Installed by
-  * [[graft.expr.GraftFunctions.register]]. */
+  * on `FileContext`, other filesystems on Spark's code. The default manager
+  * of every session, set by [[graft.GraftExtensionsProvider]]. */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileContextBasedCheckpointFileManager(path, hadoopConf) {
 

@@ -24,7 +24,9 @@ object StatefulCandles {
 
   final case class KeyState(open: Map[Long, OhlcBuf], maxTs: Long)
 
-  def windowStartMs(tsMs: Long, windowMs: Long): Long = tsMs - tsMs % windowMs
+  /** Start of the window holding `tsMs`, floored like Spark's `window()`:
+    * a pre-epoch trade at -1 ms opens [-window, 0), not [0, window). */
+  def windowStartMs(tsMs: Long, windowMs: Long): Long = tsMs - Math.floorMod(tsMs, windowMs)
 
   /** Pure per-batch state transition — unit-testable without a stream. */
   def advance(

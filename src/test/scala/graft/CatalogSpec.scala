@@ -424,7 +424,6 @@ class CatalogSpec extends SparkTestBase {
   }
 
   test("hll_distinct: an all-null group estimates 0, matching count(DISTINCT)") {
-    graft.expr.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(("a", Option(1L)), ("a", Option(2L)),
       ("b", None: Option[Long]), ("b", None: Option[Long]))

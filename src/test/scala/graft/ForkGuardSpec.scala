@@ -7,7 +7,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.consumer.{RecordedEvent, RecordingStream}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.source.{TradeLogFormat, TradeLogMaintenance}
 import graft.stream.TradeFiles
@@ -48,6 +49,9 @@ class ForkGuardSpec extends SparkTestBase {
     val in = Files.createDirectory(root.resolve("in")).toString
     val log = root.resolve("log").toString
     tradelogWrite(log, 1, "overwrite")
+    val plain = Files.createDirectory(root.resolve("plain"))
+    Files.write(plain.resolve("kv.json"),
+      (0 until 6).map(i => s"""{"k": "k${i % 2}", "v": $i}""").asJava)
 
     val starts = new ConcurrentLinkedQueue[(String, Seq[String])]()
     val marked = new CountDownLatch(1)
@@ -67,10 +71,18 @@ class ForkGuardSpec extends SparkTestBase {
         (0 until 3).map(i => s"t$i.json" -> TradeFiles.batch(i))) {
         (_, _, _, _) => rows += 1
       }
+      // a child session whose plan calls no graft function
+      var groups = 0L
+      spark.newSession().readStream.schema("k STRING, v LONG").json(plain.toString)
+        .groupBy("k").count()
+        .writeStream.outputMode("complete")
+        .option("checkpointLocation", root.resolve("checkpoint-plain").toString)
+        .foreachBatch { (b: DataFrame, _: Long) => groups += b.count() }
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
       tradelogWrite(log, 2, "append")
       TradeLogMaintenance.optimize(spark, log, blockRows = 4)(
         _.repartition(1).sortWithinPartitions("ts"))
-      assert(rows > 0)
+      assert(rows > 0 && groups == 2)
 
       new ForkGuardMark().commit()
       assert(marked.await(60, TimeUnit.SECONDS), "the recording stalled")

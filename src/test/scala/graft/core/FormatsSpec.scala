@@ -101,7 +101,6 @@ class FormatsSpec extends SparkTestBase {
     val byLen = rows.map(r => r.getLong(1) -> r.getAs[Array[Byte]]("content")).toMap
     assert(byLen(5L).toSeq == Seq[Byte](1, 2, 3, 4, 5) && byLen(2L).toSeq == Seq[Byte](9, 8))
     // the binary content column feeds the multimodal byte folds directly
-    graft.expr.GraftFunctions.register(spark)
     val feat = Formats.readBinaryFiles(spark, dir, glob = "*.img")
       .select(org.apache.spark.sql.functions.call_function(
         "byte_sum", col("content")).as("s"))

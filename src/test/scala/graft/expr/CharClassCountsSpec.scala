@@ -12,7 +12,6 @@ class CharClassCountsSpec extends SparkTestBase {
   import spark.implicits._
 
   test("char_class_counts matches the replace() formulation, UTF-8 included") {
-    GraftFunctions.register(spark)
     val classes = ('a' to 'z') ++ ('0' to '9')
     val texts = Seq(
       "hello world 123",

@@ -15,7 +15,6 @@ class CollectUpToSpec extends SparkTestBase {
   import spark.implicits._
 
   test("collect_up_to below cap == sorted collect_list, invariant to partitioning") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(19)
     val rows = (0 until 3000).map(i => (s"g${i % 40}", rnd.nextLong(1L << 40)))
     val df = rows.toDF("g", "v")
@@ -31,7 +30,6 @@ class CollectUpToSpec extends SparkTestBase {
   }
 
   test("collect_up_to saturates at exactly k for over-cap groups, any partitioning") {
-    GraftFunctions.register(spark)
     // one hot group (500 members) next to kept-size groups — the dedup shape
     val rows = (0 until 500).map(i => ("hot", i.toLong)) ++
       Seq(("a", 1L), ("a", 2L), ("b", 7L))
@@ -61,7 +59,6 @@ class CollectUpToSpec extends SparkTestBase {
   }
 
   test("plans as ObjectHashAggregate with partial aggregation (capped buffers map-side)") {
-    GraftFunctions.register(spark)
     val df = Seq(("a", 1L), ("a", 2L)).toDF("g", "v")
     val plan = df.groupBy($"g").agg(expr("collect_up_to(v, 3)"))
       .queryExecution.executedPlan.toString

@@ -11,7 +11,6 @@ class SampleKSpec extends SparkTestBase {
   import spark.implicits._
 
   test("sample_bottom_k equals brute-force bottom-k, invariant to partitioning") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (0 until 2000).map(i => (s"g${i % 3}", rnd.nextLong(1L << 40), i.toLong))
     val df = rows.toDF("g", "pri", "v")
@@ -27,7 +26,6 @@ class SampleKSpec extends SparkTestBase {
   }
 
   test("sample_bottom_k: k >= group size returns the whole group; ObjectHashAggregate plans") {
-    GraftFunctions.register(spark)
     val df = Seq(("a", 5L, 1L), ("a", 3L, 2L), ("b", 1L, 9L)).toDF("g", "pri", "v")
     val got = df.groupBy($"g").agg(expr("sample_bottom_k(pri, v, 10)").as("s"))
       .collect().map(r => r.getString(0) -> r.getSeq[Long](1).toSeq).toMap
@@ -39,7 +37,6 @@ class SampleKSpec extends SparkTestBase {
   }
 
   test("sample_bottom_k: hash-priority sampling is seeded and reproducible") {
-    GraftFunctions.register(spark)
     val df = (0 until 500).map(_.toLong).toDF("v")
     def sample(seed: Int) = df
       .withColumn("pri",

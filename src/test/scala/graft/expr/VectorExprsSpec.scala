@@ -14,7 +14,6 @@ class VectorExprsSpec extends SparkTestBase {
     Seq.fill(dim)(rnd.nextDouble() * 2 - 1)
 
   test("vec_argmax_cos matches the interpreted HOF argmax bit-for-bit") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val dim = 16
     val cents = (0L until 6L).map(c => (c, randVec(rnd, dim)))
@@ -39,7 +38,6 @@ class VectorExprsSpec extends SparkTestBase {
   }
 
   test("vec_argmax_cos: equal scores pick the lowest cid; empty list is null") {
-    GraftFunctions.register(spark)
     // cids 5 and 2 carry the SAME vector → identical cosine; 2 must win
     val cents = Seq((5L, Seq(1.0, 0.0)), (2L, Seq(1.0, 0.0)), (9L, Seq(0.0, 1.0)))
     val cs = cents.toDF("cid", "ce")

@@ -71,7 +71,6 @@ class DedupPropertiesSpec extends SparkTestBase {
       corpus.createOrReplaceTempView("documents_prop")
 
       // run the same pipeline against the in-memory corpus
-      graft.expr.GraftFunctions.register(spark)
       val docsTok = corpus.select(col("doc_id"),
         TextStats.tokens(col("text")).as("toks"))
       val sh = docsTok.select(col("doc_id"), TextStats.shinglesExpr("toks").as("sh"))
@@ -173,7 +172,6 @@ class DedupPropertiesSpec extends SparkTestBase {
     ) ++ (5L to 16L).map(id =>
       id -> (words(id.toInt, 4) ++ boiler ++ words(id.toInt + 20, 4)))).map(mk)
     val docs = corpus.toDF("doc_id", "text")
-    graft.expr.GraftFunctions.register(spark)
     val got = Dedup.substrPairsFrom(docs, n, maxDf = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 2L)),
@@ -198,7 +196,6 @@ class DedupPropertiesSpec extends SparkTestBase {
         (0 until 24).map(i => s"q$i")).mkString(" "),
       3L -> (0 until 40).map(i => s"z$i").mkString(" "))
     val docs = corpus.toDF("doc_id", "text")
-    graft.expr.GraftFunctions.register(spark)
     val got = Dedup.containPairsFrom(docs, threshold = 0.5, maxDf = 10,
       minShared = 2).collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
@@ -241,7 +238,6 @@ class DedupPropertiesSpec extends SparkTestBase {
     // and the shorter-than-w+2 empty guard. Random lengths 0..20 cover the
     // guard boundary (w=4 → docs under 6 tokens must yield empty sets and
     // be filtered by callers).
-    graft.expr.GraftFunctions.register(spark)
     val w = 4
     val genDoc = Gen.choose(0, 20).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf(vocab)).map(_.mkString(" ")))
@@ -432,7 +428,6 @@ class DedupPropertiesSpec extends SparkTestBase {
       assert(jaccard(x, y) >= 0.8, "fixture pair must clear the threshold")
       Set((100L, 101L))
     }
-    graft.expr.GraftFunctions.register(spark)
     for (parts <- Seq(1, 8, 32)) {
       val docs = corpus.toDF("doc_id", "text").repartition(parts)
       val got = Dedup.ngramPairsFor(docs, threshold = 0.8, maxDf = 10,

@@ -13,7 +13,6 @@ class LlmSpec extends SparkTestBase {
     "the quick brown fox jumps over the lazy dog and runs far away home tonight"
 
   test("shinglesExpr: 3-gram count, distinctness, and short-text guard") {
-    graft.expr.GraftFunctions.register(spark)
     val df = Seq(
       (1L, "a b c d"),     // 2 shingles
       (2L, "a b"),         // shorter than n → empty, NOT a descending sequence
@@ -29,7 +28,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("near-dup: catches a near-copy, ignores an unrelated doc") {
-    graft.expr.GraftFunctions.register(spark)
     val docs = Seq(
       (0L, base),
       (1L, base + " extra"),                       // near-copy of 0
@@ -343,7 +341,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("cosine: hand-computable vectors") {
-    graft.expr.GraftFunctions.register(spark)
     val df = Seq(
       (Array(1.0, 0.0), Array(0.0, 1.0)),  // orthogonal → 0
       (Array(1.0, 2.0), Array(2.0, 4.0)),  // parallel → 1
@@ -367,7 +364,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("multimodal: P6 decode parses dims from the packed header and channel-folds the pixels") {
-    graft.expr.GraftFunctions.register(spark)
     // 2 frames of 96 bytes: frame 0 all 'A' (65), frame 1 all 'z' (122)
     val text = "A" * 96 + "z" * 96 + "tail-ignored"
     val dir = java.nio.file.Files.createTempDirectory("graft-ppm").toString
@@ -389,7 +385,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("multimodal: corrupted P6 header decodes to NULL dims, never throws") {
-    graft.expr.GraftFunctions.register(spark)
     val good = Multimodal.packAsPpm(
       Seq((1L, "x" * 96, "en", "a", 96L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
@@ -415,7 +410,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("bpe_count: hand-computed runs, whitespace, unicode codepoints") {
-    graft.expr.GraftFunctions.register(spark)
     val cases = Seq(
       ("hello world", 4L),   // 2 letter runs of 5 → 2+2
       ("abc123!!", 3L),      // letters(3)+digits(3)+punct(2) → 1+1+1
@@ -435,7 +429,6 @@ class LlmSpec extends SparkTestBase {
   test("bpe_count: equals the regex HOF formulation on the real corpus") {
     // the oracle replays the regex form in DuckDB; this proves the native
     // byte-loop and Spark's own regex engine agree doc-for-doc
-    graft.expr.GraftFunctions.register(spark)
     val twin = expr(
       """aggregate(regexp_extract_all(text,
         |  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r\\f]+', 0),
@@ -447,7 +440,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("bpe_count: randomized strings match an independent Scala regex reference") {
-    graft.expr.GraftFunctions.register(spark)
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // mixed alphabet: ASCII letters/digits/punct, whitespace incl. the
@@ -473,7 +465,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("word_shingles multiplicity flag: duplicates kept in position order") {
-    graft.expr.GraftFunctions.register(spark)
     val r = Seq(Tuple1("x y x y x")).toDF("text")
       .select(TextStats.tokens(col("text")).as("toks"))
       .select(expr("word_shingles(toks, 2, false)").as("all"),
@@ -500,7 +491,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("char_shingles: equals the sequence/substring HOF formulation on the real corpus") {
-    graft.expr.GraftFunctions.register(spark)
     val diff = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(lower(col("text")).as("c"))
       .filter(length(col("c")) >= 3)
@@ -537,7 +527,6 @@ class LlmSpec extends SparkTestBase {
   }
 
   test("repetition quality: degenerate doc flagged, varied doc clean") {
-    graft.expr.GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "spam spam spam spam spam"),              // top token 5/5
       (2L, "buy now buy now buy now buy now"),       // top bigram 4/8

@@ -9,7 +9,6 @@ class PgmSpec extends SparkTestBase {
   import spark.implicits._
 
   test("byte folds: sum/min/max over known bytes, null on empty") {
-    graft.expr.GraftFunctions.register(spark)
     val out = Seq(("abcA", ""), ("zz", "")).toDF("s", "empty")
       .select(
         expr("byte_sum(CAST(s AS BINARY))").as("sum"),
@@ -68,7 +67,6 @@ class PgmSpec extends SparkTestBase {
   }
 
   test("a corrupted header yields null features through the real decode chain") {
-    graft.expr.GraftFunctions.register(spark)
     // flip the magic byte: the REAL decoder must produce null dims and
     // null pixel stats (ANSI cast would otherwise throw on ''), never a
     // silently mis-decoded number; absurd-but-syntactic dims must degrade
@@ -88,7 +86,6 @@ class PgmSpec extends SparkTestBase {
   }
 
   test("pgm_shrink: a handcrafted 4x2 bitmap averages its 2x2 blocks exactly") {
-    graft.expr.GraftFunctions.register(spark)
     // rows: [10 20 30 40] / [50 60 70 80] -> blocks avg (10+20+50+60)/4=35,
     // (30+40+70+80)/4=55; short payload -> null
     val bm = Array[Byte](10, 20, 30, 40, 50, 60, 70, 80)
@@ -99,7 +96,6 @@ class PgmSpec extends SparkTestBase {
   }
 
   test("corrupted WAV payloads degrade, never crash, through the real audio chain") {
-    graft.expr.GraftFunctions.register(spark)
     def wav(magic: String, lenBytes: Array[Byte], samples: String): Array[Byte] = {
       val head = (magic + "????WAVEfmt ").getBytes("UTF-8") ++
         Array[Byte](16, 0, 0, 0, 1, 0, 1, 0) ++

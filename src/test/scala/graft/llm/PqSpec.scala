@@ -13,7 +13,6 @@ class PqSpec extends SparkTestBase {
   private val d001 = "/root/testdata/sf0.001"
 
   test("vec_argmin_l2: picks the L2-nearest entry, not the cosine-nearest; ties break low") {
-    graft.expr.GraftFunctions.register(spark)
     // x = (1,1). cid 0 = (10,10): SAME direction (cosine 1.0) but far in L2
     // (n2-2dot = 200-40 = 160); cid 1 = (0,1): L2-nearer (1-2 = -1) though
     // cosine-worse — the L2 argmin must pick 1 where the cosine argmax
@@ -132,7 +131,6 @@ class PqSpec extends SparkTestBase {
     // native expr.PqRecon. Same inputs (the real trained codebook map +
     // real codes over the driver corpus), both formulations projected
     // side by side — every reconstructed vector must match exactly.
-    graft.expr.GraftFunctions.register(spark)
     val m = SimilarityPq.m
     // the REAL trained chain's coded frame: (vec_id, cm, c1..cm)
     val enc = SimilarityPq.codedForSpec(spark, d001)

@@ -36,7 +36,6 @@ class OhlcAggregatorSpec extends SparkTestBase {
   }
 
   test("declarative and object-buffered ordered aggregates agree (incl. ties, nulls, partitions)") {
-    graft.expr.GraftFunctions.register(spark)
     // seeded generator: heavy ts ties (7 distinct ts), duplicate prices,
     // and interleaved null prices that both variants must skip
     val rnd = new scala.util.Random(7)

@@ -142,7 +142,7 @@ class OhlcPropertiesSpec extends SparkTestBase {
       (0L, t, 1L, "x", 9.0, "{}"),  // tier slice (event_id % 5 != 4)
       (4L, t, 1L, "x", 3.0, "{}"))  // increment slice
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val got = graft.Catalog.tierIncrFrom(spark, ev,
+    val got = graft.Catalog.tierIncrFrom(ev,
       col("event_id") % lit(5) === 4).collect()
     assert(got.length == 1)
     val r = got.head
@@ -153,7 +153,7 @@ class OhlcPropertiesSpec extends SparkTestBase {
     // one-sided minute: increment-only rows pass through unchanged
     val ev2 = Seq((4L, t, 1L, "x", 5.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val r2 = graft.Catalog.tierIncrFrom(spark, ev2,
+    val r2 = graft.Catalog.tierIncrFrom(ev2,
       col("event_id") % lit(5) === 4).collect().head
     assert(r2.getDouble(2) == 5.0 && r2.getDouble(5) == 5.0)
   }

@@ -7,36 +7,19 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
+  FileContextBasedCheckpointFileManager}
 
 import graft.SparkTestBase
-import graft.expr.GraftFunctions
 
 /** A checkpoint outlives its file manager: one query restarted on the same
   * checkpoint under Spark's manager, then graft's, then Spark's again
   * emits the candles an uninterrupted run emits, and every `.crc` either
-  * manager wrote verifies. Also the install rule of
-  * [[GraftFunctions.register]]. */
+  * manager wrote verifies. */
 class CheckpointRestartSpec extends SparkTestBase {
 
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
   private val SparkManager = classOf[FileContextBasedCheckpointFileManager].getName
-  private val GraftManager = classOf[LocalCheckpointFileManager].getName
-
-  test("register installs graft's manager on a session that names none, " +
-      "leaves an explicit setting alone, and is idempotent") {
-    val fresh = spark.newSession()
-    assert(fresh.conf.getOption(Key).isEmpty)
-    GraftFunctions.register(fresh)
-    assert(fresh.conf.get(Key) == GraftManager)
-    GraftFunctions.register(fresh)
-    assert(fresh.conf.get(Key) == GraftManager)
-
-    val explicit = spark.newSession()
-    explicit.conf.set(Key, SparkManager)
-    GraftFunctions.register(explicit)
-    assert(explicit.conf.get(Key) == SparkManager)
-  }
 
   private def sparkManaged(): SparkSession = {
     val s = spark.newSession()
@@ -73,7 +56,8 @@ class CheckpointRestartSpec extends SparkTestBase {
       sparkManaged() -> files.take(3),
       graftSession -> files.slice(3, 6),
       sparkManaged() -> files.drop(6)))
-    assert(graftSession.conf.get(Key) == GraftManager)
+    assert(CheckpointFileManager.create(new Path(ckpt.toUri),
+      graftSession.sessionState.newHadoopConf()).getClass == classOf[LocalCheckpointFileManager])
 
     val expected = fold(whole)
     assert(expected.size >= 8 * 3, expected.keys)

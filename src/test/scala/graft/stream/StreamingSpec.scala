@@ -514,6 +514,24 @@ class StreamingSpec extends SparkTestBase {
     assert(emitted.values.forall(_ == 1), s"duplicate emissions: $emitted")
   }
 
+  test("StatefulCandles.windowStartMs floors pre-epoch trades into the window Spark's window() gives") {
+    import graft.ohlc.Trade
+    val w = 60000L
+    assert(Seq(-1L, -60000L, 59999L).map(StatefulCandles.windowStartMs(_, w)) ==
+      Seq(-60000L, -60000L, 0L))
+    val trades = Seq(-120001L, -60001L, -60000L, -1L, 0L, 59999L, 60000L)
+      .zipWithIndex.map { case (ms, i) => Trade("a", new java.sql.Timestamp(ms), 1.0 + i, 1.0 + i) }
+    // a trade ten windows on closes every window before it
+    val closer = Trade("a", new java.sql.Timestamp(10 * w), 99.0, 1.0)
+    val (_, stateful) = StatefulCandles.advance("a", (trades :+ closer).iterator, None, w, 0L)
+    val batch = OhlcPipeline.candles(trades.toDS().toDF()).collect().map(r =>
+      (r.getTimestamp(1).getTime, r.getDouble(3), r.getDouble(4), r.getDouble(5),
+        r.getDouble(6), r.getDouble(7))).toSet
+    assert(batch.map(_._1) == Set(-180000L, -120000L, -60000L, 0L, 60000L))
+    assert(stateful.map(c =>
+      (c.start_ts.getTime, c.open, c.high, c.low, c.close, c.volume)).toSet == batch)
+  }
+
   test("stream-static join: dim enrichment broadcasts — no stateful join state") {
     implicit val ctx = spark.sqlContext
     val input = MemoryStream[(String, Long, Double)]

@@ -1,178 +1,31 @@
 package graft.expr
 
-import java.nio.ByteBuffer
-
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, Expression, ExpressionInfo, GreaterThan, If, IsNotNull, LessThan, Literal, Not, Or, UnixMicros}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{DeclarativeAggregate, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types._
-
-/** Mutable (key, value) pair tracked by the ordered-first/last aggregates.
-  * `set=false` = empty group so far (all-null input stays null). */
-final class OrderedPair(var ts: Long, var price: Double, var set: Boolean)
-    extends Serializable
-
-/** Catalyst's double total order (NaN == NaN, NaN greater than every other
-  * value, -0.0 == 0.0 — the `nanSafeCompareDoubles` semantics Catalyst's
-  * LessThan/GreaterThan codegen uses for doubles). The imperative twins
-  * tie-break through THIS, not Java primitive `<`/`>` (where any NaN
-  * comparison is false), so `first_by_ordered_obj` and the declarative
-  * default can never diverge when NaN prices share the winning ts.
-  * java.lang.Double.compare alone would also differ: it orders
-  * -0.0 < 0.0, which Catalyst does not. */
-private[expr] object NanSafeOrd {
-  def compare(x: Double, y: Double): Int = {
-    val xn = java.lang.Double.isNaN(x)
-    val yn = java.lang.Double.isNaN(y)
-    if ((xn && yn) || x == y) 0
-    else if (xn) 1
-    else if (yn) -1
-    else if (x > y) 1 else -1
-  }
-}
-
-/** Shared analysis-time signature check for BOTH ordered-aggregate families
-  * — one source of truth, so the declarative default and the `*_obj` twin
-  * (cross-checked row-for-row in tests) can never drift in what they
-  * accept. */
-private[expr] object OrderedByTypes {
-  def check(tsExpr: Expression, priceExpr: Expression,
-            prettyName: String): TypeCheckResult = tsExpr.dataType match {
-    case ByteType | ShortType | IntegerType | LongType | TimestampType =>
-      priceExpr.dataType match {
-        case DoubleType => TypeCheckResult.TypeCheckSuccess
-        case other => TypeCheckResult.TypeCheckFailure(
-          s"$prettyName value argument must be DOUBLE, got ${other.sql}")
-      }
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName ordering argument must be integral or TIMESTAMP, got ${other.sql}")
-  }
-}
 
 /** Single-pass ordered first/last aggregate (SURVEY.md §7.3): the price at
   * the lexicographically smallest/largest (ts, price) — the reference's OHLC
   * open/close semantics (main.py:153-158: array_sort of (t, p) structs is
   * lexicographic; ties on t resolve to lowest price for open, highest for
-  * close).
+  * close). Prices compare through Catalyst's `LessThan`/`GreaterThan`, so
+  * NaN ties follow Catalyst's double order (NaN above every other value).
   *
   * Why not `min_by(price, struct(ts, price))`: the struct ordering key makes
   * the aggregation buffer non-mutable, so Spark plans **SortAggregate** —
-  * every input row gets sorted by the grouping key before aggregation. This
-  * TypedImperativeAggregate keeps a 17-byte (long, double, set) buffer →
-  * **ObjectHashAggregateExec**: hash-based, partial-aggregable map-side,
-  * no sort of the fact stream. Identical tie semantics, hash-identical
-  * output (verified against the same DuckDB oracle as the min_by path).
+  * every input row gets sorted by the grouping key before aggregation. Here
+  * the buffer is three mutable PRIMITIVE attributes (long, double, boolean)
+  * and every update/merge is a pure Catalyst expression, so Spark plans
+  * **HashAggregateExec inside whole-stage codegen**: hash-based,
+  * partial-aggregable map-side, no sort of the fact stream, no buffer
+  * serialization between partial and final. Identical tie semantics,
+  * hash-identical output (verified against the same DuckDB oracle as the
+  * min_by path).
   *
-  * `ts` is any integral or timestamp(-µs) column — widened to long via
-  * Number (an int ts evaluates to java.lang.Integer) — `price` double;
-  * anything else is rejected at analysis time by checkInputDataTypes.
-  */
-abstract class OrderedByBase extends TypedImperativeAggregate[OrderedPair] {
-  // no-arg abstract base: Java deserialization of the task-serialized
-  // expression requires a no-arg constructor on non-case ancestors
-  def tsExpr: Expression
-  def priceExpr: Expression
-
-  /** true if (ts, p) should replace the current buffer content. */
-  protected def replaces(buf: OrderedPair, ts: Long, p: Double): Boolean
-
-  override def children: Seq[Expression] = Seq(tsExpr, priceExpr)
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    OrderedByTypes.check(tsExpr, priceExpr, prettyName)
-
-  override def createAggregationBuffer(): OrderedPair =
-    new OrderedPair(0L, 0.0, false)
-
-  override def update(buf: OrderedPair, input: InternalRow): OrderedPair = {
-    val tsVal = tsExpr.eval(input)
-    val pVal = priceExpr.eval(input)
-    if (tsVal != null && pVal != null) {
-      // integral widths accepted by checkInputDataTypes all box as Number;
-      // TimestampType evaluates to a java.lang.Long of epoch-µs
-      val ts = tsVal.asInstanceOf[Number].longValue
-      val p = pVal.asInstanceOf[Double]
-      if (!buf.set || replaces(buf, ts, p)) {
-        buf.ts = ts; buf.price = p; buf.set = true
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: OrderedPair, other: OrderedPair): OrderedPair = {
-    if (other.set && (!buf.set || replaces(buf, other.ts, other.price))) {
-      buf.ts = other.ts; buf.price = other.price; buf.set = true
-    }
-    buf
-  }
-
-  override def eval(buf: OrderedPair): Any =
-    if (buf.set) buf.price else null
-
-  override def serialize(buf: OrderedPair): Array[Byte] = {
-    val bb = ByteBuffer.allocate(17)
-    bb.putLong(buf.ts).putDouble(buf.price).put(if (buf.set) 1.toByte else 0.toByte)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): OrderedPair = {
-    val bb = ByteBuffer.wrap(bytes)
-    new OrderedPair(bb.getLong, bb.getDouble, bb.get() == 1.toByte)
-  }
-}
-
-/** Price at the lexicographically-smallest (ts, price): OHLC `open`. */
-case class FirstByOrdered(
-    tsExpr: Expression,
-    priceExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends OrderedByBase {
-  override protected def replaces(buf: OrderedPair, ts: Long, p: Double): Boolean =
-    ts < buf.ts || (ts == buf.ts && NanSafeOrd.compare(p, buf.price) < 0)
-  override def prettyName: String = "first_by_ordered"
-  override def withNewMutableAggBufferOffset(offset: Int): FirstByOrdered =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): FirstByOrdered =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): FirstByOrdered =
-    copy(tsExpr = c(0), priceExpr = c(1))
-}
-
-/** Price at the lexicographically-largest (ts, price): OHLC `close`. */
-case class LastByOrdered(
-    tsExpr: Expression,
-    priceExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0
-) extends OrderedByBase {
-  override protected def replaces(buf: OrderedPair, ts: Long, p: Double): Boolean =
-    ts > buf.ts || (ts == buf.ts && NanSafeOrd.compare(p, buf.price) > 0)
-  override def prettyName: String = "last_by_ordered"
-  override def withNewMutableAggBufferOffset(offset: Int): LastByOrdered =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): LastByOrdered =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): LastByOrdered =
-    copy(tsExpr = c(0), priceExpr = c(1))
-}
-
-/** Ordered first/last as a **DeclarativeAggregate**: the same (ts, price)
-  * lexicographic semantics as [[OrderedByBase]], but the buffer is three
-  * mutable PRIMITIVE attributes (long, double, boolean) and every
-  * update/merge is a pure Catalyst expression — so Spark plans
-  * **HashAggregateExec inside whole-stage codegen** (no per-row interpreted
-  * `eval`, no buffer serialization between partial and final).
-  *
-  * This is the registered default for `first_by_ordered`/`last_by_ordered`
-  * (the OHLC hot path); the TypedImperativeAggregate twin stays registered
-  * under `*_obj` as the pattern sketch-style aggregates (HLL, reservoirs —
-  * genuinely object-buffered state) need, and the two are cross-checked
-  * row-for-row in tests.
+  * `ts` is any integral or timestamp(-µs) column, `price` double; anything
+  * else is rejected at analysis time by checkInputDataTypes.
   */
 abstract class OrderedByDeclBase extends DeclarativeAggregate {
   def tsExpr: Expression
@@ -186,8 +39,16 @@ abstract class OrderedByDeclBase extends DeclarativeAggregate {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    OrderedByTypes.check(tsExpr, priceExpr, prettyName)
+  override def checkInputDataTypes(): TypeCheckResult = tsExpr.dataType match {
+    case ByteType | ShortType | IntegerType | LongType | TimestampType =>
+      priceExpr.dataType match {
+        case DoubleType => TypeCheckResult.TypeCheckSuccess
+        case other => TypeCheckResult.TypeCheckFailure(
+          s"$prettyName value argument must be DOUBLE, got ${other.sql}")
+      }
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName ordering argument must be integral or TIMESTAMP, got ${other.sql}")
+  }
 
   /** ts widened to long µs-safely: Cast(timestamp AS long) would truncate
     * to SECONDS — UnixMicros keeps the full ordering resolution. */
@@ -268,17 +129,10 @@ object GraftFunctions {
   private def info(cls: Class[_], name: String) = new ExpressionInfo(cls.getName, name)
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    // default = DeclarativeAggregate (HashAggregate, whole-stage codegen)
     (FunctionIdentifier("first_by_ordered"), info(classOf[FirstByOrderedDecl], "first_by_ordered"),
       (children: Seq[Expression]) => FirstByOrderedDecl(children(0), children(1))),
     (FunctionIdentifier("last_by_ordered"), info(classOf[LastByOrderedDecl], "last_by_ordered"),
       (children: Seq[Expression]) => LastByOrderedDecl(children(0), children(1))),
-    // object-buffered twin (ObjectHashAggregate) — the shape sketch-style
-    // aggregates need; kept registered and cross-checked against the default
-    (FunctionIdentifier("first_by_ordered_obj"), info(classOf[FirstByOrdered], "first_by_ordered_obj"),
-      (children: Seq[Expression]) => FirstByOrdered(children(0), children(1))),
-    (FunctionIdentifier("last_by_ordered_obj"), info(classOf[LastByOrdered], "last_by_ordered_obj"),
-      (children: Seq[Expression]) => LastByOrdered(children(0), children(1))),
     (FunctionIdentifier("vec_dot"), info(classOf[DotProduct], "vec_dot"),
       (children: Seq[Expression]) => DotProduct(children(0), children(1))),
     (FunctionIdentifier("vec_argmax_cos"), info(classOf[CosArgMax], "vec_argmax_cos"),

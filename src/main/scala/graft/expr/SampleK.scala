@@ -37,12 +37,11 @@ final class SampleKBuf(val k: Int) extends Serializable {
   * `row_number() OVER (ORDER BY pri, val) <= k`. Seeding = salting the
   * hashed identity string.
   *
-  * This is the object-buffered TypedImperativeAggregate shape
-  * ([[OrderedByBase]]'s `*_obj` twin) put to its real use: sketch-style
-  * state (a bounded heap) that a DeclarativeAggregate's fixed-width mutable
-  * buffer cannot hold. Plans as ObjectHashAggregateExec — hash-based with
-  * map-side partial aggregation, so only O(k) pairs per group cross the
-  * exchange regardless of input size.
+  * An object-buffered TypedImperativeAggregate because the state is
+  * sketch-style (a bounded heap) and a DeclarativeAggregate's fixed-width
+  * mutable buffer cannot hold it. Plans as ObjectHashAggregateExec —
+  * hash-based with map-side partial aggregation, so only O(k) pairs per
+  * group cross the exchange regardless of input size.
   */
 case class SampleK(
     priExpr: Expression,

@@ -63,8 +63,8 @@ object OhlcPipeline {
     * stream; `candles` uses the custom DeclarativeAggregate
     * (graft.expr.FirstByOrderedDecl — primitive buffer, HashAggregate,
     * whole-stage codegen) instead. Both are oracle-checked (q_ohlc_1m /
-    * q_ohlc_minby), and the object-buffered `*_obj` twin is cross-checked
-    * in OhlcAggregatorSpec. */
+    * q_ohlc_minby); OhlcAggregatorSpec checks the custom aggregate against a
+    * plain Scala model as well. */
   def openExpr(ts: Column, price: Column): Column = min_by(price, struct(ts, price))
   def closeExpr(ts: Column, price: Column): Column = max_by(price, struct(ts, price))
 

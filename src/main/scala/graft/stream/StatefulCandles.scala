@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.ohlc.{Candle, OhlcAggregator, OhlcBuf, Trade}
+import graft.ohlc.{Candle, OhlcBuf, OhlcFold, Trade}
 
 /** Arbitrary-stateful candle construction via flatMapGroupsWithState
   * (SURVEY §2.3's "not present in reference" extension list): per base
@@ -16,9 +16,8 @@ import graft.ohlc.{Candle, OhlcAggregator, OhlcBuf, Trade}
   * tombstones, per-symbol lateness) is needed.
   *
   * State per key: open windows only — bounded by (lateness / window) + 1
-  * entries, eviction on every batch. The candle math reuses
-  * OhlcAggregator's buffer/merge, so the tie rule is identical to the
-  * batch and SQL paths.
+  * entries, eviction on every batch. The candle math is OhlcFold's
+  * buffer/merge, so the tie rule is identical to the batch and SQL paths.
   */
 object StatefulCandles {
 
@@ -55,8 +54,8 @@ object StatefulCandles {
             windowStartMs(ts, windowMs) + windowMs <= st0.maxTs - latenessMs) (open, mx)
         else {
           val ws = windowStartMs(ts, windowMs)
-          val buf = open.getOrElse(ws, OhlcAggregator.zero)
-          (open.updated(ws, OhlcAggregator.reduce(buf, t)), math.max(mx, ts))
+          val buf = open.getOrElse(ws, OhlcFold.zero)
+          (open.updated(ws, OhlcFold.reduce(buf, t)), math.max(mx, ts))
         }
     }
     closeUpTo(base, KeyState(openAfter, maxTs), maxTs - latenessMs, windowMs)
@@ -64,15 +63,15 @@ object StatefulCandles {
 
   /** Close (emit + evict) every open window whose end is at or before
     * `boundMs` — shared by the per-key data-driven eviction (bound =
-    * keyMaxTs - lateness) and the watermark-timeout path (bound = global
-    * watermark). */
+    * keyMaxTs - lateness) and TwsCandles' event-time timers (bound =
+    * global watermark). */
   def closeUpTo(base: String, st: KeyState, boundMs: Long,
                 windowMs: Long): (KeyState, List[Candle]) = {
     val (closed, stillOpen) = st.open.partition { case (ws, _) =>
       ws + windowMs <= boundMs
     }
     val candles = closed.toList.sortBy(_._1).map { case (ws, buf) =>
-      val (o, h, l, c, v) = OhlcAggregator.finish(buf)
+      val (o, h, l, c, v) = OhlcFold.finish(buf)
       Candle(base, new Timestamp(ws), new Timestamp(ws + windowMs), o, h, l, c, v)
     }
     (KeyState(stillOpen, st.maxTs), candles)
@@ -80,8 +79,11 @@ object StatefulCandles {
 
   /** Streaming wrapper: trades → closed candles, append semantics.
     * CAVEAT: eviction is driven by each key's OWN event time — a symbol
-    * that stops trading never closes its last window(s). Use
-    * [[closedCandlesIdleClose]] when stream tails must emit. */
+    * that stops trading never closes its last window(s). When stream
+    * tails must emit, close on the global watermark instead:
+    * [[TwsCandles.closedCandles]] (event-time timers, RocksDB store) or,
+    * on any state store, `OhlcPipeline.candles(..., watermark = Some(d))`
+    * in append mode. */
   def closedCandles(
       trades: Dataset[Trade],
       windowMs: Long = 60000L,
@@ -95,52 +97,6 @@ object StatefulCandles {
         (base: String, it: Iterator[Trade], state: GroupState[KeyState]) =>
           val (next, out) = advance(base, it, state.getOption, windowMs, latenessMs)
           state.update(next)
-          out.iterator
-      }
-  }
-
-  /** [[closedCandles]] plus idle-key closure via EventTimeTimeout: when the
-    * GLOBAL watermark (all keys' max event time minus the lateness delay)
-    * passes an open window's end, the window closes even if its own key
-    * went quiet — the stream-tail correctness the per-key variant cannot
-    * provide. After each batch the timeout is armed at the earliest open
-    * window end; on fire, every window at or before the watermark emits and
-    * fully-drained keys drop their state (bounded state for dead keys). */
-  def closedCandlesIdleClose(
-      trades: Dataset[Trade],
-      windowMs: Long = 60000L,
-      latenessMs: Long = 120000L
-  ): Dataset[Candle] = {
-    import trades.sparkSession.implicits._
-    trades
-      // milliseconds, not a seconds division — a sub-second lateness
-      // component must not silently shrink the watermark delay below the
-      // per-key bound advance() uses
-      .withWatermark("timestamp", s"$latenessMs milliseconds")
-      .groupByKey(_.base)
-      .flatMapGroupsWithState[KeyState, Candle](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (base: String, it: Iterator[Trade], state: GroupState[KeyState]) =>
-          val (next, out) =
-            if (state.hasTimedOut)
-              closeUpTo(base, state.get, state.getCurrentWatermarkMs(), windowMs)
-            else
-              advance(base, it, state.getOption, windowMs, latenessMs)
-          // Remove drained state on BOTH branches: a key whose windows all
-          // closed via the data path must not keep an empty KeyState with no
-          // timeout armed (EventTimeTimeout never fires without a registered
-          // timestamp — the state would leak forever). Dropping maxTs is
-          // safe: any trade that could target an already-emitted window is
-          // below the watermark and filtered before this function runs.
-          if (next.open.isEmpty) state.remove()
-          else {
-            state.update(next)
-            // arm at the earliest remaining close boundary, but never at
-            // or behind the current watermark (Spark rejects that)
-            val earliestEnd = next.open.keys.min + windowMs
-            state.setTimeoutTimestamp(
-              math.max(earliestEnd, state.getCurrentWatermarkMs() + 1))
-          }
           out.iterator
       }
   }

@@ -8,10 +8,11 @@ import StatefulCandles.KeyState
 /** OHLC candles on `transformWithState` — Spark 4's successor to
   * `flatMapGroupsWithState` for arbitrary stateful processing (typed state
   * variables + first-class timers instead of one state object + one
-  * timeout). Same semantics as [[StatefulCandles.closedCandlesIdleClose]],
-  * cross-checked against it in StreamingSpec; the per-batch transition is
-  * the SAME pure `advance`/`closeUpTo` code, so the tie rule and eviction
-  * bounds cannot drift between the two APIs.
+  * timeout). The per-batch transition is the SAME pure `advance`/
+  * `closeUpTo` code as [[StatefulCandles.closedCandles]], so the tie rule
+  * and eviction bounds cannot drift between the two APIs; what this engine
+  * adds is idle-key closure on the GLOBAL watermark (a symbol that stops
+  * trading still emits its last windows).
   *
   * What the new API buys at scale, demonstrated here:
   *   - named, independently-evolvable state variables (a `MapState` of
@@ -74,9 +75,11 @@ object TwsCandles {
 
     /** Surgical write-back: only changed windows update, closed windows
       * remove — per-entry RocksDB puts/deletes, not a whole-map rewrite
-      * (the point of MapState at scale). Drained keys drop ALL state
-      * (same leak guard as the flatMapGroupsWithState path); live keys
-      * re-arm at the earliest remaining close boundary. */
+      * (the point of MapState at scale). Drained keys drop ALL state, so
+      * a symbol that stops trading does not leak; dropping `maxTs` is safe
+      * because a trade that could target an already-emitted window is
+      * below the watermark and filtered before it reaches the processor.
+      * Live keys re-arm at the earliest remaining close boundary. */
     private def persist(prev: Option[KeyState], next: KeyState,
                         tv: TimerValues): Unit =
       if (next.open.isEmpty) { open.clear(); maxTs.clear() }
@@ -94,8 +97,7 @@ object TwsCandles {
   }
 
   /** Streaming entry: trades → closed candles, append semantics, idle-key
-    * closure via the global watermark (parity with
-    * [[StatefulCandles.closedCandlesIdleClose]]). */
+    * closure via the global watermark. */
   def closedCandles(
       trades: Dataset[Trade],
       windowMs: Long = 60000L,
@@ -103,6 +105,8 @@ object TwsCandles {
   ): Dataset[Candle] = {
     import trades.sparkSession.implicits._
     trades
+      // milliseconds, not a seconds division: a sub-second lateness must
+      // not shrink the watermark delay below the per-key bound of advance()
       .withWatermark("timestamp", s"$latenessMs milliseconds")
       .groupByKey(_.base)
       .transformWithState(

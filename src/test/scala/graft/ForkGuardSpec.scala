@@ -45,7 +45,7 @@ class ForkGuardSpec extends SparkTestBase {
 
   test("no process starts under a checkpoint file manager or a tradelog " +
       "publish") {
-    val root = Files.createTempDirectory("graft-forks")
+    val root = tempDir("graft-forks")
     val in = Files.createDirectory(root.resolve("in")).toString
     val log = root.resolve("log").toString
     tradelogWrite(log, 1, "overwrite")

@@ -24,7 +24,7 @@ class GraftExtensionsProviderSpec extends SparkTestBase {
   private val Key = "spark.sql.streaming.checkpointFileManagerClass"
 
   private def manager(s: SparkSession): Class[_] = {
-    val dir = Files.createTempDirectory("graft-provider").toUri
+    val dir = tempDir("graft-provider").toUri
     CheckpointFileManager.create(new Path(dir), s.sessionState.newHadoopConf()).getClass
   }
 
@@ -52,11 +52,11 @@ class GraftExtensionsProviderSpec extends SparkTestBase {
       assertInstalled(child, "newSession() child")
 
       var cloned: SparkSession = null
-      val in = Files.createTempDirectory("graft-provider-src")
+      val in = tempDir("graft-provider-src")
       child.range(3).toDF("v").write.mode("overwrite").parquet(in.toString)
       child.readStream.schema("v LONG").parquet(in.toString)
         .writeStream
-        .option("checkpointLocation", Files.createTempDirectory("graft-provider-ckpt").toString)
+        .option("checkpointLocation", tempDir("graft-provider-ckpt").toString)
         .foreachBatch { (b: DataFrame, _: Long) => cloned = b.sparkSession }
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
       assert(cloned != null && (cloned ne child), "the stream ran on its own session")

@@ -21,7 +21,7 @@ class ArtifactsSpec extends SparkTestBase {
     Seq((tag, 1L)).toDF("tag", "v").write.mode("overwrite").parquet(staging)
 
   test("publishOnce builds when absent, skips when published, rebuilds crash leftovers") {
-    val root = java.nio.file.Files.createTempDirectory("graft-art").toString
+    val root = tempDir("graft-art").toString
     val path = s"$root/merges/v1"
     var builds = 0
     def build(staging: String): Unit = { builds += 1; writeArtifact("a")(staging) }
@@ -44,7 +44,7 @@ class ArtifactsSpec extends SparkTestBase {
   }
 
   test("rename collision: the losing racer discards its staging dir, winner's artifact intact") {
-    val root = java.nio.file.Files.createTempDirectory("graft-art2").toString
+    val root = tempDir("graft-art2").toString
     val path = s"$root/merges/v1"
     assert(Artifacts.stageAndPublish(spark, path)(writeArtifact("winner")))
     // a second racer that already passed the exists-check builds and then
@@ -59,7 +59,7 @@ class ArtifactsSpec extends SparkTestBase {
   }
 
   test("a failed build leaves no staging debris and no artifact") {
-    val root = java.nio.file.Files.createTempDirectory("graft-art3").toString
+    val root = tempDir("graft-art3").toString
     val path = s"$root/merges/v1"
     val boom = intercept[RuntimeException] {
       Artifacts.publishOnce(spark, path) { staging =>
@@ -84,7 +84,7 @@ class ArtifactsSpec extends SparkTestBase {
     // drives publishOnce's lost-rename branch: the destination is taken by
     // a COMPLETE (marked) artifact after this caller decided to build —
     // publishOnce must defer to the winner instead of deleting it
-    val root = java.nio.file.Files.createTempDirectory("graft-art4").toString
+    val root = tempDir("graft-art4").toString
     val path = s"$root/merges/v1"
     var winnerPlanted = false
     Artifacts.publishOnce(spark, path) { staging =>
@@ -103,7 +103,7 @@ class ArtifactsSpec extends SparkTestBase {
       .filterNot(_ == keep).toSeq
 
   test("fingerprint is <dir>_<len>_<mtime> per table and changes only with its sources") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp").toString
+    val dir = tempDir("graft-fp").toString
     for (t <- Seq("a", "b"))
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$t.parquet"), t.getBytes)
     def file(t: String) = new Path(s"$dir/$t.parquet")
@@ -124,7 +124,7 @@ class ArtifactsSpec extends SparkTestBase {
   }
 
   test("publishOnce marks a build that wrote no _SUCCESS of its own") {
-    val root = java.nio.file.Files.createTempDirectory("graft-art5").toString
+    val root = tempDir("graft-art5").toString
     val path = s"$root/index/v1"
     var builds = 0
     def build(staging: String): Unit = {
@@ -145,7 +145,7 @@ class ArtifactsSpec extends SparkTestBase {
     // the sentinel-layout shape of the streaming bridges: the file source
     // delivers files oldest-mtime first, so the forced ladder IS the
     // micro-batch order and must survive the publishing rename
-    val root = java.nio.file.Files.createTempDirectory("graft-art6").toString
+    val root = tempDir("graft-art6").toString
     val path = s"$root/stage/join_v4"
     val base = 1700000000000L
     Artifacts.publishOnce(spark, path) { staging =>

@@ -28,7 +28,7 @@ class FanOutSpec extends SparkTestBase {
   }
 
   private def tmpParquet(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("fanout_spec_")
+    val dir = tempDir("fanout_spec_")
       .resolve("t.parquet").toString
     (1 to 2000).toDF("x").withColumn("s", md5(col("x").cast("string")))
       .coalesce(1).write.mode("overwrite").parquet(dir)

@@ -7,7 +7,7 @@ class FormatsSpec extends SparkTestBase {
 
   private val d = "/root/testdata/sf0.001"
   private def tmp(prefix: String) =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def docsSorted(df: org.apache.spark.sql.DataFrame) =
     df.select("doc_id", "text", "lang", "source", "n_chars")

@@ -7,7 +7,7 @@ class LayoutSpec extends SparkTestBase {
   import spark.implicits._
 
   test("writePartitioned: scans on the partition column prune directories") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = tempDir("graft-part").toString
     Layout.writePartitioned(
       Tables.documents(spark, "/root/testdata/sf0.001"), out, "lang")
     val pruned = spark.read.parquet(out).filter(col("lang") === "en")
@@ -174,8 +174,8 @@ class LayoutSpec extends SparkTestBase {
       (col("id") % n).as("x"), (col("id") / n).cast("long").as("y"),
       // pad inflates row size so 256KB blocks yield many row groups
       concat(lit("pad-"), col("id"), lit("-" + "q" * 128)).as("pad"))
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString + "/t"
-    val linDir = java.nio.file.Files.createTempDirectory("graft-linear").toString + "/t"
+    val zDir = tempDir("graft-zorder").toString + "/t"
+    val linDir = tempDir("graft-linear").toString + "/t"
     grid.repartition(1)
       .sortWithinPartitions(Layout.zorderKey(col("x"), col("y")))
       .write.option("parquet.block.size", 256 * 1024).parquet(zDir)

@@ -32,7 +32,7 @@ class BpeTrainSpec extends SparkTestBase {
 
   test("reliable-checkpoint variant: identical results, files on disk " +
     "(the cluster deployment rule for both iterative trainers)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt").toString
     // BPE trainer: the Sennrich fixture through the reliable-pin path
     val words =
       Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++

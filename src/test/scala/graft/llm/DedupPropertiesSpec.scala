@@ -39,7 +39,7 @@ class DedupPropertiesSpec extends SparkTestBase {
     val tweaks = docs.slice(3, 8).map { case (id, t) =>
       (id + 200L, t.replaceFirst("alpha", "omega")) }
     val corpus = docs ++ copies ++ tweaks
-    val dir = java.nio.file.Files.createTempDirectory("graft-simprop").toString
+    val dir = tempDir("graft-simprop").toString
     corpus.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val sigs = Dedup.simhashDocs(spark, dir).collect()

@@ -54,7 +54,7 @@ class LlmSpec extends SparkTestBase {
     val other = "completely different words in this unrelated sentence about spark engines"
     val docs = ((0L until 6L).map(i => (i, base)) ++
       Seq((10L, other), (11L, other + " tail"))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-capdocs").toString
+    val dir = tempDir("graft-capdocs").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def pairs(cap: Option[Int]) =
       Dedup.near(spark, dir, threshold = 0.8, maxBucket = cap)
@@ -74,7 +74,7 @@ class LlmSpec extends SparkTestBase {
     val other = "completely different words in this unrelated sentence about spark engines"
     val docs = ((0L until 6L).map(i => (i, base)) ++
       Seq((10L, other), (11L, other))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-simcap").toString
+    val dir = tempDir("graft-simcap").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def pairs(cap: Option[Int]) =
       Dedup.simhashPairs(spark, dir, maxHamming = 0, maxBucket = cap)
@@ -129,7 +129,7 @@ class LlmSpec extends SparkTestBase {
       (1L, "common alpha alpha"),
       (2L, "common beta beta"),
       (3L, "common gamma gamma")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tfidf").toString
+    val dir = tempDir("graft-tfidf").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val top1 = TextStats.tfidfTopk(spark, dir, k = 1).collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap
@@ -142,7 +142,7 @@ class LlmSpec extends SparkTestBase {
       (2L, base + " with a fresh continuation of entirely new trailing words"),
       (3L, "unrelated vocabulary entirely disjoint tokens forever spinning quietly onward")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-winnow").toString
+    val dir = tempDir("graft-winnow").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val fps = TextStats.winnow(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(2).split(',').map(_.toLong).toSet).toMap
@@ -165,7 +165,7 @@ class LlmSpec extends SparkTestBase {
       (10L, base), (11L, base),
       (20L, "totally unrelated content that shares nothing with the chain docs at all")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-clusters").toString
+    val dir = tempDir("graft-clusters").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.nearClusters(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -240,7 +240,7 @@ class LlmSpec extends SparkTestBase {
       (12L, "intro words then " + base + " copied straight into training"),
       (13L, "no overlap with anything held out just ordinary fresh sentences")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-decont").toString
+    val dir = tempDir("graft-decont").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Pipeline.decontaminate(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getLong(2), r.getBoolean(3))).toMap
@@ -267,7 +267,7 @@ class LlmSpec extends SparkTestBase {
       (1L, "en", "a b c"), (2L, "en", "a b c d"),
       (3L, "en", "a b c d e"), (4L, "en", "a b"),
       (5L, "de", "x y z w")).toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-pack").toString
+    val dir = tempDir("graft-pack").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = Pipeline.packGreedy(spark, dir, budget = 6).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
@@ -278,7 +278,7 @@ class LlmSpec extends SparkTestBase {
     val docs = Seq(
       (1L, "contact me@example.com or call 12345 soon"),
       (2L, "clean text with a short 123 number")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-redact").toString
+    val dir = tempDir("graft-redact").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextStats.redact(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
@@ -292,7 +292,7 @@ class LlmSpec extends SparkTestBase {
   test("count-min sketch: never undercounts; width-1 forces full collision") {
     // exact counts: a=4, b=3, c=1, d=1 (total occurrences = 9)
     val docs = Seq((1L, "a a a b b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms").toString
+    val dir = tempDir("graft-cms").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val wide = TextStats.cmsTopk(spark, dir, depth = 4, width = 1024, k = 10)
       .collect().map(r => r.getString(0) ->
@@ -366,7 +366,7 @@ class LlmSpec extends SparkTestBase {
   test("multimodal: P6 decode parses dims from the packed header and channel-folds the pixels") {
     // 2 frames of 96 bytes: frame 0 all 'A' (65), frame 1 all 'z' (122)
     val text = "A" * 96 + "z" * 96 + "tail-ignored"
-    val dir = java.nio.file.Files.createTempDirectory("graft-ppm").toString
+    val dir = tempDir("graft-ppm").toString
     Seq((1L, text, "en", "a", text.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -483,7 +483,7 @@ class LlmSpec extends SparkTestBase {
       (3L, "HELLO WORLD?!", 13L),
       (9L, "unique text", 11L)
     ).toDF("doc_id", "text", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-keepbest").toString
+    val dir = tempDir("graft-keepbest").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.keepBest(spark, dir).collect()
       .map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap
@@ -517,7 +517,7 @@ class LlmSpec extends SparkTestBase {
       (6L, "ab", "xx")                   // < 3 chars: zero hits -> first lang
     ).map { case (id, t, l) => (id, t, l, "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft-langngram").toString
+    val dir = tempDir("graft-langngram").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = TextStats.langNgram(spark, dir).collect()
       .map(r => r.getLong(0) -> (r.getString(2), r.getLong(3))).toMap
@@ -533,7 +533,7 @@ class LlmSpec extends SparkTestBase {
       (3L, "twelve entirely distinct words appear in this sentence so nothing ever repeats"),
       (4L, "solo")                                   // 1 token: top ratio IS 1.0
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-qualrep").toString
+    val dir = tempDir("graft-qualrep").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = TextStats.qualityRep(spark, dir).collect()
       .map(r => r.getLong(0) ->
@@ -555,7 +555,7 @@ class LlmSpec extends SparkTestBase {
       (2L, run),                                                       // embedded: fps(2) ⊆ fps-ish of 0
       (3L, "totally disjoint vocabulary sentence about streams joins shuffles partitions caches")
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-winpairs").toString
+    val dir = tempDir("graft-winpairs").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.winnowPairs(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
@@ -571,7 +571,7 @@ class LlmSpec extends SparkTestBase {
       (1L, "a b a b a"), // bigrams: ab, ba, ab, ba — all common
       (2L, "a c")        // bigram ac occurs once — the surprising doc
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-qlm").toString
+    val dir = tempDir("graft-qlm").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // corpus: c(a b)=2, c(b a)=2, c(a c)=1; heads c(a·)=3, c(b·)=2; V=3
     def lg2(x: Double) = math.log(x) / math.log(2)
@@ -592,7 +592,7 @@ class LlmSpec extends SparkTestBase {
       (1L, "t1 t2 t3 t4 t5 t6 t7 t8 t9 t10"),
       (2L, "t1 t2 t3 t4")                      // = doc 1's first window
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunk").toString
+    val dir = tempDir("graft-chunk").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val rows = Pipeline.chunkSplit(spark, dir, size = 4, stride = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
@@ -614,7 +614,7 @@ class LlmSpec extends SparkTestBase {
       (3L, "p q r s p q r s"),          // within-doc repeat only → clean
       (4L, "m n o t u v w2 x2")         // all unique
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-chunkdup").toString
+    val dir = tempDir("graft-chunkdup").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Dedup.chunkDups(spark, dir, size = 4).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
@@ -631,7 +631,7 @@ class LlmSpec extends SparkTestBase {
       (1L, "w w w w w w w w w", "srcA"),                       // 9 tokens
       (2L, "w w w w w w w w w w w w w w w w", "srcB")          // 16 tokens
     ).toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("graft-mixw").toString
+    val dir = tempDir("graft-mixw").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = Pipeline.mixWeights(spark, dir).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))

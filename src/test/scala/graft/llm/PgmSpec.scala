@@ -27,7 +27,7 @@ class PgmSpec extends SparkTestBase {
     // 64 chars of known content -> w=32, h=2, pixels = all 64 bytes
     val text = ("a" * 63) + "Z" // 63×97 + 90
     val short = "tiny"          // < 32 chars -> filtered out (h = 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pgm").toString
+    val dir = tempDir("graft-pgm").toString
     Seq((1L, text, "en", "a", 64L), (2L, short, "en", "a", 4L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -47,7 +47,7 @@ class PgmSpec extends SparkTestBase {
     // 40 chars -> 40 samples; 'a'=97 deviation 31 from midpoint 128,
     // 'Z'=90 deviation 38 -> peak 38; energy = 39*97^2 + 90^2
     val text = ("a" * 39) + "Z"
-    val dir = java.nio.file.Files.createTempDirectory("graft-wav").toString
+    val dir = tempDir("graft-wav").toString
     Seq((1L, text, "en", "a", 40L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -133,7 +133,7 @@ class PgmSpec extends SparkTestBase {
     val t2 = "a" * 64 + "z" * 60 + "aaaa"
     val t3 = "az" * 64
     val t4 = "a" * 40
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash").toString
+    val dir = tempDir("graft-phash").toString
     Seq((1L, t1), (2L, t2), (3L, t3), (4L, t4))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -160,7 +160,7 @@ class PgmSpec extends SparkTestBase {
       (100L + id, new String(arr))
     }
     val docs = bases ++ copies
-    val dir = java.nio.file.Files.createTempDirectory("graft-phash-prop").toString
+    val dir = tempDir("graft-phash-prop").toString
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -18,7 +18,7 @@ class SemDedupSpec extends SparkTestBase {
       Seq.tabulate(64)(j => if (j == i) scale.toFloat else 0.0f)
     val rows = (0 to 7).map(i => (i.toLong, oneHot(i), i)) ++
       Seq((8L, oneHot(0, 0.5), 0), (9L, oneHot(20), 9))
-    val dir = java.nio.file.Files.createTempDirectory("graft-semdedup").toString
+    val dir = tempDir("graft-semdedup").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -47,7 +47,7 @@ class SemDedupSpec extends SparkTestBase {
     def vec(i: Int): Seq[Float] =
       Seq.tabulate(64)(j => if (j == 0) 1.0f else if (j == 1) i * 1e-12f else 0.0f)
     val rows = (0 until n).map(i => (i.toLong, vec(i), 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-semcap").toString
+    val dir = tempDir("graft-semcap").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -73,7 +73,7 @@ class SemDedupSpec extends SparkTestBase {
     val rows = seeds ++ Seq(
       (8L, seeds.head._2, "en", "a", 30L),
       (9L, "zeta eta theta iota kappa", "en", "a", 25L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-semtext").toString
+    val dir = tempDir("graft-semtext").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

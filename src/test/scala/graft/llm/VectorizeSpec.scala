@@ -12,7 +12,7 @@ class VectorizeSpec extends SparkTestBase {
       (0L, "alpha beta gamma alpha", "en", "a", 22L),
       (1L, "alpha beta gamma alpha", "en", "a", 22L), // identical text
       (2L, "delta epsilon zeta", "en", "a", 18L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-hashvec").toString
+    val dir = tempDir("graft-hashvec").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
@@ -48,7 +48,7 @@ class VectorizeSpec extends SparkTestBase {
     // permuted twins: same multiset, reversed order
     val rows = docs.map { case (i, _, t) => (i, t, "en", "a", 1L) } ++
       docs.map { case (i, toks, _) => (i + 100L, toks.reverse.mkString(" "), "en", "a", 1L) }
-    val dir = java.nio.file.Files.createTempDirectory("graft-hashprop").toString
+    val dir = tempDir("graft-hashprop").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 

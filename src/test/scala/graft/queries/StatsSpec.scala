@@ -96,7 +96,7 @@ class StatsSpec extends SparkTestBase {
       // user 3: boundary case — gap of EXACTLY 5min stays in-session
       (3L, 301L, t0), (3L, 302L, t0 + 5 * min)
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-sess").toString
+    val dir = tempDir("graft-sess").toString
     rows.toDF("user_id", "event_id", "us")
       .select(col("user_id"), col("event_id"),
         // write NANOS so Tables.events' DIV 1000 truncation path is the
@@ -121,7 +121,7 @@ class StatsSpec extends SparkTestBase {
       // key (1, b): ts tie — max value wins (the lexicographic tie rule)
       (1L, "b", t0, 3.0), (1L, "b", t0, 7.0),
       (2L, "a", t0 + 5, 4.25))
-    val dir = java.nio.file.Files.createTempDirectory("graft-latest").toString
+    val dir = tempDir("graft-latest").toString
     rows.toDF("user_id", "event_type", "us", "value")
       .select(lit(0L).as("event_id"), (col("us") * 1000).as("ts"),
         col("user_id"), col("event_type"), col("value"), lit("{}").as("props"))
@@ -151,7 +151,7 @@ class StatsSpec extends SparkTestBase {
     val docs = Seq(
       (1L, "a b a b a c"), // bigrams: a b, b a, a b, b a, a c
       (2L, "a b"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-bigram").toString
+    val dir = tempDir("graft-bigram").toString
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val out = graft.llm.TextStats.bigramLm(spark, dir).collect()
@@ -172,7 +172,7 @@ class StatsSpec extends SparkTestBase {
       (21L, s"clean document alpha about $fillerX", "en"),
       (22L, s"fresh unrelated beta piece $fillerX reversed", "en"),
       (23L, "too short", "en"))                           // quality-gated out
-    val dir = java.nio.file.Files.createTempDirectory("graft-fullpipe").toString
+    val dir = tempDir("graft-fullpipe").toString
     docs.toDF("doc_id", "text", "lang")
       .withColumn("source", lit("s")).withColumn("n_chars", length(col("text")).cast("long"))
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -198,7 +198,7 @@ class StatsSpec extends SparkTestBase {
       (1L, base + " tail one"),
       (2L, base + " tail two")
     ) ++ (10L to 30L).map(i => (i, s"unique$i " + boiler))
-    val dir = java.nio.file.Files.createTempDirectory("graft-ngram").toString
+    val dir = tempDir("graft-ngram").toString
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val pairs = graft.llm.Dedup.ngramPairs(spark, dir, threshold = 0.5)

@@ -18,7 +18,7 @@ class TradeLogCommitSpec extends SparkTestBase {
   private val Fmt = "graft-tradelog"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-tlc-$tag").toString
+    tempDir(s"graft-tlc-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

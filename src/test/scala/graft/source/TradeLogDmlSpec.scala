@@ -31,7 +31,7 @@ class TradeLogDmlSpec extends SparkTestBase {
   private val Sf = "/root/testdata/sf0.001"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-dml-$tag").toString
+    tempDir(s"graft-dml-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

@@ -35,7 +35,7 @@ class TradeLogLifecycleSpec extends SparkTestBase {
   private val Fmt = "graft-tradelog"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-life-$tag").toString
+    tempDir(s"graft-life-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

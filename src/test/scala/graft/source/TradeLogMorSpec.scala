@@ -39,7 +39,7 @@ class TradeLogMorSpec extends SparkTestBase {
   private val GraceKey = "graft.tradelog.dml.vacuum.grace.ms"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-mor-$tag").toString
+    tempDir(s"graft-mor-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

@@ -30,7 +30,7 @@ class TradeLogOptimizeSpec extends SparkTestBase {
   private val GraceKey = "graft.tradelog.dml.vacuum.grace.ms"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-opt-$tag").toString
+    tempDir(s"graft-opt-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

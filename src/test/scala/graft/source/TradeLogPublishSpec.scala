@@ -25,7 +25,7 @@ class TradeLogPublishSpec extends SparkTestBase {
   private val Fmt = "graft-tradelog"
 
   private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-pub-$tag").toString
+    tempDir(s"graft-pub-$tag").toString
 
   private def conf = TradeLogFormat.driverConf()
 

@@ -31,7 +31,7 @@ class TradeLogRefsSpec extends SparkTestBase {
   private val Fmt = "graft-tradelog"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-refs-$tag").toString
+    tempDir(s"graft-refs-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

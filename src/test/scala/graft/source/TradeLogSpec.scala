@@ -20,7 +20,7 @@ class TradeLogSpec extends SparkTestBase {
   private val Fmt = "graft-tradelog"
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-tlog-$tag").toString
+    tempDir(s"graft-tlog-$tag").toString
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -485,7 +485,7 @@ class TradeLogSpec extends SparkTestBase {
   }
 
   test("purgeBefore with a vacuum grace defers unlinks past in-flight reader plans") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tl-grace").toString
+    val dir = tempDir("graft-tl-grace").toString
     val timed = (0 until 40).map(i =>
       Row(i.toLong, ts(f"2024-01-01 ${i / 10}%02d:${(i % 10) * 5}%02d:00"),
         i.toLong, "t", i.toDouble, "{}"))
@@ -516,7 +516,7 @@ class TradeLogSpec extends SparkTestBase {
   }
 
   test("vacuum: grace runs from DELIST time; unjournaled files are adopted, not swept") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tl-vac2").toString
+    val dir = tempDir("graft-tl-vac2").toString
     val timed = (0 until 20).map(i =>
       Row(i.toLong, ts(f"2024-01-01 ${i / 5}%02d:${(i % 5) * 10}%02d:00"),
         i.toLong, "t", i.toDouble, "{}"))

@@ -39,7 +39,7 @@ class CheckpointRestartSpec extends SparkTestBase {
       "emits the uninterrupted run's candles; every .crc verifies") {
     val files = (0 until 8).map(i => f"trades-$i%02d.json" -> TradeFiles.batch(i))
     def emitted(segments: Seq[(SparkSession, Seq[(String, Seq[String])])]) = {
-      val root = Files.createTempDirectory("graft-restart")
+      val root = tempDir("graft-restart")
       val in = Files.createDirectory(root.resolve("in")).toString
       val ckpt = root.resolve("checkpoint").toString
       val rows = ArrayBuffer.empty[(Long, String, String, String)]

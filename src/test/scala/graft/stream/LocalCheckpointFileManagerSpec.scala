@@ -9,20 +9,20 @@ import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException,
   FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileContextBasedCheckpointFileManager}
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkTestBase
 
 /** The contract of [[LocalCheckpointFileManager]] against Spark's default
   * `FileContextBasedCheckpointFileManager`: the same files and `.crc`
   * sidecars on local disk, Hadoop's `FileAlreadyExistsException` for a
   * lost no-overwrite publish, no temp file left behind, and Spark's own
   * code path for a filesystem that is not a checksummed local one. */
-class LocalCheckpointFileManagerSpec extends AnyFunSuite {
+class LocalCheckpointFileManagerSpec extends SparkTestBase {
 
   private val conf = new Configuration()
   private val local: LocalFileSystem = FileSystem.getLocal(conf)
 
   private def tmpDir(tag: String): Path =
-    new Path(Files.createTempDirectory(s"graft-cfm-$tag").toUri)
+    new Path(tempDir(s"graft-cfm-$tag").toUri)
 
   private def graftFm(dir: Path, c: Configuration = conf) =
     new LocalCheckpointFileManager(dir, c)

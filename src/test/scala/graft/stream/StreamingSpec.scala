@@ -88,10 +88,10 @@ class StreamingSpec extends SparkTestBase {
   test("Trigger.AvailableNow: stream drains the source and self-terminates, then a partitioned sink is queryable") {
     import org.apache.spark.sql.streaming.Trigger
     val d = "/root/testdata/sf0.001"
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-an-src")
+    val srcDir = tempDir("graft-an-src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"), srcDir.resolve("events.parquet"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-an-out").toString
+    val outDir = tempDir("graft-an-out").toString
     val candles = graft.ohlc.OhlcPipeline.candles(
       graft.core.Tables.eventsStream(spark, srcDir.toString),
       "1 minute", watermark = Some("2 minutes"),
@@ -128,7 +128,7 @@ class StreamingSpec extends SparkTestBase {
     // this pins that a 4-file source with maxFilesPerTrigger=1 actually
     // runs multiple batches AND the complete-mode state equals the batch agg
     val d = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mb").toString
+    val tmp = tempDir("graft-mb").toString
     val ev = graft.core.Tables.events(spark, d)
     ev.repartition(4).write.mode("overwrite").parquet(tmp)
     val src = spark.readStream.schema(ev.schema)
@@ -224,7 +224,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("file source end-to-end: jsonDir -> OhlcApp.transform -> candle JSON rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-src").toString
+    val dir = tempDir("graft-src").toString
     val trade =
       s"""{\\"type\\":\\"2\\",\\"market\\":\\"M\\",\\"from_symbol\\":\\"BTC\\",\\"to_symbol\\":\\"USDT\\",
          |\\"flags\\":\\"1\\",\\"trade_id\\":\\"t\\",\\"timestamp\\":\\"$t0\\",\\"quantity\\":\\"2.0\\",
@@ -251,7 +251,7 @@ class StreamingSpec extends SparkTestBase {
   test("batch ≡ streaming on the driver testdata: 10k events through the file-stream source") {
     val d = "/root/testdata/sf0.01"
     // the file-stream source wants a directory — stage the table into one
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-evstream")
+    val srcDir = tempDir("graft-evstream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$d/events.parquet"),
       srcDir.resolve("events.parquet"))
@@ -424,42 +424,6 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("closedCandlesIdleClose: an idle key's window closes when the GLOBAL watermark passes it") {
-    implicit val ctx = spark.sqlContext
-    import graft.ohlc.Trade
-    def trade(base: String, sec: Long, p: Double) =
-      Trade(base, new java.sql.Timestamp(sec * 1000), p, 1.0)
-    val input = MemoryStream[Trade]
-    val q = StatefulCandles.closedCandlesIdleClose(input.toDS())
-      .writeStream.format("memory").queryName("idle_close").outputMode("append").start()
-    def bases() = spark.table("idle_close").collect().map(_.getAs[String]("base")).toSeq
-    try {
-      // b trades once in w0 then goes quiet; a keeps trading
-      input.addData(trade("a", t0 + 5, 1.0), trade("b", t0 + 10, 9.0))
-      q.processAllAvailable()
-      assert(bases().isEmpty)
-      // a advances the GLOBAL watermark past w0's close + lateness; the
-      // next batch fires b's event-time timeout even though b got no data
-      input.addData(trade("a", t0 + 600, 1.1))
-      q.processAllAvailable()
-      input.addData(trade("a", t0 + 601, 1.2))
-      q.processAllAvailable()
-      assert(bases().contains("b"),
-        s"idle key b must close via watermark timeout, got ${bases()}")
-      // the per-key variant CANNOT do this — b's own event time never moved
-      val rows = spark.table("idle_close").collect()
-      val b = rows.filter(_.getAs[String]("base") == "b")
-      assert(b.length == 1 && b.head.getAs[Double]("open") == 9.0)
-      // drained keys drop their KeyState entirely (no empty-map entry with
-      // no timeout armed — that state would leak forever): only a remains
-      input.addData(trade("a", t0 + 602, 1.3))
-      q.processAllAvailable()
-      val st = q.lastProgress.stateOperators
-      assert(st.nonEmpty && st.head.numRowsTotal == 1,
-        s"drained key b must not leak state: ${st.map(_.numRowsTotal).mkString(",")}")
-    } finally q.stop()
-  }
-
   test("StatefulCandles.advance: pure state transition closes and evicts windows") {
     import graft.ohlc.Trade
     def trade(sec: Long, p: Double) = Trade("a", new java.sql.Timestamp(sec * 1000), p, 1.0)
@@ -559,8 +523,8 @@ class StreamingSpec extends SparkTestBase {
 
   test("foreachBatch parquet sink: batchId-keyed overwrite is replay-idempotent") {
     implicit val ctx = spark.sqlContext
-    val outRoot = java.nio.file.Files.createTempDirectory("graft-fbsink").toString
-    val ck = java.nio.file.Files.createTempDirectory("graft-fbck").toString
+    val outRoot = tempDir("graft-fbsink").toString
+    val ck = tempDir("graft-fbck").toString
     val input = MemoryStream[(String, Long, Double, Double)]
     val trades = input.toDF().toDF("base", "epoch", "price", "quantity")
       .withColumn("timestamp", col("epoch").cast("timestamp")).drop("epoch")
@@ -585,37 +549,49 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("RocksDB state store: stateful candles and watermark dedup run with off-heap state") {
-    // At 100 TB stream scale the default HDFS-backed store keeps every
-    // key's state ON-HEAP in each executor — the scale-killer for stateful
-    // ops. This variant proves both custom-state paths run (and keep their
-    // semantics) under RocksDBStateStoreProvider, the off-heap store a
-    // cluster deployment must configure.
-    implicit val ctx = spark.sqlContext
-    import graft.ohlc.Trade
+  /** Runs `body` with the RocksDB state-store provider — the off-heap
+    * store a cluster deployment configures, and the only one
+    * `transformWithState` runs on. */
+  private def withRocksDb(body: => Unit): Unit = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("RocksDB state store: stateful candles and watermark dedup run with off-heap state") {
+    // At 100 TB stream scale the default HDFS-backed store keeps every
+    // key's state ON-HEAP in each executor — the scale-killer for stateful
+    // ops. This variant proves both custom-state paths run (and keep their
+    // semantics) under RocksDBStateStoreProvider.
+    implicit val ctx = spark.sqlContext
+    import graft.ohlc.Trade
     def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery) =
       q.lastProgress.stateOperators.head.customMetrics.keySet().toArray.map(_.toString)
     def trade(base: String, sec: Long, p: Double) =
       Trade(base, new java.sql.Timestamp(sec * 1000), p, 1.0)
-    try {
+    withRocksDb {
       val in1 = MemoryStream[Trade]
-      val q1 = StatefulCandles.closedCandlesIdleClose(in1.toDS())
+      val q1 = StatefulCandles.closedCandles(in1.toDS())
         .writeStream.format("memory").queryName("rocks_candles")
         .outputMode("append").start()
       try {
-        in1.addData(trade("a", t0 + 5, 2.0), trade("b", t0 + 10, 9.0))
+        in1.addData(trade("a", t0 + 5, 2.0), trade("a", t0 + 20, 3.0), trade("b", t0 + 10, 9.0))
         q1.processAllAvailable()
-        in1.addData(trade("a", t0 + 600, 3.0))
+        in1.addData(trade("a", t0 + 600, 4.0))
         q1.processAllAvailable()
-        in1.addData(trade("a", t0 + 601, 4.0))
-        q1.processAllAvailable()
-        val rows = spark.table("rocks_candles").collect()
-        assert(rows.map(_.getAs[String]("base")).toSet == Set("a", "b"),
-          "idle-close semantics must hold under RocksDB")
+        // a's own event time passed w0's close + lateness: w0 emits once;
+        // b's never did, so the per-key engine keeps b's window open
+        val rows = spark.table("rocks_candles").collect().map(r =>
+          (r.getAs[String]("base"), r.getAs[java.sql.Timestamp]("start_ts").getTime,
+            r.getAs[Double]("open"), r.getAs[Double]("close"), r.getAs[Double]("volume")))
+        assert(rows.toSeq == Seq(("a", t0 * 1000, 2.0, 3.0, 2.0)),
+          s"per-key candles must hold under RocksDB: ${rows.mkString(",")}")
         assert(rocksMetrics(q1).exists(_.toLowerCase.contains("rocksdb")),
           s"RocksDB provider not engaged: ${rocksMetrics(q1).mkString(",")}")
       } finally q1.stop()
@@ -636,11 +612,6 @@ class StreamingSpec extends SparkTestBase {
         assert(rocksMetrics(q2).exists(_.toLowerCase.contains("rocksdb")),
           s"RocksDB provider not engaged: ${rocksMetrics(q2).mkString(",")}")
       } finally q2.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -674,7 +645,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("checkpointed query resumes from state (restart keeps candle revisions)") {
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val ckpt = tempDir("graft-ckpt").toString
     val input = MemoryStream[(String, Long, Double, Double)]
     def pipeline = OhlcPipeline.candles(
       input.toDF().toDF("base", "epoch", "price", "quantity")
@@ -712,48 +683,63 @@ class StreamingSpec extends SparkTestBase {
     } finally q2.stop()
   }
 
-  test("transformWithState: candle parity with flatMapGroupsWithState, idle-key timer closure") {
-    // the Spark-4 StatefulProcessor API runs only on the RocksDB store
+  test("transformWithState: closed candles incl. an idle key closed by a timer") {
     implicit val ctx = spark.sqlContext
-    import graft.ohlc.{Candle, Trade}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    import graft.ohlc.Trade
     def trade(base: String, sec: Long, p: Double) =
       Trade(base, new java.sql.Timestamp(sec * 1000), p, 1.0)
-    // same scenario as the idle-close fMGWS test: b trades once then goes
-    // quiet; a keeps trading and advances the global watermark
-    val script = Seq(
-      Seq(trade("a", t0 + 5, 1.0), trade("a", t0 + 20, 3.0), trade("b", t0 + 10, 9.0)),
-      Seq(trade("a", t0 + 600, 1.1)),
-      Seq(trade("a", t0 + 601, 1.2)))
-    def drive(mk: org.apache.spark.sql.Dataset[Trade] => org.apache.spark.sql.Dataset[Candle],
-              name: String): Seq[(String, Long, Double, Double)] = {
+    withRocksDb {
       val in = MemoryStream[Trade]
-      val q = mk(in.toDS()).writeStream.format("memory")
-        .queryName(name).outputMode("append").start()
+      val q = TwsCandles.closedCandles(in.toDS()).writeStream.format("memory")
+        .queryName("tws_candles").outputMode("append").start()
       try {
-        script.foreach { batch => in.addData(batch); q.processAllAvailable() }
-        spark.table(name).collect().map(r =>
+        // b trades once then goes quiet; a keeps trading and advances the
+        // global watermark past w0's close (t0+600 - 120s lateness)
+        Seq(
+          Seq(trade("a", t0 + 5, 1.0), trade("a", t0 + 20, 3.0), trade("b", t0 + 10, 9.0)),
+          Seq(trade("a", t0 + 600, 1.1)),
+          Seq(trade("a", t0 + 601, 1.2))
+        ).foreach { batch => in.addData(batch); q.processAllAvailable() }
+        val got = spark.table("tws_candles").collect().map(r =>
           (r.getAs[String]("base"), r.getAs[java.sql.Timestamp]("start_ts").getTime,
             r.getAs[Double]("open"), r.getAs[Double]("close"))).toSeq.sorted
+        // a's w0 closes on a's own event time, with the (open=1.0,
+        // close=3.0) tie rule; the idle key b's w0 closes only through its
+        // event-time TIMER (b's own event time never moved)
+        assert(got == Seq(("a", t0 * 1000, 1.0, 3.0), ("b", t0 * 1000, 9.0, 9.0)), got)
       } finally q.stop()
     }
-    try {
-      val tws = drive(TwsCandles.closedCandles(_), "tws_candles")
-      val fmgws = drive(StatefulCandles.closedCandlesIdleClose(_), "fmgws_candles")
-      assert(tws == fmgws, s"API parity broken:\ntws=$tws\nfmgws=$fmgws")
-      // the idle key b emitted via the event-time TIMER (its own event
-      // time never passed the close bound)
-      assert(tws.exists(_._1 == "b"), s"idle key b missing from $tws")
-      assert(tws.exists(c => c._1 == "a" && c._3 == 1.0 && c._4 == 3.0),
-        "a's w0 candle must carry the (open=1.0, close=3.0) tie rule")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+  }
+
+  test("TwsCandles: a drained idle key drops all its state once its timer fires") {
+    implicit val ctx = spark.sqlContext
+    import graft.ohlc.Trade
+    def trade(base: String, sec: Long, p: Double) =
+      Trade(base, new java.sql.Timestamp(sec * 1000), p, 1.0)
+    val aTrades = Seq(Seq(trade("a", t0 + 5, 1.0)), Seq(trade("a", t0 + 600, 1.1)),
+      Seq(trade("a", t0 + 601, 1.2)), Seq(trade("a", t0 + 602, 1.3)))
+    // state rows after a's script; with `withB`, b trades once in batch 0
+    def stateRows(name: String, withB: Boolean): Long = {
+      val in = MemoryStream[Trade]
+      val q = TwsCandles.closedCandles(in.toDS()).writeStream.format("memory")
+        .queryName(name).outputMode("append").start()
+      try {
+        aTrades.zipWithIndex.foreach { case (batch, i) =>
+          in.addData(if (withB && i == 0) batch :+ trade("b", t0 + 10, 9.0) else batch)
+          q.processAllAvailable()
+        }
+        assert(!withB || spark.table(name).collect().exists(_.getAs[String]("base") == "b"),
+          "b's timer must have fired")
+        q.lastProgress.stateOperators.head.numRowsTotal
+      } finally q.stop()
+    }
+    withRocksDb {
+      val withB = stateRows("tws_drain_ab", withB = true)
+      val onlyA = stateRows("tws_drain_a", withB = false)
+      // b's `open` windows and `maxTs` are gone: the store holds exactly
+      // what a run without b holds
+      assert(onlyA > 0 && withB == onlyA,
+        s"drained key b must not leak state: with b $withB rows, a alone $onlyA")
     }
   }
 

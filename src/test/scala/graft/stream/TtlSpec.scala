@@ -26,7 +26,7 @@ class TtlSpec extends SparkTestBase {
       .write.mode(mode).parquet(dir)
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-ttl-$tag").toString
+    tempDir(s"graft-ttl-$tag").toString
 
   private def latestPerUser(df: org.apache.spark.sql.DataFrame)
       : Map[Long, (Long, Long)] = {

@@ -133,6 +133,8 @@ object GraftFunctions {
       (children: Seq[Expression]) => FirstByOrderedDecl(children(0), children(1))),
     (FunctionIdentifier("last_by_ordered"), info(classOf[LastByOrderedDecl], "last_by_ordered"),
       (children: Seq[Expression]) => LastByOrderedDecl(children(0), children(1))),
+    (FunctionIdentifier("flat_json_strings"), info(classOf[FlatJsonStrings], "flat_json_strings"),
+      (children: Seq[Expression]) => FlatJsonStrings(children(0), children(1))),
     (FunctionIdentifier("vec_dot"), info(classOf[DotProduct], "vec_dot"),
       (children: Seq[Expression]) => DotProduct(children(0), children(1))),
     (FunctionIdentifier("vec_argmax_cos"), info(classOf[CosArgMax], "vec_argmax_cos"),

@@ -263,10 +263,11 @@ object SimilarityPq {
   /** [[withRecon]] against a PRE-PINNED codebook — the shape
     * QueryDef.pinPar callers need: training happened (concurrently with
     * the caller's other artifacts) before this is invoked, so the encode
-    * and recon projection here are plan-identical to [[withRecon]]'s. */
-  private[llm] def withReconCb(df: DataFrame, cb: DataFrame,
-                               keep: String*): DataFrame =
-    reconProject(encodeWith(graft.core.QueryDef.fanOut(df), cb, m), cb, m,
+    * and recon projection here are plan-identical to [[withRecon]]'s.
+    * `msub` is the subspace count `cb` was trained with. */
+  private[llm] def withReconCb(df: DataFrame, cb: DataFrame, keep: Seq[String],
+                               msub: Int = m): DataFrame =
+    reconProject(encodeWith(graft.core.QueryDef.fanOut(df), cb, msub), cb, msub,
       keep: _*)
 
   private def reconProject(enc: DataFrame, cb: DataFrame, msub: Int,
@@ -443,7 +444,7 @@ object SimilarityPq {
       codebooksRow(all)))
     val assigned = Similarity.assignNearest(all, cents)
       .select(col("vec_id"), col("e"), col("cid").as("bucket"))
-    val rec = withReconCb(assigned, cb, "bucket")
+    val rec = withReconCb(assigned, cb, Seq("bucket"))
     val probes = Similarity.ivfProbes(all, cents, nQueries, nprobe)
       .withColumn("qnrm", sqrt(call_function("vec_dot", col("qe"), col("qe"))))
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("nbr"))

@@ -1,7 +1,10 @@
 package graft.ohlc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, RuntimeConfig}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The reference's whole dataflow (reference: /root/reference/main.py:102-188)
   * as pure `DataFrame => DataFrame` stages, usable identically in batch and
@@ -19,28 +22,49 @@ import org.apache.spark.sql.functions._
   */
 object OhlcPipeline {
 
+  /** The five payload fields [[parseTrades]] reads, by name from
+    * [[TradeSchema]]. */
+  private val ParsedFields: StructType = StructType(
+    Seq("from_symbol", "to_symbol", "timestamp", "quantity", "price").map(TradeSchema.schema(_)))
+
+  /** Epoch seconds outside this range keep the string round trip: 0001-01-01
+    * and 9999-12-31 UTC, each narrowed by the largest zone offset (18 h). */
+  private val IdentityLo = java.time.LocalDate.of(1, 1, 1).toEpochDay * 86400L + 18 * 3600
+  private val IdentityHi = java.time.LocalDate.of(10000, 1, 1).toEpochDay * 86400L - 1 - 18 * 3600
+
   /** Parse raw Kafka-shaped rows (`topic: string, value: string`) into typed
-    * trades. Mirrors main.py:102-136: from_json with the fixed 14-string
-    * schema (malformed JSON → null struct → dropped by the isNotNull filter),
-    * epoch-seconds string → timestamp (double cast preserves null/truncation
-    * semantics), string → double casts, and the topic-regex base derivation
-    * with payload fallback.
+    * trades. Mirrors main.py:102-136: the payload decoded against the
+    * reference schema's five used fields, epoch-seconds string → timestamp,
+    * string → double casts, and the topic-regex base derivation with
+    * payload fallback.
+    *
+    * The payload goes through `flat_json_strings` ([[graft.expr.FlatJsonStrings]]):
+    * a flat object of plain ASCII strings, the shape every reference and
+    * generator payload has, is decoded straight from its bytes; any other
+    * row takes the expression's `from_json` child, so its result is
+    * Spark's. Malformed JSON gives a struct of all nulls and an empty or
+    * blank value a null struct; the `timestamp.isNotNull` filter drops both.
     */
   def parseTrades(raw: DataFrame, topicPrefix: String = "parsed-trades-"): DataFrame = {
+    val value = col("value").cast("string")
     val parsed = raw
-      .select(col("topic"), from_json(col("value").cast("string"), TradeSchema.schema).as("data"))
+      // inline(array(..)): a Generate, which the optimizer pushes the
+      // timestamp filter no lower than, so each payload decodes once (a
+      // filter pushed through a Project re-evaluates the decode)
+      .select(col("topic"),
+        inline(array(call_function("flat_json_strings", value, from_json(value, ParsedFields)))))
       .select(
         col("topic"),
-        col("data.from_symbol").as("from_symbol"),
-        col("data.to_symbol").as("to_symbol"),
+        col("from_symbol"),
+        col("to_symbol"),
         // try_cast throughout: Spark 4 defaults to ANSI mode, where a plain
         // cast on a malformed string THROWS; the documented semantics
         // (SURVEY §2.2 P4/P5, non-numeric → null → dropped by the filter)
         // need the null-on-unparseable behavior.
-        from_unixtime(expr("try_cast(data.timestamp as long)"))
-          .cast("timestamp").as("timestamp"),
-        expr("try_cast(data.price as double)").as("price"),
-        expr("try_cast(data.quantity as double)").as("quantity")
+        secondsToTimestamp(raw.sparkSession.conf, expr("try_cast(timestamp as long)"))
+          .as("timestamp"),
+        expr("try_cast(price as double)").as("price"),
+        expr("try_cast(quantity as double)").as("quantity")
       )
       .where(col("timestamp").isNotNull)
     // Reference quirk kept verbatim (main.py:131-136): the GATE is the loose
@@ -55,6 +79,21 @@ object OhlcPipeline {
       when(col("topic").rlike(gate), regexp_extract(col("topic"), extract, 1))
         .otherwise(col("from_symbol"))
     )
+  }
+
+  /** The reference's `from_unixtime(s).cast("timestamp")` (main.py:124):
+    * it formats each second in the session zone and parses it back. That is
+    * the identity in a fixed-offset zone for seconds inside years
+    * 0001–9999 (minus the offset), where `timestamp_seconds` gives the same
+    * value without the strings; every other zone or value keeps the round
+    * trip (a DST overlap hour maps to its first instant, out-of-range
+    * seconds wrap). The zone is the session's at DataFrame construction,
+    * the one analysis gives `from_unixtime`. */
+  private def secondsToTimestamp(conf: RuntimeConfig, s: Column): Column = {
+    val roundTrip = from_unixtime(s).cast("timestamp")
+    val zone = DateTimeUtils.getZoneId(conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    if (!zone.getRules.isFixedOffset) roundTrip
+    else when(s.between(IdentityLo, IdentityHi), timestamp_seconds(s)).otherwise(roundTrip)
   }
 
   /** Ordered-first/last aggregation columns with the reference's tie rule —

@@ -5,8 +5,8 @@ import org.apache.spark.sql.types._
 /** The reference's Kafka trade payload schema: 14 fields, all strings —
   * the upstream JSON serializes every numeric as a string
   * (reference: /root/reference/main.py:48-67). Field names and order are
-  * part of the observable contract (`from_json` is positional-agnostic but
-  * `data.*` flattening preserves declaration order).
+  * part of the observable contract: [[OhlcPipeline.parseTrades]] takes the
+  * five fields it reads from here by name.
   */
 object TradeSchema {
   val schema: StructType = StructType(

@@ -34,10 +34,33 @@ class OhlcPipelineSpec extends SparkTestBase {
   test("parseTrades: malformed JSON and non-numeric timestamp are dropped") {
     val raw = Seq(
       ("t", "{not json at all"),
+      ("t", ""),
       ("t", tradeJson("A", "not-a-number", "1.0", "1.0")),
       ("t", tradeJson("A", s"$t0", "1.0", "1.0"))
     ).toDF("topic", "value")
     assert(OhlcPipeline.parseTrades(raw).count() == 1)
+    // what the timestamp filter sees: malformed JSON decodes to a struct of
+    // all nulls, only an empty (or blank) value to a null struct
+    val structs = raw.select(from_json(col("value"), TradeSchema.schema)).collect().map(_.get(0))
+    assert(structs(0) == org.apache.spark.sql.Row.fromSeq(Seq.fill(TradeSchema.schema.length)(null)))
+    assert(structs(1) == null)
+  }
+
+  test("parseTrades: equals the reference formulation on a generator-shaped batch") {
+    val raw = ParseTradesBench.batch(spark)
+    try {
+      val got = OhlcPipeline.parseTrades(raw)
+      val want = ReferenceParse.parseTrades(raw)
+      assert(got.count() == want.count() && got.count() > ParseTradesBench.Rows * 9 / 10)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    } finally raw.unpersist()
+  }
+
+  test("parseTrades: each payload decodes once (the timestamp filter is not pushed below it)") {
+    val raw = Seq(("t", tradeJson("A", s"$t0", "1.0", "1.0"))).toDF("topic", "value")
+    val decodes = OhlcPipeline.parseTrades(raw).queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect { case f: graft.expr.FlatJsonStrings => f }))
+    assert(decodes.size == 1)
   }
 
   test("parseTrades: non-numeric price parses to null but row survives") {

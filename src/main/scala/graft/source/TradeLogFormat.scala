@@ -1,10 +1,17 @@
 package graft.source
 
 import java.io.{DataInputStream, DataOutputStream}
+import java.lang.ref.WeakReference
 import java.nio.charset.StandardCharsets
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** The `graft-tradelog` on-disk format — a block-framed binary event log
   * with a committed manifest, built so the DataSource V2 connector
@@ -452,10 +459,10 @@ object TradeLogFormat {
     * fs.defaultFS override, kerberos settings — reach the connector,
     * exactly like every other artifact path in this repo), else the
     * classpath core-site/hdfs-site. Executor-side readers/writers never
-    * call this: they receive the DRIVER's conf explicitly through
-    * [[HadoopConfBox]] in their factory. */
+    * call this: their factory carries a [[HadoopConfBox]], a broadcast
+    * copy of this conf taken when the factory was created. */
   def driverConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+    SparkSession.getActiveSession
       .map(_.sparkContext.hadoopConfiguration)
       .getOrElse(new Configuration())
 
@@ -1639,26 +1646,56 @@ object TradeLogFormat {
   }
 }
 
-/** Java-serializable Hadoop Configuration carrier: factories capture the
-  * DRIVER's resolved conf at plan time and ship it to executor-side
-  * readers/writers, so `spark.hadoop.*` settings apply on every task (a
-  * fresh `new Configuration()` on an executor would see only classpath
-  * XML). Built once per factory, not per task. */
-final class HadoopConfBox(@transient private var c: org.apache.hadoop.conf.Configuration)
+/** The driver's Hadoop conf as executor-side tradelog readers and writers
+  * see it, so `spark.hadoop.*` settings apply on every task (a fresh
+  * `new Configuration()` on an executor would see only classpath XML).
+  * [[HadoopConfBox.active]] captures the conf when a factory is created
+  * and ships it as a broadcast: the box serializes to a broadcast handle
+  * of a few hundred bytes, so a task binary that carries a factory does
+  * not carry the conf. Each executor fetches it once per distinct conf;
+  * in local mode tasks get the driver's broadcast copy itself and
+  * deserialize no conf at all. That copy is shared by every task in a
+  * JVM, so executor code treats [[conf]] as read-only: readers and
+  * writers only resolve a `FileSystem` from it. A box made with no
+  * active session (executor side, or a driver without one) carries no
+  * broadcast, and [[conf]] is the plain local conf, as
+  * [[TradeLogFormat.driverConf]] gives it there. */
+final class HadoopConfBox private (
+    private[source] val shipped: Option[Broadcast[SerializableConfiguration]])
     extends java.io.Serializable {
-  def conf: org.apache.hadoop.conf.Configuration = c
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    c.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    c = new org.apache.hadoop.conf.Configuration(false)
-    c.readFields(in)
-  }
+  @transient private lazy val plain = new Configuration()
+  def conf: Configuration = shipped.fold(plain)(_.value.value)
 }
 
 object HadoopConfBox {
-  /** Capture the driver's conf (call at plan/factory-creation time). */
-  def active(): HadoopConfBox = new HadoopConfBox(TradeLogFormat.driverConf())
+  /** The last broadcast: its context, held weakly so a stopped one is
+    * never pinned, the entries of the copy it carries, and its box. */
+  private final class Slot(val sc: WeakReference[SparkContext],
+      val entries: Map[String, String], val box: HadoopConfBox)
+  private var slot: Option[Slot] = None
+
+  private def entries(c: Configuration): Map[String, String] =
+    c.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+
+  /** Capture the driver's conf (call at plan/factory-creation time): a
+    * copy of the active session's `hadoopConfiguration`, broadcast. The
+    * broadcast is reused across scans, writes and micro-batches while
+    * the live conf's entries equal the copy's; a changed entry, or
+    * another or a stopped context, broadcasts a new copy. A replaced
+    * broadcast is left to the ContextCleaner, since a running query may
+    * still read it. */
+  def active(): HadoopConfBox =
+    SparkSession.getActiveSession.map(_.sparkContext).filterNot(_.isStopped)
+      .fold(new HadoopConfBox(None))(broadcast)
+
+  private def broadcast(sc: SparkContext): HadoopConfBox = synchronized {
+    val live = entries(sc.hadoopConfiguration)
+    slot.filter(s => (s.sc.get eq sc) && s.entries == live).fold {
+      val copy = new Configuration(sc.hadoopConfiguration)
+      val box = new HadoopConfBox(
+        Some(sc.broadcast(new SerializableConfiguration(copy))))
+      slot = Some(new Slot(new WeakReference(sc), entries(copy), box))
+      box
+    }(_.box)
+  }
 }

@@ -1119,8 +1119,8 @@ final class TradeLogReaderFactory(outCols: Array[Int],
 
 /** Streams the partition's blocks: seek to each committed offset, read
   * the framed payload, decode only the wanted ordinals. The filesystem
-  * resolves from the DRIVER's conf (shipped in the factory's
-  * [[HadoopConfBox]]), so spark.hadoop.* settings apply on executors.
+  * resolves from the DRIVER's conf (the factory's [[HadoopConfBox]]
+  * broadcast), so spark.hadoop.* settings apply on executors.
   * Schema evolution: `xtypes` is the table's extra-column tail; a block
   * narrower than every wanted ordinal (old blocks under a new-only
   * projection) emits its row count of all-null rows WITHOUT opening the

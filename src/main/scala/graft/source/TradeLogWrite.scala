@@ -438,8 +438,12 @@ final class TradeLogWriterFactory(path: String, blockRows: Int,
   * order (ts = epoch micros, strings = UTF8String) plus the evolution
   * tail `xtypes` (encoded after the base bytes; each block's nCols
   * records the tail it carries). Resolves its filesystem from the
-  * DRIVER's conf (shipped via the factory's [[HadoopConfBox]]), so
-  * spark.hadoop.* settings apply on executors. */
+  * DRIVER's conf (the factory's [[HadoopConfBox]] broadcast), so
+  * spark.hadoop.* settings apply on executors. On a checksummed
+  * `LocalFileSystem` the file and its `.crc` are written through
+  * [[graft.core.LocalPublish]] (java.nio), where Hadoop's `create` would
+  * fork a `chmod` for each of them; every other filesystem uses
+  * `create`. */
 final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
     blockRows: Int,
     xtypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
@@ -450,9 +454,14 @@ final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
     s"part-$partitionId-$taskId-" +
       s"${java.util.UUID.randomUUID().toString.take(8)}.gtl"
   private val (filesystem, root) = TradeLogFormat.fs(dir, confBox.conf)
+  private val file = new org.apache.hadoop.fs.Path(root, fileName)
   private val out = new DataOutputStream(new BufferedOutputStream(
-    filesystem.create(new org.apache.hadoop.fs.Path(root, fileName), true),
-    1 << 16))
+    filesystem match {
+      case local: org.apache.hadoop.fs.LocalFileSystem =>
+        graft.core.LocalPublish.mkdirs(local, root)
+        graft.core.LocalPublish.create(local, file)
+      case _ => filesystem.create(file, true)
+    }, 1 << 16))
 
   private val blockBuf = new ByteArrayOutputStream(1 << 16)
   private val blockOut = new DataOutputStream(blockBuf)
@@ -527,13 +536,13 @@ final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
     flushBlock()
     out.close()
     if (blocks.isEmpty) // empty partition: no file to keep
-      filesystem.delete(new org.apache.hadoop.fs.Path(root, fileName), false)
+      filesystem.delete(file, false)
     TradeLogCommit(blocks.toIndexedSeq)
   }
 
   override def abort(): Unit = {
     out.close()
-    filesystem.delete(new org.apache.hadoop.fs.Path(root, fileName), false)
+    filesystem.delete(file, false)
   }
 
   override def close(): Unit = ()

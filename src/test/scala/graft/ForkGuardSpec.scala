@@ -18,16 +18,17 @@ import graft.stream.TradeFiles
   * before it has too. */
 class ForkGuardMark extends jdk.jfr.Event
 
-/** Streaming checkpoints and tradelog publishes on local disk start no
-  * child process. Without libhadoop, Hadoop's local filesystem forks a
-  * `chmod` per permission set and a `readlink` per rename probe; an
-  * in-process JFR recording of `jdk.ProcessStart` catches any code path
-  * that falls back to it. */
+/** Streaming checkpoints, tradelog publishes and tradelog data-file
+  * writes on local disk start no child process. Without libhadoop,
+  * Hadoop's local filesystem forks a `chmod` per permission set and a
+  * `readlink` per rename probe; an in-process JFR recording of
+  * `jdk.ProcessStart` catches any code path that falls back to it. */
 class ForkGuardSpec extends SparkTestBase {
 
   private val Guarded = Seq(
     "org.apache.spark.sql.execution.streaming.checkpointing.",
-    "graft.source.TradeLogFormat$.publishAtomic")
+    "graft.source.TradeLogFormat$.publishAtomic",
+    "graft.source.TradeLogDataWriter.")
 
   private def frames(e: RecordedEvent): Seq[String] =
     Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
@@ -80,6 +81,8 @@ class ForkGuardSpec extends SparkTestBase {
         .foreachBatch { (b: DataFrame, _: Long) => groups += b.count() }
         .trigger(Trigger.AvailableNow()).start().awaitTermination()
       tradelogWrite(log, 2, "append")
+      // data files into a directory the write creates
+      tradelogWrite(root.resolve("log-new").toString, 1, "overwrite")
       TradeLogMaintenance.optimize(spark, log, blockRows = 4)(
         _.repartition(1).sortWithinPartitions("ts"))
       assert(rows > 0 && groups == 2)

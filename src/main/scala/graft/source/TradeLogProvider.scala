@@ -16,6 +16,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import TradeLogFormat.BlockMeta
 
@@ -1044,16 +1045,11 @@ final class TradeLogScan(path: String, tableSchema: StructType,
     override def planInputPartitions(): Array[InputPartition] = {
       val eff = effectiveBlocks
       plannedBlocks = eff
-      // one partition per data file (its surviving blocks read
-      // sequentially): parallelism == layout, the file-source shape.
-      // withChangeTypes adds per-file DELETE-rows partitions (the DV
-      // delta re-masked to emit exactly the newly-deleted ordinals).
-      (eff.groupBy(_.file).toSeq.sortBy(_._1).map {
-        case (_, blocks) => TradeLogPartition(path, blocks.sortBy(_.offset))
-      } ++ deleteEmitBlocks.groupBy(_.file).toSeq.sortBy(_._1).map {
-        case (_, blocks) => TradeLogPartition(path, blocks.sortBy(_.offset),
-          changeType = "delete")
-      }).toArray
+      // Spark-sized splits over the surviving blocks (see
+      // TradeLogPartition.plan); withChangeTypes adds DELETE-rows splits
+      // (the DV delta re-masked to emit exactly the newly-deleted
+      // ordinals), packed apart so each split keeps one change type.
+      TradeLogPartition.plan(path, eff, deleteEmitBlocks).toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
       new TradeLogReaderFactory(outCols, xtypes, HadoopConfBox.active())
@@ -1100,11 +1096,69 @@ object TradeLogScan {
   val ChangeCol: Int = -4
 }
 
-/** One read split: a run of blocks within one data file. `changeType`
-  * fills the `_change_type` metadata slot ("insert" everywhere except a
-  * withChangeTypes diff's delete-rows partitions). */
+/** One read split: blocks in (file, offset) order, possibly spanning
+  * several data files. `changeType` fills the `_change_type` metadata
+  * slot ("insert" everywhere except a withChangeTypes diff's delete-rows
+  * splits). */
 final case class TradeLogPartition(dir: String, blocks: Seq[BlockMeta],
     changeType: String = "insert") extends InputPartition
+
+object TradeLogPartition {
+  /** The read splits of a scan, batch or micro-batch, by Spark's file
+    * source rule. The split size is `FilePartition.maxSplitBytes`:
+    * `min(spark.sql.files.maxPartitionBytes, max(openCostInBytes, total /
+    * minPartitionNum))`, where a block weighs `payloadLen + 8` bytes, each
+    * data file adds one `openCostInBytes` to the total, and
+    * `minPartitionNum` is `spark.sql.files.minPartitionNum`, else the
+    * leaf-node default parallelism. As Spark splits a file into pieces
+    * of at most that size, a file's blocks split into runs at block
+    * boundaries; the pieces then pack next-fit, each weighing its bytes
+    * plus one open cost. Both steps keep (file, offset) order, so a scan
+    * returns rows in that order. `deletes` (a withChangeTypes diff's
+    * delete-rows blocks) pack into their own splits after the inserts. */
+  def plan(dir: String, inserts: Seq[BlockMeta],
+      deletes: Seq[BlockMeta] = Nil): Seq[TradeLogPartition] = {
+    val openCost = org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    def weight(bs: Seq[BlockMeta]): Long =
+      bs.map(_.payloadLen + 8L).sum + bs.map(_.file).distinct.size * openCost
+    val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+      .maxSplitBytes(org.apache.spark.sql.SparkSession.active,
+        weight(inserts) + weight(deletes))
+    pack(dir, inserts, "insert", maxSplit, openCost) ++
+      pack(dir, deletes, "delete", maxSplit, openCost)
+  }
+
+  private def pack(dir: String, blocks: Seq[BlockMeta], changeType: String,
+      maxSplit: Long, openCost: Long): Seq[TradeLogPartition] = {
+    // pieces: runs of one file's blocks of at most maxSplit bytes (a block
+    // larger than that is a piece of its own)
+    val pieces = Seq.newBuilder[(Vector[BlockMeta], Long)]
+    var piece = Vector.empty[BlockMeta]
+    var pieceBytes = 0L
+    blocks.sortBy(b => (b.file, b.offset)).foreach { b =>
+      val bytes = b.payloadLen + 8L
+      if (piece.nonEmpty &&
+          (piece.last.file != b.file || pieceBytes + bytes > maxSplit)) {
+        pieces += piece -> pieceBytes
+        piece = Vector.empty; pieceBytes = 0L
+      }
+      piece :+= b; pieceBytes += bytes
+    }
+    if (piece.nonEmpty) pieces += piece -> pieceBytes
+    val splits = Seq.newBuilder[TradeLogPartition]
+    var split = Vector.empty[BlockMeta]
+    var size = 0L
+    pieces.result().foreach { case (bs, bytes) =>
+      if (split.nonEmpty && size + bytes > maxSplit) {
+        splits += TradeLogPartition(dir, split, changeType)
+        split = Vector.empty; size = 0L
+      }
+      split ++= bs; size += bytes + openCost
+    }
+    if (split.nonEmpty) splits += TradeLogPartition(dir, split, changeType)
+    splits.result()
+  }
+}
 
 final class TradeLogReaderFactory(outCols: Array[Int],
     xtypes: Array[org.apache.spark.sql.types.DataType],
@@ -1117,16 +1171,21 @@ final class TradeLogReaderFactory(outCols: Array[Int],
   }
 }
 
-/** Streams the partition's blocks: seek to each committed offset, read
-  * the framed payload, decode only the wanted ordinals. The filesystem
-  * resolves from the DRIVER's conf (the factory's [[HadoopConfBox]]
-  * broadcast), so spark.hadoop.* settings apply on executors.
+/** Reads a split's blocks in order: seek to each committed offset, read
+  * the framed payload into a fresh array, and decode only the wanted
+  * ordinals through a [[BlockCursor]], whose one reused row [[get]]
+  * returns (valid until the next [[next]], the `PartitionReader`
+  * contract). A split may hold runs of blocks from several data files
+  * ([[TradeLogPartition.plan]]): one stream is open at a time, reopened
+  * when the file changes. The filesystem resolves from the DRIVER's conf
+  * (the factory's [[HadoopConfBox]] broadcast), so spark.hadoop.*
+  * settings apply on executors.
   * Schema evolution: `xtypes` is the table's extra-column tail; a block
   * narrower than every wanted ordinal (old blocks under a new-only
   * projection) emits its row count of all-null rows WITHOUT opening the
   * file — old data pays zero decode for new-column scans. `outCols` may
-  * carry [[TradeLogScan.FileCol]] slots for the `_file` metadata column,
-  * filled from block metadata at zero decode cost. */
+  * carry [[TradeLogScan]] metadata sentinels (`_file`, `_boff`, `_brow`,
+  * `_change_type`), filled from block metadata at zero decode cost. */
 final class TradeLogPartitionReader(dir: String, blocks: Seq[BlockMeta],
     outCols: Array[Int],
     xtypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
@@ -1134,60 +1193,34 @@ final class TradeLogPartitionReader(dir: String, blocks: Seq[BlockMeta],
     changeType: String = "insert")
     extends PartitionReader[InternalRow] {
   private val wanted: Array[Int] = outCols.filter(_ >= 0)
-  private val hasMeta: Boolean = wanted.length != outCols.length
-  private val changeU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(changeType)
   private val (filesystem, root) = TradeLogFormat.fs(dir, confBox.conf)
   private val blockIt = blocks.iterator
-  private var rows: Iterator[InternalRow] = Iterator.empty
+  private val cursor = new BlockCursor(outCols, xtypes)
+  private val row = cursor.row
+  private val fileSlot = outCols.indexOf(TradeLogScan.FileCol)
+  private val boffSlot = outCols.indexOf(TradeLogScan.BoffCol)
+  private val browSlot = outCols.indexOf(TradeLogScan.BrowCol)
+  private val changeSlot = outCols.indexOf(TradeLogScan.ChangeCol)
+  if (changeSlot >= 0) row.update(changeSlot, UTF8String.fromString(changeType))
 
-  // the current block's file name, encoded ONCE per block (not per row —
-  // the decode loop runs millions of times under a COW rewrite)
-  private var fileU8: org.apache.spark.unsafe.types.UTF8String = null
-  private var fileU8For: String = null
-  private def fileNameU8(file: String)
-      : org.apache.spark.unsafe.types.UTF8String = {
-    if (fileU8For != file) {
-      fileU8 = org.apache.spark.unsafe.types.UTF8String.fromString(file)
-      fileU8For = file
+  // the per-block metadata slots, set once per block (the file name
+  // encoded once per file), never per row
+  private var fileFor: String = null
+  private def fillBlockMeta(b: BlockMeta): Unit = {
+    if (fileSlot >= 0 && fileFor != b.file) {
+      row.update(fileSlot, UTF8String.fromString(b.file))
+      fileFor = b.file
     }
-    fileU8
+    if (boffSlot >= 0) row.setLong(boffSlot, b.offset)
   }
 
-  /** Wrap decoded data values into the output slot layout, filling the
-    * `_file`/`_boff`/`_brow` metadata slots from block metadata;
-    * identity (zero-cost) when no metadata was asked. */
-  private def mkRow(data: Array[Any], b: BlockMeta, rowIdx: Int)
-      : InternalRow =
-    if (!hasMeta) new GenericInternalRow(data)
-    else {
-      val out = new Array[Any](outCols.length)
-      var i = 0
-      var di = 0
-      while (i < outCols.length) {
-        outCols(i) match {
-          case TradeLogScan.FileCol => out(i) = fileNameU8(b.file)
-          case TradeLogScan.BoffCol =>
-            out(i) = java.lang.Long.valueOf(b.offset)
-          case TradeLogScan.BrowCol =>
-            out(i) = java.lang.Integer.valueOf(rowIdx)
-          case TradeLogScan.ChangeCol => out(i) = changeU8
-          case _ => out(i) = data(di); di += 1
-        }
-        i += 1
-      }
-      new GenericInternalRow(out)
-    }
-
-  // One open stream per data FILE, not per block: a partition's blocks are
-  // grouped by file and sorted by offset, so the run reads as forward
-  // seeks on a single stream (an O(blocks)-opens pattern is costly on
-  // object stores). Keyed by file name so a mixed-file partition — not
-  // produced today — would still read correctly via reopen-on-change.
+  // one open stream per run of a file's blocks, not per block: blocks are
+  // in (file, offset) order, so a run reads as forward seeks on a single
+  // stream (an O(blocks)-opens pattern is costly on object stores)
+  private type Stream = java.io.InputStream with org.apache.hadoop.fs.Seekable
   private var openFile: String = null
-  private var in: org.apache.hadoop.fs.FSDataInputStream = null
-  private def streamFor(file: String)
-      : org.apache.hadoop.fs.FSDataInputStream = {
+  private var in: Stream = null
+  private def streamFor(file: String): Stream = {
     if (openFile != file) {
       if (in != null) in.close()
       in = filesystem.open(new org.apache.hadoop.fs.Path(root, file))
@@ -1201,45 +1234,35 @@ final class TradeLogPartitionReader(dir: String, blocks: Seq[BlockMeta],
     val b = blockIt.next()
     // merge-on-read delete vector: masked ordinals are never emitted —
     // the scan-time application that lets a k-row DELETE rewrite zero
-    // data files (decoded once per block, tested per ordinal)
+    // data files
     val dv = TradeLogFormat.dvWords(b.dvHex)
+    fillBlockMeta(b)
     if (wanted.forall(_ >= b.nCols)) {
       // every requested column postdates this block's schema (or the
       // projection is empty — a count-style read): the manifest's row
       // count IS the answer, all values null — no byte of the payload is
-      // fetched or decoded (the old-block zero-cost rule for new-column
-      // scans; also why a purge-surviving block whose file was GC'd can
-      // still serve a new-only projection)
-      rows = (0 until b.nRows).iterator
-        .filter(i => !TradeLogFormat.dvDeleted(dv, i))
-        .map(i => mkRow(new Array[Any](wanted.length), b, i))
-      return true
+      // fetched or decoded (also why a purge-surviving block whose file
+      // was GC'd can still serve a new-only projection)
+      cursor.reset(b, null, dv)
+    } else {
+      val payload = new Array[Byte](b.payloadLen)
+      val s = streamFor(b.file)
+      s.seek(b.offset + 8L) // skip the [nRows][payloadLen] frame header
+      val got = s.readNBytes(payload, 0, payload.length)
+      if (got < payload.length) throw new IllegalStateException(
+        s"graft-tradelog block ${b.file}@${b.offset}: the file ends $got " +
+          s"bytes into its ${payload.length}-byte payload")
+      cursor.reset(b, payload, dv)
     }
-    val payload = new Array[Byte](b.payloadLen)
-    val s = streamFor(b.file)
-    s.seek(b.offset + 8L) // skip the [nRows][payloadLen] frame header
-    s.readFully(payload)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-    // decodeBlock allocates a fresh values array per row — safe to wrap.
-    // Deleted rows still DECODE (the byte walk is sequential) but are
-    // dropped here, pre-materialization — the Delta DV read shape.
-    var ri = 0
-    TradeLogFormat.decodeBlock(payload, b.nRows, wanted, b.nCols, xtypes) {
-      v =>
-        if (!TradeLogFormat.dvDeleted(dv, ri)) buf += mkRow(v, b, ri)
-        ri += 1
-    }
-    rows = buf.iterator
     true
   }
 
-  private var current: InternalRow = _
   override def next(): Boolean = {
-    while (!rows.hasNext) if (!loadNextBlock()) return false
-    current = rows.next()
+    while (!cursor.next()) if (!loadNextBlock()) return false
+    if (browSlot >= 0) row.setInt(browSlot, cursor.rowIndex)
     true
   }
-  override def get(): InternalRow = current
+  override def get(): InternalRow = row
   override def close(): Unit = {
     if (in != null) { in.close(); in = null; openFile = null }
   }

@@ -245,10 +245,8 @@ final class TradeLogMicroBatchStream(path: String, wanted: Array[Int],
     // OCCUPY their seqs — the watermark advances past a skipped one, it
     // just plans no partition (the Delta dataChange=false skip); a
     // STRADDLING restatement substitutes its sidecar copies (r20)
-    blocks.slice(a, b).flatMap(emitsFor(_, w0))
-      .groupBy(_.file).toSeq.sortBy(_._1).map {
-        case (_, bs) => TradeLogPartition(path, bs.sortBy(_.offset))
-      }.toArray
+    TradeLogPartition.plan(path, blocks.slice(a, b).flatMap(emitsFor(_, w0)))
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -1,7 +1,5 @@
 package graft.source
 
-import java.io.{BufferedOutputStream, ByteArrayOutputStream, DataOutputStream}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
@@ -432,18 +430,21 @@ final class TradeLogWriterFactory(path: String, blockRows: Int,
       confBox)
 }
 
-/** Per-task writer: buffers rows into blocks of `blockRows`, frames each
-  * block with its header, tracks per-block ts min/max for the skip
-  * index. Input rows arrive as InternalRow in [[TradeLogFormat.schema]]
+/** Per-task writer: encodes rows into blocks of `blockRows` through one
+  * [[BlockEncoder]] (a growable byte array, values written by offset),
+  * writes each framed block to the data file in one call, and tracks the
+  * block's skip statistics (ts min/max, null-ts count, user range and
+  * bloom). Input rows arrive as InternalRow in [[TradeLogFormat.schema]]
   * order (ts = epoch micros, strings = UTF8String) plus the evolution
   * tail `xtypes` (encoded after the base bytes; each block's nCols
-  * records the tail it carries). Resolves its filesystem from the
-  * DRIVER's conf (the factory's [[HadoopConfBox]] broadcast), so
-  * spark.hadoop.* settings apply on executors. On a checksummed
-  * `LocalFileSystem` the file and its `.crc` are written through
-  * [[graft.core.LocalPublish]] (java.nio), where Hadoop's `create` would
-  * fork a `chmod` for each of them; every other filesystem uses
-  * `create`. */
+  * records the tail it carries). The bytes are those the format has
+  * always written for the same rows, so files are byte-identical for the
+  * same input partitioning. Resolves its filesystem from the DRIVER's
+  * conf (the factory's [[HadoopConfBox]] broadcast), so spark.hadoop.*
+  * settings apply on executors. On a checksummed `LocalFileSystem` the
+  * file and its `.crc` are written through [[graft.core.LocalPublish]]
+  * (java.nio), where Hadoop's `create` would fork a `chmod` for each of
+  * them; every other filesystem uses `create`. */
 final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
     blockRows: Int,
     xtypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
@@ -455,17 +456,14 @@ final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
       s"${java.util.UUID.randomUUID().toString.take(8)}.gtl"
   private val (filesystem, root) = TradeLogFormat.fs(dir, confBox.conf)
   private val file = new org.apache.hadoop.fs.Path(root, fileName)
-  private val out = new DataOutputStream(new BufferedOutputStream(
-    filesystem match {
-      case local: org.apache.hadoop.fs.LocalFileSystem =>
-        graft.core.LocalPublish.mkdirs(local, root)
-        graft.core.LocalPublish.create(local, file)
-      case _ => filesystem.create(file, true)
-    }, 1 << 16))
+  private val out: java.io.OutputStream = filesystem match {
+    case local: org.apache.hadoop.fs.LocalFileSystem =>
+      graft.core.LocalPublish.mkdirs(local, root)
+      graft.core.LocalPublish.create(local, file)
+    case _ => filesystem.create(file, true)
+  }
 
-  private val blockBuf = new ByteArrayOutputStream(1 << 16)
-  private val blockOut = new DataOutputStream(blockBuf)
-  private var rowsInBlock = 0
+  private val block = new BlockEncoder(xtypes)
   private var minTs = Long.MaxValue
   private var maxTs = Long.MinValue
   private var nTsNull = 0
@@ -476,48 +474,23 @@ final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
   private val blocks = scala.collection.mutable.ArrayBuffer.empty[BlockMeta]
 
   override def write(row: InternalRow): Unit = {
-    val ts = TradeLogFormat.encodeRow(blockOut,
-      if (row.isNullAt(0)) null else java.lang.Long.valueOf(row.getLong(0)),
-      if (row.isNullAt(1)) null else java.lang.Long.valueOf(row.getLong(1)),
-      if (row.isNullAt(2)) null else java.lang.Long.valueOf(row.getLong(2)),
-      if (row.isNullAt(3)) null else row.getUTF8String(3).toString,
-      if (row.isNullAt(4)) null else java.lang.Double.valueOf(row.getDouble(4)),
-      if (row.isNullAt(5)) null else row.getUTF8String(5).toString)
-    if (xtypes.nonEmpty) {
-      val xs = new Array[Any](xtypes.length)
-      var i = 0
-      while (i < xtypes.length) {
-        val ord = TradeLogFormat.BaseCols + i
-        if (!row.isNullAt(ord)) xs(i) = xtypes(i) match {
-          case org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.TimestampType =>
-            java.lang.Long.valueOf(row.getLong(ord))
-          case org.apache.spark.sql.types.DoubleType =>
-            java.lang.Double.valueOf(row.getDouble(ord))
-          case _ => row.getUTF8String(ord).getBytes
-        }
-        i += 1
-      }
-      TradeLogFormat.encodeExtras(blockOut, xtypes, xs)
-    }
-    if (ts != Long.MinValue) { minTs = minTs.min(ts); maxTs = maxTs.max(ts) }
-    else nTsNull += 1
+    block.add(row)
+    if (!row.isNullAt(1)) {
+      val ts = row.getLong(1)
+      minTs = minTs.min(ts); maxTs = maxTs.max(ts)
+    } else nTsNull += 1
     if (!row.isNullAt(2)) {
       val u = row.getLong(2)
       TradeLogFormat.bloomAdd(bloom, u)
       minUser = minUser.min(u); maxUser = maxUser.max(u)
     }
-    rowsInBlock += 1
-    if (rowsInBlock >= blockRows) flushBlock()
+    if (block.rows >= blockRows) flushBlock()
   }
 
-  private def flushBlock(): Unit = if (rowsInBlock > 0) {
-    blockOut.flush()
-    val payload = blockBuf.toByteArray
-    out.writeInt(rowsInBlock)
-    out.writeInt(payload.length)
-    out.write(payload)
-    blocks += BlockMeta(fileName, bytesWritten, payload.length, rowsInBlock,
+  private def flushBlock(): Unit = if (block.rows > 0) {
+    val payloadLen = block.payloadLen
+    block.writeFramed(out)
+    blocks += BlockMeta(fileName, bytesWritten, payloadLen, block.rows,
       if (minTs == Long.MaxValue) Long.MinValue else minTs,
       if (maxTs == Long.MinValue) Long.MaxValue else maxTs,
       TradeLogFormat.bloomHex(bloom),
@@ -525,8 +498,8 @@ final class TradeLogDataWriter(dir: String, partitionId: Int, taskId: Long,
       // an all-null-user block keeps the inverted (provably-empty) range,
       // which correctly skips every point lookup — null never equals
       nTsNull = nTsNull, seq = -1L, minUser = minUser, maxUser = maxUser)
-    bytesWritten += 8L + payload.length
-    blockBuf.reset(); rowsInBlock = 0
+    bytesWritten += 8L + payloadLen
+    block.reset()
     minTs = Long.MaxValue; maxTs = Long.MinValue; nTsNull = 0
     minUser = Long.MaxValue; maxUser = Long.MinValue
     bloom = TradeLogFormat.bloomAlloc(blockRows)

@@ -3,9 +3,11 @@ package graft.source
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkTestBase
 
@@ -983,15 +985,15 @@ class TradeLogSpec extends SparkTestBase {
     // stale-plan shape: the reader resolved base-schema, a concurrent
     // widening committed, and a 7-column block arrives — the tail cannot
     // even be skipped without its types, so the decode must name the fix
-    val buf = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(buf)
-    TradeLogFormat.encodeRow(out, 1L, 2L, 3L, "t", 4.0, "{}")
-    TradeLogFormat.encodeExtras(out, Array[DataType](LongType),
-      Array[Any](7L))
-    out.flush()
+    val enc = new BlockEncoder(Array[DataType](LongType))
+    enc.add(InternalRow(1L, 2L, 3L, UTF8String.fromString("t"), 4.0,
+      UTF8String.fromString("{}"), 7L))
+    val payload = enc.payload
+    val block = TradeLogFormat.BlockMeta("wide.gtl", 0L, payload.length, 1,
+      2L, 2L, nCols = 7)
     val boom = intercept[IllegalArgumentException] {
-      TradeLogFormat.decodeBlock(buf.toByteArray, 1, Array(0), 7,
-        Array.empty[DataType])(_ => ())
+      new BlockCursor(Array(0), Array.empty[DataType])
+        .reset(block, payload, null)
     }
     assert(boom.getMessage.contains("widened after the plan"),
       s"stale-schema decode must carry the remedy: ${boom.getMessage}")
@@ -1008,17 +1010,24 @@ class TradeLogSpec extends SparkTestBase {
       Array[Any](null, null, null, null, null, null, null, null, null, null),
       Array[Any](9L, null, "mid".getBytes("UTF-8"), null, 3L, null, -1.25,
         null, 123456789L, null))
-    val buf = new java.io.ByteArrayOutputStream()
-    val out = new java.io.DataOutputStream(buf)
+    val enc = new BlockEncoder(xtypes)
     rows.foreach { xs =>
-      TradeLogFormat.encodeRow(out, 1L, 2L, 3L, "t", 4.0, "{}")
-      TradeLogFormat.encodeExtras(out, xtypes, xs)
+      enc.add(InternalRow.fromSeq(Seq[Any](1L, 2L, 3L,
+        UTF8String.fromString("t"), 4.0, UTF8String.fromString("{}")) ++
+        xs.toSeq.map {
+          case b: Array[Byte] => UTF8String.fromBytes(b)
+          case v => v
+        }))
     }
-    out.flush()
+    val payload = enc.payload
     val wanted = (0 until 16).toArray
+    val cursor = new BlockCursor(wanted, xtypes)
+    cursor.reset(TradeLogFormat.BlockMeta("tail.gtl", 0L, payload.length,
+      rows.size, 2L, 2L, nCols = 16), payload, null)
     val got = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    TradeLogFormat.decodeBlock(buf.toByteArray, rows.size, wanted, 16, xtypes)(
-      v => got += v.toSeq)
+    while (cursor.next())
+      got += cursor.row.toSeq(
+        TradeLogFormat.schema.fields.map(_.dataType).toSeq ++ xtypes)
     assert(got.size == rows.size)
     rows.zip(got).foreach { case (xs, v) =>
       val extras = v.drop(6)

@@ -41,6 +41,25 @@ private[source] object TradeLogCodec {
   }
 }
 
+/** The `ts`/`user_id` conjunction a plain read evaluates row by row (see
+  * [[TradeLogScanBuilder]]): `ts` within `[tsLo, tsHi]` (inclusive, µs)
+  * and `user_id` in `users` (sorted; null = any value). A comparison with
+  * null is never true, so a null `ts` passes only when `tsNotNull` is
+  * unset, which the builder sets for every handled `ts` predicate; the
+  * same holds for `user_id` and `userNotNull`. */
+final class RowFilter(val tsLo: Long, val tsHi: Long, val tsNotNull: Boolean,
+    val users: Array[Long], val userNotNull: Boolean) extends Serializable {
+  require(tsNotNull || (tsLo == Long.MinValue && tsHi == Long.MaxValue),
+    "a ts bound implies ts is not null")
+  require(userNotNull || users == null, "a user_id set implies not null")
+
+  /** The row with base null mask `mask`, `ts` and `user_id` passes. */
+  def test(mask: Int, ts: Long, user: Long): Boolean =
+    (if ((mask & 2) != 0) !tsNotNull else ts >= tsLo && ts <= tsHi) &&
+      (if ((mask & 4) != 0) !userNotNull
+       else users == null || java.util.Arrays.binarySearch(users, user) >= 0)
+}
+
 /** Encodes rows of [[TradeLogFormat.schema]] plus the evolution tail
   * `xtypes` into one framed block, `[int32 nRows][int32 payloadLen]
   * [payload]`, in a growable array: values go in by offset, with no
@@ -152,11 +171,13 @@ private[source] final class BlockEncoder(xtypes: Array[DataType]) {
   * fixed-width column is skipped by arithmetic and an unwanted string by
   * its length prefix. Strings are `UTF8String`s over the payload array
   * itself, so each block needs its own array. Rows masked by the block's
-  * delete vector are walked over, never materialized. Schema evolution:
-  * `xtypes` is the table's extra-column tail; a wanted ordinal the block
-  * does not encode is null in every row of it. */
+  * delete vector are walked over, never materialized, and so are rows
+  * that fail `filter`, which reads the null mask, `ts` and `user_id` in
+  * place whether or not they are wanted. Schema evolution: `xtypes` is
+  * the table's extra-column tail; a wanted ordinal the block does not
+  * encode is null in every row of it. */
 private[source] final class BlockCursor(outCols: Array[Int],
-    xtypes: Array[DataType]) {
+    xtypes: Array[DataType], filter: Option[RowFilter] = None) {
   import TradeLogCodec._
 
   val row = new SpecificInternalRow(outCols.map(slotType(_, xtypes)).toSeq)
@@ -172,6 +193,8 @@ private[source] final class BlockCursor(outCols: Array[Int],
   private val s0 = slot(0); private val s1 = slot(1); private val s2 = slot(2)
   private val s3 = slot(3); private val s4 = slot(4); private val s5 = slot(5)
 
+  private val rowFilter = filter.orNull
+
   private var payload: Array[Byte] = null
   private var bb: ByteBuffer = null
   private var pos = 0
@@ -183,10 +206,12 @@ private[source] final class BlockCursor(outCols: Array[Int],
   private var current = -1
 
   /** Position on `b`, whose payload is `bytes` (null when no wanted
-    * column is encoded by the block: rows then come from the manifest's
-    * row count alone) and whose delete vector is `deletes`
-    * ([[TradeLogFormat.dvWords]]). */
+    * column is encoded by the block and there is no filter: rows then
+    * come from the manifest's row count alone) and whose delete vector is
+    * `deletes` ([[TradeLogFormat.dvWords]]). */
   def reset(b: BlockMeta, bytes: Array[Byte], deletes: Array[Long]): Unit = {
+    require(bytes != null || rowFilter == null,
+      "a filtered block cursor needs the block's payload")
     // a block WIDER than the reader's resolved schema means the log was
     // widened after this plan resolved (a concurrent evolution): the tail
     // cannot even be skipped without its types, so fail with the remedy
@@ -213,7 +238,11 @@ private[source] final class BlockCursor(outCols: Array[Int],
   /** Advance to the next live row of the block; false when it is done. */
   def next(): Boolean = {
     while (r < nRows) {
-      val live = !TradeLogFormat.dvDeleted(dv, r)
+      var live = !TradeLogFormat.dvDeleted(dv, r)
+      if (live && rowFilter != null) {
+        need(33)
+        live = rowFilter.test(payload(pos), bb.getLong(pos + 9), bb.getLong(pos + 17))
+      }
       if (payload != null) walk(live)
       current = r
       r += 1

@@ -28,11 +28,13 @@ import TradeLogFormat.BlockMeta
   *
   *   - BATCH_READ: [[TradeLogScanBuilder]] with column pruning
   *     (`SupportsPushDownRequiredColumns` — pruned columns are never
-  *     DECODED, not just dropped) and ts-filter pushdown
-  *     (`SupportsPushDownFilters` — per-block min/max ts stats skip
-  *     whole blocks at plan time; every filter is also handed back to
-  *     Spark as residual, the parquet stats-pruning contract, so the
-  *     skip is purely an optimization and can never change results).
+  *     DECODED, not just dropped) and ts/user_id filter pushdown
+  *     (`SupportsPushDownFilters`). Per-block ts spans and user_id
+  *     blooms skip whole blocks at plan time; that skip is advisory and
+  *     never decides a row. A plain read also evaluates the handled
+  *     predicates exactly, row by row, and Spark keeps only the rest;
+  *     row-level operations read whole blocks and leave every filter to
+  *     Spark.
   *   - MICRO_BATCH_READ: [[TradeLogMicroBatchStream]] — JSON-serialized
   *     block offsets, `SupportsAdmissionControl` rate limiting
   *     (`maxBlocksPerTrigger`, the maxOffsetsPerTrigger idea) and
@@ -226,84 +228,108 @@ final class TradeLogTable(path: String,
   }
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new TradeLogScanBuilder(path, tableSchema, options, resolvedPin,
-      resolvedBranch = resolvedBranch)
+      resolvedBranch = resolvedBranch, exactRows = true)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
     new TradeLogWriteBuilder(path, info)
 }
 
-/** Scan builder: collects the pruned schema and the pushable ts bounds.
-  * Filter contract — `pushFilters` RETURNS every input filter (all stay
-  * residual: Spark re-evaluates them exactly), while `pushedFilters`
-  * reports the ts bounds the scan will use for block skipping, which is
-  * how they surface in `.explain` (the parquet PushedFilters pattern). */
+/** Scan builder: collects the pruned schema, the ts bounds and the
+  * user_id set. Filter contract — the handled predicates are `ts`
+  * compared with a literal (`>`, `>=`, `<`, `<=`, `=`), `user_id = v`,
+  * `user_id IN (...)` of Long values and `IsNotNull` of either column.
+  * They drive the advisory block skip on every scan. With `exactRows`
+  * (plain reads, [[TradeLogTable]]) the scan also evaluates them exactly
+  * on each row ([[RowFilter]]) and `pushFilters` returns only the rest,
+  * so Spark plans no `Filter` holding their literals and one compiled
+  * stage serves every slice and point read. Without it (row-level
+  * operations, whose group scans must return whole blocks) every filter
+  * is returned and stays residual. `pushedFilters` reports the handled
+  * ones, which is how they surface in `.explain`. */
 final class TradeLogScanBuilder(path: String, tableSchema: StructType,
     options: CaseInsensitiveStringMap,
     resolvedPin: Option[Long] = None,
     onScan: TradeLogScan => Unit = _ => (),
-    resolvedBranch: Option[(String, Long)] = None)
+    resolvedBranch: Option[(String, Long)] = None,
+    exactRows: Boolean = false)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
   private var required: StructType = tableSchema
+  private var seen: Array[Filter] = Array.empty
   private var accepted: Array[Filter] = Array.empty
   private var tsLo: Long = Long.MinValue
   private var tsHi: Long = Long.MaxValue
+  private var tsNotNull = false
   private var pushedAgg: Option[Seq[aggregate.AggregateFunc]] = None
 
   /** V1 filter values for TimestampType arrive as java.sql.Timestamp or
-    * java.time.Instant depending on the session's datetime-java8 conf;
-    * both convert exactly to epoch micros. Timestamp needs FLOOR
-    * division to epoch seconds: `getTime` truncates toward zero while
-    * `getNanos` always carries the POSITIVE sub-second, so a plain
-    * `/ 1000` would mis-place every pre-1970 instant by up to a second
-    * (and the advisory block skip would then drop matching rows). */
+    * java.time.Instant depending on the session's datetime-java8 conf.
+    * An Instant converts exactly to epoch micros. A Timestamp is the
+    * literal after Spark's Gregorian-to-Julian rebase, which is the
+    * identity only from the last calendar switch of any time zone
+    * (1900-01-01) on: an older Timestamp can sit days away from its
+    * literal, and two 1582 literals share one, so it is left to Spark
+    * (no skip, no row test). A newer one needs FLOOR division to epoch
+    * seconds: `getTime` truncates toward zero while `getNanos` always
+    * carries the POSITIVE sub-second, so a plain `/ 1000` would
+    * mis-place every pre-1970 instant by up to a second. */
   private def tsMicros(v: Any): Option[Long] = v match {
-    case t: java.sql.Timestamp =>
-      Some(Math.addExact(
-        Math.multiplyExact(Math.floorDiv(t.getTime, 1000L), 1000000L),
-        (t.getNanos / 1000).toLong))
+    case t: java.sql.Timestamp
+        if t.getTime >= TradeLogScanBuilder.RebaseFreeFromMillis =>
+      Some(Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000)
     case i: java.time.Instant =>
-      Some(Math.addExact(Math.multiplyExact(i.getEpochSecond, 1000000L),
-        (i.getNano / 1000).toLong))
+      Some(org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(i))
     case _ => None
   }
 
   private var userIds: Option[Set[Long]] = None
-  private def restrictUsers(ids: Set[Long]): Unit =
+  private var userNotNull = false
+  private def restrictUsers(ids: Set[Long]): Boolean = {
     userIds = Some(userIds.fold(ids)(_ intersect ids))
+    userNotNull = true
+    true
+  }
+  private def tsFrom(m: Long): Boolean = {
+    tsLo = tsLo.max(m); tsNotNull = true; true
+  }
+  private def tsTo(m: Long): Boolean = {
+    tsHi = tsHi.min(m); tsNotNull = true; true
+  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.flatMap {
-      case f @ sources.GreaterThan("ts", v) =>
-        tsMicros(v).map { m => tsLo = tsLo.max(m + 1); f }
-      case f @ sources.GreaterThanOrEqual("ts", v) =>
-        tsMicros(v).map { m => tsLo = tsLo.max(m); f }
-      case f @ sources.LessThan("ts", v) =>
-        tsMicros(v).map { m => tsHi = tsHi.min(m - 1); f }
-      case f @ sources.LessThanOrEqual("ts", v) =>
-        tsMicros(v).map { m => tsHi = tsHi.min(m); f }
-      case f @ sources.EqualTo("ts", v) =>
-        tsMicros(v).map { m => tsLo = tsLo.max(m); tsHi = tsHi.min(m); f }
+    seen = filters
+    val (handled, rest) = filters.partition {
+      // a bound past either end of the µs range has no successor (or
+      // predecessor): those comparisons stay with Spark
+      case sources.GreaterThan("ts", v) =>
+        tsMicros(v).filter(_ < Long.MaxValue).exists(m => tsFrom(m + 1))
+      case sources.GreaterThanOrEqual("ts", v) => tsMicros(v).exists(tsFrom)
+      case sources.LessThan("ts", v) =>
+        tsMicros(v).filter(_ > Long.MinValue).exists(m => tsTo(m - 1))
+      case sources.LessThanOrEqual("ts", v) => tsMicros(v).exists(tsTo)
+      case sources.EqualTo("ts", v) =>
+        tsMicros(v).exists(m => tsFrom(m) && tsTo(m))
+      case sources.IsNotNull("ts") => tsNotNull = true; true
       // user_id point/set predicates drive the per-block bloom skip
-      case f @ sources.EqualTo("user_id", v: Long) =>
-        restrictUsers(Set(v)); Some(f)
-      case f @ sources.In("user_id", vs) =>
-        // Restrict ONLY if every element converts to Long (mirrors the
+      case sources.EqualTo("user_id", v: Long) => restrictUsers(Set(v))
+      case sources.In("user_id", vs) =>
+        // Handled ONLY if every element converts to Long (mirrors the
         // runtime filter() rule): a dropped value would make the bloom
-        // skip unsound, because skipped blocks are never re-checked by
-        // the residual. Unknown element type ⇒ accept without skipping.
+        // skip and the row test unsound. Otherwise Spark keeps it and
+        // no block is skipped for it.
         val asLongs = vs.map {
           case l: Long              => Some(l)
           case i: java.lang.Integer => Some(i.toLong)
           case _                    => None
         }
-        if (asLongs.forall(_.isDefined)) restrictUsers(asLongs.flatten.toSet)
-        Some(f)
-      case _ => None
+        asLongs.forall(_.isDefined) && restrictUsers(asLongs.flatten.toSet)
+      case sources.IsNotNull("user_id") => userNotNull = true; true
+      case _ => false
     }
-    filters // everything stays residual — skipping is advisory-only
+    accepted = handled
+    if (exactRows) rest else filters
   }
   override def pushedFilters(): Array[Filter] = accepted
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -313,9 +339,10 @@ final class TradeLogScanBuilder(path: String, tableSchema: StructType,
     * ungrouped `count(*)` / `min(ts)` / `max(ts)` is answered from the
     * manifest alone (nRows sums; per-block ts extremes are EXACT, not
     * estimates) — no data file is ever opened. Spark only attempts the
-    * push when no filter remained un-pushed below the aggregate, and the
-    * guard additionally demands this builder saw no filters at all, so a
-    * pushed answer can never silently ignore a predicate. */
+    * push when no filter remained un-pushed below the aggregate, which
+    * is the case whenever the scan handles every filter itself, so the
+    * guard demands this builder saw no filters at all: a pushed answer
+    * can never silently ignore a predicate. */
   // merge-on-read delete vectors make manifest stats NON-answers: count
   // must exclude masked rows and a deleted row may hold a ts extreme — a
   // DV'd log declines completely. Lazy + checked LAST, so the refs file
@@ -333,8 +360,7 @@ final class TradeLogScanBuilder(path: String, tableSchema: StructType,
           n.fieldNames.sameElements(Array("ts"))
         case _ => false
       }
-    agg.groupByExpressions.isEmpty && accepted.isEmpty &&
-      tsLo == Long.MinValue && tsHi == Long.MaxValue &&
+    agg.groupByExpressions.isEmpty && seen.isEmpty &&
       // time travel pins a SNAPSHOT manifest (and changes-since diffs
       // against one); the agg scan answers from the head manifest, so
       // those reads must take the normal path
@@ -365,13 +391,26 @@ final class TradeLogScanBuilder(path: String, tableSchema: StructType,
   override def build(): Scan = pushedAgg match {
     case Some(aggs) => new TradeLogAggScan(path, aggs)
     case None =>
+      val rowFilter =
+        if (!exactRows || accepted.isEmpty) None
+        else Some(new RowFilter(tsLo, tsHi, tsNotNull,
+          userIds.map(_.toArray.sorted).orNull, userNotNull))
       val s = new TradeLogScan(path, tableSchema, required, tsLo, tsHi,
-        userIds, options, resolvedPin, resolvedBranch)
+        userIds, options, resolvedPin, resolvedBranch, rowFilter)
       // row-level operations register here so their ReplaceData write can
       // learn exactly which blocks this scan planned (the COW group set)
       onScan(s)
       s
   }
+}
+
+private[source] object TradeLogScanBuilder {
+  /** Epoch ms from which a pushed `java.sql.Timestamp` is its literal
+    * without a calendar rebase: a day past Spark's last switch, so no
+    * rebased older literal can land at or after it. */
+  val RebaseFreeFromMillis: Long =
+    org.apache.spark.sql.catalyst.util.RebaseDateTime.lastSwitchGregorianTs /
+      1000L + 86400000L
 }
 
 /** Metadata-only scan for a completely-pushed aggregate: ONE row computed
@@ -433,7 +472,8 @@ final class TradeLogScan(path: String, tableSchema: StructType,
     tsLo: Long, tsHi: Long, userIds: Option[Set[Long]],
     options: CaseInsensitiveStringMap,
     resolvedPin: Option[Long] = None,
-    resolvedBranch: Option[(String, Long)] = None)
+    resolvedBranch: Option[(String, Long)] = None,
+    rowFilter: Option[RowFilter] = None)
     extends Scan with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
 
@@ -584,10 +624,12 @@ final class TradeLogScan(path: String, tableSchema: StructType,
     * range intersects the pushed bounds — the two-level-manifest payoff
     * (a narrow time slice over a years-deep log reads a handful of shard
     * files, never the whole block ledger). Block-level skipping then
-    * refines within the resolved shards; both tiers are advisory (the
-    * residual filters keep results exact), and unknown spans stay
-    * conservative. Legacy flat manifests resolve inline (one unprunable
-    * "shard"). */
+    * refines within the resolved shards. Both tiers are advisory: they
+    * only drop blocks that cannot hold a match, and each row is decided
+    * by the scan's [[RowFilter]] on a plain read, or by Spark's residual
+    * filter on a row-level operation's whole-block read. Unknown spans
+    * stay conservative. Legacy flat manifests resolve inline (one
+    * unprunable "shard"). */
   private def pruneShards(info: TradeLogFormat.ManifestInfo)
       : (Seq[BlockMeta], Int, Int) =
     if (info.shards.isEmpty)
@@ -905,7 +947,8 @@ final class TradeLogScan(path: String, tableSchema: StructType,
 
   /** withChangeTypes delete-rows blocks after the same advisory skips
     * (their spans/blooms describe the original rows, so pushed ts/user
-    * bounds prune them identically; residuals re-apply exactly). */
+    * bounds prune them identically; the row filter, or Spark's
+    * residual, then decides each row). */
   private[source] lazy val deleteEmitBlocks: Seq[BlockMeta] =
     changesPlan._2.filter(passesSkips)
 
@@ -997,7 +1040,7 @@ final class TradeLogScan(path: String, tableSchema: StructType,
 
   override def readSchema(): StructType = required
 
-  /** Post-skip manifest stats (EXACT pre-residual-filter figures, the
+  /** Post-skip manifest stats (EXACT pre-row-filter figures, the
     * estimate contract) — what lets Catalyst cost a tradelog side small
     * enough to broadcast after a time-slice, instead of defaulting to a
     * shuffle join on an unknown-size custom source. */
@@ -1030,8 +1073,10 @@ final class TradeLogScan(path: String, tableSchema: StructType,
       (if (onlyDeleted) ", OnlyDeleted" else "")
     val shards =
       if (shardsTotal > 0) s", shards=$shardsRead/$shardsTotal" else ""
+    val exact = if (rowFilter.isDefined) ", ExactRows" else ""
     s"GraftTradeLog path=$path, ReadSchema=${required.simpleString}, " +
-      s"PushedTsBounds=[$tsLo,$tsHi]$users$travel$maint$shards, blocks=$sel"
+      s"PushedTsBounds=[$tsLo,$tsHi]$users$exact$travel$maint$shards, " +
+      s"blocks=$sel"
   }
 
   /** The blocks the batch ACTUALLY planned (set at planInputPartitions
@@ -1052,7 +1097,8 @@ final class TradeLogScan(path: String, tableSchema: StructType,
       TradeLogPartition.plan(path, eff, deleteEmitBlocks).toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
-      new TradeLogReaderFactory(outCols, xtypes, HadoopConfBox.active())
+      new TradeLogReaderFactory(outCols, xtypes, HadoopConfBox.active(),
+        rowFilter)
   }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
@@ -1162,12 +1208,13 @@ object TradeLogPartition {
 
 final class TradeLogReaderFactory(outCols: Array[Int],
     xtypes: Array[org.apache.spark.sql.types.DataType],
-    confBox: HadoopConfBox) extends PartitionReaderFactory {
+    confBox: HadoopConfBox, rowFilter: Option[RowFilter] = None)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition)
       : PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[TradeLogPartition]
     new TradeLogPartitionReader(p.dir, p.blocks, outCols, xtypes, confBox,
-      p.changeType)
+      p.changeType, rowFilter)
   }
 }
 
@@ -1180,22 +1227,25 @@ final class TradeLogReaderFactory(outCols: Array[Int],
   * when the file changes. The filesystem resolves from the DRIVER's conf
   * (the factory's [[HadoopConfBox]] broadcast), so spark.hadoop.*
   * settings apply on executors.
+  * `rowFilter` drops the rows that fail it ([[BlockCursor]]).
   * Schema evolution: `xtypes` is the table's extra-column tail; a block
   * narrower than every wanted ordinal (old blocks under a new-only
   * projection) emits its row count of all-null rows WITHOUT opening the
-  * file — old data pays zero decode for new-column scans. `outCols` may
+  * file when there is no row filter — old data pays zero decode for
+  * new-column scans. `outCols` may
   * carry [[TradeLogScan]] metadata sentinels (`_file`, `_boff`, `_brow`,
   * `_change_type`), filled from block metadata at zero decode cost. */
 final class TradeLogPartitionReader(dir: String, blocks: Seq[BlockMeta],
     outCols: Array[Int],
     xtypes: Array[org.apache.spark.sql.types.DataType] = Array.empty,
     confBox: HadoopConfBox = HadoopConfBox.active(),
-    changeType: String = "insert")
+    changeType: String = "insert",
+    rowFilter: Option[RowFilter] = None)
     extends PartitionReader[InternalRow] {
   private val wanted: Array[Int] = outCols.filter(_ >= 0)
   private val (filesystem, root) = TradeLogFormat.fs(dir, confBox.conf)
   private val blockIt = blocks.iterator
-  private val cursor = new BlockCursor(outCols, xtypes)
+  private val cursor = new BlockCursor(outCols, xtypes, rowFilter)
   private val row = cursor.row
   private val fileSlot = outCols.indexOf(TradeLogScan.FileCol)
   private val boffSlot = outCols.indexOf(TradeLogScan.BoffCol)
@@ -1237,12 +1287,13 @@ final class TradeLogPartitionReader(dir: String, blocks: Seq[BlockMeta],
     // data files
     val dv = TradeLogFormat.dvWords(b.dvHex)
     fillBlockMeta(b)
-    if (wanted.forall(_ >= b.nCols)) {
+    if (rowFilter.isEmpty && wanted.forall(_ >= b.nCols)) {
       // every requested column postdates this block's schema (or the
-      // projection is empty — a count-style read): the manifest's row
-      // count IS the answer, all values null — no byte of the payload is
-      // fetched or decoded (also why a purge-surviving block whose file
-      // was GC'd can still serve a new-only projection)
+      // projection is empty — a count-style read) and no row is tested:
+      // the manifest's row count IS the answer, all values null — no
+      // byte of the payload is fetched or decoded (also why a
+      // purge-surviving block whose file was GC'd can still serve a
+      // new-only projection)
       cursor.reset(b, null, dv)
     } else {
       val payload = new Array[Byte](b.payloadLen)

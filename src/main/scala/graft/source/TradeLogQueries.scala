@@ -21,9 +21,10 @@ import graft.core.QueryDef.OrderedOut
   *   - `q_tradelog_prune` — a 2-day time slice + projection: the scan
   *     plans only manifest blocks whose ts span intersects the pushed
   *     bounds and decodes only the pruned columns (TradeLogSpec pins
-  *     selected < total and the ReadSchema; the filters stay residual,
-  *     so the result is correct regardless — this query's oracle grades
-  *     the VALUES, the spec grades the pruning).
+  *     selected < total and the ReadSchema; the skip is advisory and the
+  *     scan tests each row of a planned block, so the result is correct
+  *     regardless — this query's oracle grades the VALUES, the spec
+  *     grades the pruning).
   *   - `q_tradelog_streamed` — 28th batch≡streaming bridge, and the
   *     only one through a CUSTOM MicroBatchStream: offset-tracked
   *     rate-limited micro-batches (`maxBlocksPerTrigger` sized to ~3

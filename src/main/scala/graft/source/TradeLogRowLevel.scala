@@ -68,9 +68,13 @@ final class TradeLogRowLevelOperation(path: String, tableSchema: StructType,
 
   override def command(): RowLevelOperation.Command = cmd
 
+  /** Advisory filters only: Spark's `RowLevelOperation` contract needs
+    * this group scan to return every row of each block it touches (the
+    * rows the command leaves are rewritten from it), so the pushed
+    * condition may skip blocks but never drop a row. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new TradeLogScanBuilder(path, tableSchema, options,
-      onScan = s => configuredScans.add(s))
+      onScan = s => configuredScans.add(s), exactRows = false)
 
   /** `_file` — the group identity. Declaring it is also LOAD-BEARING for
     * the engine contract: Spark's ReplaceData machinery routes rows to
@@ -236,9 +240,11 @@ final class TradeLogDeltaOperation(path: String,
     * merge-on-read UPDATE shape). */
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
+  /** Advisory filters only, like the copy-on-write lane: Spark re-applies
+    * the command's condition above this scan. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new TradeLogScanBuilder(path, tableSchema, options,
-      onScan = s => configuredScans.add(s))
+      onScan = s => configuredScans.add(s), exactRows = false)
 
   /** The MoR row id: (data file, block offset, row ordinal in block). */
   override def rowId()

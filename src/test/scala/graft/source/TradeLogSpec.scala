@@ -2,8 +2,11 @@ package graft.source
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -1038,6 +1041,208 @@ class TradeLogSpec extends SparkTestBase {
           assert(String.valueOf(act) == String.valueOf(e))
         case ((exp, act), _) =>
           assert(String.valueOf(act) == String.valueOf(exp))
+      }
+    }
+  }
+
+  // ---- exact row filter (TradeLogScanBuilder, exactRows) ---------------
+
+  private val Advisory = classOf[AdvisoryTradeLogProvider].getName
+
+  private def withConf[T](k: String, v: String)(body: => T): T = {
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body
+    finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** Every operator of an executed plan, through AQE's final plan. */
+  private object PlanNodes extends AdaptiveSparkPlanHelper {
+    def filters(p: SparkPlan): Seq[FilterExec] = collect(p) { case f: FilterExec => f }
+  }
+
+  /** 64 rows, a second apart from 2024-01-01, user_id = i % 5; every 9th
+    * row has a null ts and every 7th a null user_id. */
+  private def recentRows: Seq[Row] = (0L until 64L).map { i =>
+    Row(i, if (i % 9 == 4) null else new Timestamp(1704067200000L + i * 1000L),
+      if (i % 7 == 3) null else i % 5, s"t${i % 3}", i * 0.25, s"p$i")
+  }
+
+  /** Pairs of rows in 1500 and 1582, around the Julian/Gregorian switch. */
+  private def oldRows: Seq[Seq[Row]] =
+    Seq(Seq("1500-05-20", "1500-06-01"), Seq("1582-10-04", "1582-10-15"))
+      .zipWithIndex.map { case (days, k) =>
+        days.zipWithIndex.map { case (d, j) =>
+          Row(100L + 2 * k + j, ts(s"$d 00:00:00"), k.toLong, "old", 0.0, "{}")
+        }
+      }
+
+  private def filterRows: Seq[Row] = recentRows ++ oldRows.flatten
+
+  /** [[recentRows]] ts-sorted in 8-row blocks, then each pair of
+    * [[oldRows]] appended as a block of its own. */
+  private def filterLog(tag: String): String = {
+    val dir = tmpDir(tag)
+    df(recentRows).coalesce(1).sortWithinPartitions("ts")
+      .write.format(Fmt).mode("overwrite").option("blockRows", 8).save(dir)
+    oldRows.foreach(rs => df(rs).coalesce(1).write.format(Fmt)
+      .mode("append").save(dir))
+    dir
+  }
+
+  private def at(i: Long): Column =
+    lit(new Timestamp(1704067200000L + i * 1000L))
+
+  test("pushed ts/user_id predicates are exact in the scan: whole rows, a narrow projection, count-only") {
+    val dir = filterLog("exact")
+    val exact = spark.read.format(Fmt).load(dir)
+    val advisory = spark.read.format(Advisory).load(dir)
+    val mem = df(filterRows)
+    val old = lit("1500-05-25 00:00:00").cast("timestamp")
+    val preds: Seq[(String, Column, Boolean)] = Seq(
+      // (label, predicate, whether the scan evaluates all of it)
+      ("slice", col("ts") >= at(10) && col("ts") < at(25), true),
+      ("gt", col("ts") > at(10), true),
+      ("le", col("ts") <= at(10), true),
+      ("eq", col("ts") === at(33), true),
+      ("ts not null", col("ts").isNotNull, true),
+      ("empty range", col("ts") > at(30) && col("ts") < at(20), true),
+      ("point", col("user_id") === 2L, true),
+      ("in", col("user_id").isin(1L, 3L), true),
+      ("user not null", col("user_id").isNotNull && col("ts") > at(50), true),
+      ("point + slice", col("user_id") === 2L && col("ts") >= at(20), true),
+      ("in + eq", col("user_id").isin(0L, 4L) && col("ts") === at(20), true),
+      ("user and other", col("user_id") === 1L && col("value") > 5.0, false),
+      // a pre-1900 Timestamp value is the literal after a calendar
+      // rebase, days off in 1500: a bound taken from it would skip the
+      // 1500 block and drop its 06-01 row
+      ("pre-1900 literal", col("ts") >= old, false),
+      ("pre-1900 slice", col("ts") >= old &&
+        col("ts") < lit("1582-10-20 00:00:00").cast("timestamp"), false))
+    preds.foreach { case (label, p, handled) =>
+      val want = mem.filter(p)
+      // whole rows through both builders, then a projection without the
+      // filtered columns and the count-only read through the exact one
+      assert(canon(exact.filter(p)) == canon(want), s"$label: exact read")
+      assert(canon(advisory.filter(p)) == canon(want), s"$label: advisory read")
+      val ids = exact.filter(p).select("event_id")
+      assert(canon(ids) == canon(want.select("event_id")), s"$label: event_id")
+      assert(exact.filter(p).count() == want.count(), s"$label: count")
+      val plan = ids.queryExecution.executedPlan
+      assert(PlanNodes.filters(plan).isEmpty == handled,
+        s"$label: Spark should ${if (handled) "not " else ""}keep a Filter: $plan")
+    }
+    // count-only: the handled filter leaves the scan nothing to project
+    val counted = exact.filter(col("ts") >= at(10) && col("ts") < at(25))
+    assert(scanOf(counted.select()).readSchema().isEmpty)
+    assert(counted.count() == 13) // 10..24 less the null-ts rows 13 and 22
+    assert(scanOf(counted).description().contains("ExactRows"))
+    assert(!scanOf(advisory.filter(col("ts") >= at(10))).description()
+      .contains("ExactRows"))
+    // the manifest answers no filtered aggregate: IsNotNull drives no skip,
+    // yet it must keep the count from the manifest's row totals
+    assert(exact.filter(col("ts").isNotNull).count() ==
+      mem.filter(col("ts").isNotNull).count())
+  }
+
+  test("a slice or point read with a new literal compiles no stage code") {
+    val dir = filterLog("codegen")
+    def slice(from: String, lo: Long, hi: Long): DataFrame =
+      spark.read.format(from).load(dir)
+        .filter(col("ts") >= timestamp_micros(lit(lo)) &&
+          col("ts") < timestamp_micros(lit(hi)))
+        .agg(count(lit(1)), coalesce(sum(round(col("value") * 100)
+          .cast("long")), lit(0L)))
+    def point(from: String, u: Long): DataFrame =
+      spark.read.format(from).load(dir).filter(col("user_id") === u)
+        .select(col("event_id"))
+    def us(i: Long): Long = (1704067200000L + i * 1000L) * 1000L
+    /** Janino compiles while `d` runs, and its rows. */
+    def compiles(d: DataFrame): (Long, Set[String]) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val got = canon(d)
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before, got)
+    }
+    val reads: Seq[(String, (String, Long) => DataFrame)] = Seq(
+      ("slice", (f, k) => slice(f, us(3 + k), us(40 + k))),
+      ("point", (f, k) => point(f, k)))
+    reads.foreach { case (label, read) =>
+      compiles(read(Fmt, 0L)) // warm-up: the stage's first compile
+      Seq(1L, 2L).foreach { k =>
+        val d = read(Fmt, k)
+        val (n, got) = compiles(d)
+        assert(n == 0, s"$label read $k compiled $n classes")
+        assert(got == canon(read(Advisory, k)), s"$label read $k rows")
+        assert(PlanNodes.filters(d.queryExecution.executedPlan).isEmpty,
+          s"$label read $k kept a Filter: ${d.queryExecution.executedPlan}")
+      }
+      // the measure can see a miss: the advisory scan's Filter inlines
+      // each new literal, so its stage compiles again
+      compiles(read(Advisory, 0L))
+      val (n, _) = compiles(read(Advisory, 3L))
+      assert(n > 0, s"advisory $label read with a new literal compiled nothing")
+    }
+  }
+
+  test("a filtered read over pre-widening blocks reads their rows, not the row count") {
+    val dir = tmpDir("widened-filter") + "/log"
+    val a = (0L until 12L).map(i =>
+      Row(i, new Timestamp(1704067200000L + i * 1000L), i % 3, "a", 1.0, "{}"))
+    val b = (12L until 20L).map(i =>
+      Row(i, new Timestamp(1704067200000L + i * 1000L), i % 3, "b", 1.0, "{}"))
+    df(a).write.format(Fmt).mode("overwrite").option("blockRows", 4).save(dir)
+    df(b).withColumn("xs", col("event_id") * 10)
+      .write.format(Fmt).mode("append").option("blockRows", 4).save(dir)
+    val log = spark.read.format(Fmt).load(dir)
+    val p = col("ts") >= at(2) && col("ts") < at(15) && col("user_id") =!= 0L
+    val wantIds = (2L until 15L).filter(_ % 3 != 0)
+    // new-only projection: old blocks serve nulls, but only for rows that
+    // pass; the block's row count alone would over-count
+    val xs = log.filter(col("ts") >= at(2) && col("ts") < at(15))
+      .select("xs").collect()
+    assert(xs.length == 13)
+    assert(xs.count(_.isNullAt(0)) == 10)
+    assert(xs.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet ==
+      Set(120L, 130L, 140L))
+    val point = log.filter(col("user_id") === 1L).select("xs")
+    assert(point.count() == 7)
+    assert(point.collect().count(_.isNullAt(0)) == 4)
+    // count-only over both widths, with a residual part kept by Spark
+    assert(log.filter(p).count() == wantIds.size)
+    assert(log.filter(p).select("event_id").collect().map(_.getLong(0))
+      .toSet == wantIds.toSet)
+  }
+
+  test("ts bounds at the ends of the microsecond range do not wrap") {
+    val dir = tmpDir("ts-ends")
+    val edge = spark.range(4).select(
+      col("id").as("event_id"),
+      when(col("id") === 0, timestamp_micros(lit(Long.MaxValue)))
+        .when(col("id") === 1, timestamp_micros(lit(Long.MinValue)))
+        .otherwise(timestamp_micros(lit(1704067200000000L) + col("id")))
+        .as("ts"),
+      col("id").as("user_id"), lit("e").as("event_type"),
+      lit(0.0).as("value"), lit("{}").as("props"))
+    edge.coalesce(1).write.format(Fmt).mode("overwrite")
+      .option("blockRows", 2).save(dir)
+    val max = timestamp_micros(lit(Long.MaxValue))
+    val min = timestamp_micros(lit(Long.MinValue))
+    // java.sql.Timestamp and java.time.Instant filter values; Spark
+    // cannot turn the Long.MinValue literal into a Timestamp at all (its
+    // calendar rebase overflows in filter translation, for parquet too),
+    // so that end is checked with Instants only
+    Seq("false", "true").foreach { java8 =>
+      withConf("spark.sql.datetime.java8API.enabled", java8) {
+        val log = spark.read.format(Fmt).load(dir)
+        assert(log.filter(col("ts") > max).count() == 0, s"> max ($java8)")
+        assert(log.filter(col("ts") >= max).count() == 1, s">= max ($java8)")
+        assert(log.filter(col("ts") === max).select("event_id")
+          .collect().map(_.getLong(0)).toSeq == Seq(0L), s"= max ($java8)")
+        if (java8 == "true") {
+          assert(log.filter(col("ts") < min).count() == 0, "< min")
+          assert(log.filter(col("ts") <= min).count() == 1, "<= min")
+          assert(log.filter(col("ts") > min).count() == 3, "> min")
+        }
       }
     }
   }

@@ -42,7 +42,7 @@ object Bands {
     "q_dedup_cc"             -> (2.1, 12.5),
     "q_dedup_recall"         -> (2.2, 22.0),
     "q_sim_index_compact"    -> (2.6, 8.0),
-    "q_dedup_clusters"       -> (1.6, 11.0),
+    "q_dedup_clusters"       -> (2.1, 12.5),
     "q_hh_streamed"          -> (2.5, 11.0),
     "q_sliding_streamed"     -> (2.8, 18.0),
     "q_ttl_streamed"         -> (3.4, 11.0),

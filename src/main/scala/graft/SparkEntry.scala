@@ -160,7 +160,7 @@ object Catalog {
     * spec assertion: StateStore restore/save, the streaming aggregation
     * path, and the micro-batch planner all sit between the parquet bytes
     * and the hash compare. EXECUTES EAGERLY in the builder (runs the
-    * streaming query to termination — the nearClusters precedent); each
+    * streaming query to termination — the ccStars precedent); each
     * call uses a fresh memory-sink name so warm-up + timed bench runs
     * don't collide. Complete mode keeps all window state (finite input,
     * no watermark eviction), exactly batch semantics. */

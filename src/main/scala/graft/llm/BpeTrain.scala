@@ -19,7 +19,7 @@ import graft.core.QueryDef.OrderedOut
   * the winning pair is a one-row broadcast (never collected to the driver),
   * and the merge application is a per-row string replace. Per-round
   * `localCheckpoint` pins each round's ≤V-row result so round r's lineage
-  * does not replay rounds 1..r-1 (the [[Dedup.nearClusters]] iterative
+  * does not replay rounds 1..r-1 (the [[Dedup.ccStars]] iterative
   * discipline); at 100 TB only the word-count pass grows — the training
   * loop's input is capped by V regardless of corpus size.
   *

@@ -230,9 +230,9 @@ object Dedup {
     * every run), the increment's pairs come from the [[incrementPairs]]
     * engine, and the merge runs star contraction over (CONTRACTED label
     * edges ∪ new pairs) — never re-clustering the corpus graph. The
-    * from-scratch label derivation this row used to run survives as
-    * [[ccIncrementalFromScratch]], pinned ≡ to this serving path by
-    * DedupPropertiesSpec. What still distinguishes this row from
+    * from-scratch label derivation this row used to run survives in
+    * DedupPropertiesSpec, which pins this serving path ≡ to it. What
+    * still distinguishes this row from
     * [[ccPersisted]]: only the LABELS are persisted here — candidate
     * discovery re-shingles the corpus (the kept-labels-but-no-LSH-index
     * production shape), where ccPersisted also serves the band index.
@@ -252,30 +252,6 @@ object Dedup {
     val isBatch = pmod(col("doc_id"), lit(5)) === 4
     val corpus = docs.filter(!isBatch)
     val corpusLabels = persistedStarLabels(s, d, threshold, "labels",
-      nearPairsUnordered(corpus, threshold).select(col("doc_a"), col("doc_b")),
-      checkpointDir)
-    val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
-      .select(col("id").as("doc_a"), col("lbl").as("doc_b"))
-    val newPairs = incrementPairs(docs.filter(isBatch), corpus, threshold)
-      .select(col("doc_a"), col("doc_b"))
-    starLabels(labelEdges.unionByName(newPairs), checkpointDir)
-      .select(col("id").as("doc_id"), col("lbl").as("cluster"))
-      .orderedBy("doc_id")
-  }
-
-  /** The pre-r15 self-contained [[ccIncremental]] body — corpus labels
-    * re-derived from scratch every run instead of served from the
-    * artifact. Kept as the equivalence witness for the serving path
-    * (DedupPropertiesSpec pins ccIncremental ≡ this), not as a catalog
-    * row: paying a full corpus contraction per "incremental" run is
-    * exactly the shape the artifact exists to delete. */
-  private[llm] def ccIncrementalFromScratch(s: SparkSession, d: String,
-      threshold: Double = 0.8,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val docs = Tables.documents(s, d)
-    val isBatch = pmod(col("doc_id"), lit(5)) === 4
-    val corpus = docs.filter(!isBatch)
-    val corpusLabels = starLabels(
       nearPairsUnordered(corpus, threshold).select(col("doc_a"), col("doc_b")),
       checkpointDir)
     val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
@@ -466,9 +442,10 @@ object Dedup {
     * increment pair chain whose all-broadcast shape is the query's scale
     * claim. The catalog build itself runs TWO [[starLabels]] loops
     * eagerly (per-round pinRound actions), so it has no single lazy plan
-    * to print — the per-round contraction shape is [[nearClusters]]'s and
-    * is audited there; auditing this query eagerly would pay the full
-    * double-contraction runtime and show only the trailing label join. */
+    * to print — each contraction round runs as its own jobs, so no audit
+    * prints a round's plan; auditing this query eagerly would pay the
+    * full double-contraction runtime and show only the trailing label
+    * join. */
   def ccIncrementalAuditPlan(s: SparkSession, d: String,
                              threshold: Double = 0.8): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -663,7 +640,7 @@ object Dedup {
     nearPairsUnordered(Tables.documents(s, d), threshold)
 
   /** [[nearFor]] without the harness ordering trailer — the composition
-    * entry point for downstream graph work ([[nearClusters]]), where a
+    * entry point for downstream graph work ([[ccStars]]), where a
     * repartition(1) in the lineage would serialize every later stage. */
   private[llm] def nearPairsUnordered(docs: DataFrame, threshold: Double = 0.8,
       bands: Int = 4, rows: Int = 3, maxBucket: Option[Int] = None): DataFrame = {
@@ -1033,30 +1010,8 @@ object Dedup {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** Near-dup CLUSTERS: EXACT connected components over the LSH pair
-    * graph — every component collapses onto its smallest doc_id (the
-    * canonical survivor), whatever the component's diameter. Until round 8
-    * this ran a FIXED 3 rounds of min-label propagation, so a chain of
-    * diameter > 3 reported as several clusters (the oracle replayed the
-    * same 3 rounds, hash-matching an under-merged answer — correct vs the
-    * oracle, capped vs the semantic intent; judged **weak**). Now the
-    * propagation runs to an actual fixpoint, which makes the result
-    * ALGORITHM-INDEPENDENT: it is the true min-id component labeling, so
-    * the DuckDB oracle states the semantics directly (recursive-CTE
-    * reachability) instead of replaying Spark's rounds. See
-    * [[propagateMinLabels]] for the convergence argument and scale shape. */
-  def nearClusters(s: SparkSession, d: String, threshold: Double = 0.8,
-                   eager: Boolean = true,
-                   checkpointDir: Option[String] = None): DataFrame = {
-    val pairs = nearPairsUnordered(Tables.documents(s, d), threshold)
-      .select(col("doc_a"), col("doc_b"))
-    propagateMinLabels(pairs, eager, checkpointDir)
-      .select(col("id").as("doc_id"), col("lbl").as("cluster"))
-      .orderedBy("doc_id")
-  }
-
   /** PAGERANK over the near-dup graph — the centrality companion to
-    * [[nearClusters]]: within a duplication cluster, the highest-rank doc
+    * [[ccStars]]: within a duplication cluster, the highest-rank doc
     * is the canonical representative (the hub many variants point at),
     * a better keep-rule than min-id when clusters are star-shaped.
     * Classic damped PageRank (d = 0.85) in FIXED-POINT INTEGER units
@@ -1079,7 +1034,7 @@ object Dedup {
     // candidate+verify subtree replicates ~2·iters+1 times in one plan
     // (measured: 192 parquet scans, zero static ReusedExchange). The
     // materialized table is edge-sized, not corpus-sized — the
-    // nearClusters eager-graph precedent; checkpointDir swaps in the
+    // starLabels round-0 edge pin precedent; checkpointDir swaps in the
     // reliable-checkpoint cluster rule (docs/DEPLOY.md).
     val edges = graft.core.QueryDef.pinRound(
       pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
@@ -1131,109 +1086,7 @@ object Dedup {
        |ORDER BY doc_id""".stripMargin
   }
 
-  /** Min-label propagation run to CONVERGENCE, with pointer-jumping so
-    * the round count is O(log diameter), not O(diameter). Per round:
-    *
-    *   1. propagate: lbl'(v) = min(lbl(v), min over in-neighbors' lbl)
-    *      — one edge⋈label join plus a min-groupBy, keyed on the id;
-    *   2. shortcut:  lbl''(v) = lbl'(lbl'(v)) — the pointer-jump that
-    *      halves the label forest's depth (labels are always node ids
-    *      with lbl(v) ≤ v, so the lookup is total and only decreases).
-    *
-    * Stops when a round changes nothing. At a fixpoint every edge (u,v)
-    * has lbl(u) = lbl(v) (each min-dominates the other), so labels are
-    * constant per component; and since labels are node ids that only
-    * decrease down to the component minimum m (which keeps lbl(m) = m),
-    * the fixpoint IS the min-id component labeling — any correct CC
-    * algorithm produces the identical answer, which is what lets the
-    * DuckDB oracle be a plain reachability statement. The stopping round
-    * is a pure function of the input (every step is deterministic), and
-    * a 64-round guard bounds the loop (pointer-jumping converges in
-    * O(log n); 64 rounds covers any graph that fits in ids).
-    *
-    * Scale shape per round: all three joins key on ids over the LABEL
-    * set, which is O(near-dup docs) — the corpus never re-enters; the
-    * edge list is O(near-dup pairs), persisted once. EXECUTES EAGERLY
-    * when `eager` (the default): a convergence check needs actions, each
-    * round's result pins via `localCheckpoint` (reclaimed by the
-    * ContextCleaner when the returned frame is dropped) so no round's
-    * shuffle runs twice — the per-iteration persist every Pregel-style
-    * loop does — and the edge persist is released before returning
-    * (round-7 advisor finding). Plan-only callers (ExplainAudit) pass
-    * `eager = false` and get a fixed 3-round lazy unroll: same per-round
-    * plan shape, no data-dependent loop. */
-  private[llm] def propagateMinLabels(pairs: DataFrame,
-                                      eager: Boolean = true,
-                                      checkpointDir: Option[String] = None): DataFrame = {
-    // Both edge directions from ONE pass over the pairs (explode, not a
-    // union of two references). The edge list is O(near-dup pairs), tiny
-    // next to the corpus.
-    val edgesPlan = pairs.select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    // eager path pins the edge list the same way as every round (and the
-    // star-contraction twin): one materializing job, lineage truncated,
-    // and the reliable-checkpoint option applies to the edges too —
-    // persist()+count() kept a lazy columnar cache that cost one extra
-    // job and ignored checkpointDir
-    val edges = if (eager) graft.core.QueryDef.pinRound(edgesPlan, checkpointDir)
-                else edgesPlan
-    val labels0 = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-    // Each round RETURNS (id, lbl, prev) where prev is the incoming label:
-    // prev rides the propagate aggregate (every id is in l, so min over the
-    // single non-null carrier reproduces it exactly), which makes the
-    // convergence test a filter over the round's own checkpointed blocks —
-    // no extra join, no second plan execution per round (the r11 verdict's
-    // q_dedup_clusters regression was exactly that second execution).
-    def round(l: DataFrame): DataFrame = {
-      val viaEdges = edges.join(l.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("lbl"),
-          lit(null).cast(l.schema("lbl").dataType).as("prev"))
-      val prop = l.withColumn("prev", col("lbl")).unionByName(viaEdges)
-        .groupBy(col("id"))
-        .agg(min(col("lbl")).as("lbl"), min(col("prev")).as("prev"))
-      // lbl(lbl(v)): labels are ids in the domain and lbl(p) ≤ p, so the
-      // self-join is total and the looked-up label only improves
-      val parents = prop.select(col("id").as("lbl"), col("lbl").as("jumped"))
-      prop.join(parents, "lbl")
-        .select(col("id"), col("jumped").as("lbl"), col("prev"))
-    }
-    if (!eager) // plan-shape path: fixed unroll, no actions
-      return (1 to 3).foldLeft(labels0)((l, _) => round(l).drop("prev"))
-    // per-round pinning: localCheckpoint by default; a checkpointDir swaps
-    // in reliable checkpoints for cluster runs (QueryDef.pinRound).
-    // Rounds run in PAIRS with one pin + one convergence read per pair:
-    // labels only decrease, so "the second round of the pair changed
-    // nothing" alone proves the fixpoint, and halving the loop's job
-    // count halves what the loop pays in a busy JVM — the bench-tail cost
-    // of this query was per-job stalls (GC / cleaner backlog), not
-    // per-row work (BENCH r9-r12 oscillation; same-JVM median is ~3 s).
-    var l = graft.core.QueryDef.pinRound(labels0, checkpointDir)
-    var pairsRun = 0
-    var converged = false
-    while (!converged) {
-      pairsRun += 1
-      require(pairsRun <= 32, "min-label propagation failed to converge in 64 rounds")
-      val next = graft.core.QueryDef.pinRound(
-        round(round(l).drop("prev")), checkpointDir)
-      // reads the blocks the checkpoint just wrote — a cached scan, not a
-      // re-execution of the pair's shuffles
-      converged = next.filter(col("lbl") =!= col("prev")).isEmpty
-      // the superseded round's blocks have no further reader (next is
-      // pinned; the check read next alone) — free them now instead of
-      // waiting on the ContextCleaner (bounded retention, r19 verdict #1)
-      graft.core.QueryDef.freePin(l)
-      l = next.drop("prev")
-    }
-    // the returned frame is a projection of the LAST pinned round — the
-    // edge pin has no remaining reader and releases here
-    graft.core.QueryDef.freePin(edges)
-    l
-  }
-
-  /** Mirrors [[nearClusters]]: because the Spark side converges, the
+  /** Mirrors [[ccStars]]: because the Spark side converges, the
     * oracle is the SEMANTIC spec — min reachable id per node over the
     * symmetric pair graph, via a recursive CTE (UNION dedup terminates
     * the recursion on cyclic graphs). Fine at oracle scale; the Spark
@@ -1299,21 +1152,23 @@ object Dedup {
        |FROM m GROUP BY source_a, source_b
        |ORDER BY source_a, source_b""".stripMargin
 
-  /** Connected components by ALTERNATING STAR CONTRACTION (large-star /
-    * small-star, Kiveris et al. 2014, "Connected Components in MapReduce
-    * and Beyond") over the same LSH pair graph as [[nearClusters]] — the
-    * production web-scale CC algorithm, here as a second, structurally
-    * different implementation adjudicated by the IDENTICAL semantic oracle
-    * (min reachable id via recursive CTE), so the answer is doubly
-    * algorithm-independent.
+  /** Near-dup CLUSTERS: EXACT connected components over the LSH pair
+    * graph — every component collapses onto its smallest doc_id (the
+    * canonical survivor), whatever the component's diameter. The result
+    * is the min-id component labeling, which any correct CC algorithm
+    * produces, so the DuckDB oracle states the semantics directly (min
+    * reachable id via recursive CTE) instead of replaying Spark's rounds.
     *
-    * Why ship both: min-label propagation ([[propagateMinLabels]]) runs
-    * O(log diameter) rounds but each round's label table re-joins the full
-    * edge list and labels move only one hop per jump level; star
-    * contraction REWRITES the edge list itself — large-star connects every
-    * larger neighbor of a node to its neighborhood minimum, small-star
-    * collapses each node's smaller neighbors onto their minimum — which
-    * the paper proves converges in O(log² n) rounds with the edge count
+    * The engine is ALTERNATING STAR CONTRACTION (large-star / small-star,
+    * Kiveris et al. 2014, "Connected Components in MapReduce and Beyond"),
+    * the one CC loop every clustering query runs ([[starLabels]]).
+    * Min-label propagation moves labels a bounded number of hops per
+    * round, so its round count grows with the diameter (it did not
+    * converge in 64 rounds on a 200-node path). Star contraction REWRITES
+    * the edge list itself — large-star connects every larger neighbor of
+    * a node to its neighborhood minimum, small-star collapses each node's
+    * smaller neighbors onto their minimum — which the paper proves
+    * converges in O(log² n) rounds with the edge count
     * NON-INCREASING per round (each emitted edge replaces one input edge,
     * then dedups). Per-node state is a single min — neighborhoods are
     * never collected (no collect_list / no degree-sized buffers), so a
@@ -1391,10 +1246,10 @@ object Dedup {
     while (!converged) {
       rounds += 1
       require(rounds <= 64, "star contraction failed to converge in 64 rounds")
-      // Rounds deliberately NOT paired (r20 opt, measured): the
-      // propagateMinLabels pair trick halves pins for a loop that needs
-      // ~diameter rounds, but star contraction converges in 1–2 rounds on
-      // these graphs, so a pair always executes ≥2 full rounds where the
+      // Rounds deliberately NOT paired (r20 opt, measured): running two
+      // rounds per pin halves pins only for a loop that needs many
+      // rounds, but star contraction converges in 1–2 rounds on these
+      // graphs, so a pair always executes ≥2 full rounds where the
       // single-round loop stops after the first no-op — pairing measured
       // q_dedup_cc 2.2→3.7 / q_dedup_cc_streamed ~7→12 and was reverted.
       val next = graft.core.QueryDef.pinRound(round(e), checkpointDir)
@@ -1732,7 +1587,7 @@ object Dedup {
     * cosine-similar pairs through the star-contraction engine
     * ([[starLabels]]), so semantically-equivalent groups (paraphrase
     * families, translated twins) collapse onto a canonical
-    * representative the way [[nearClusters]] collapses lexical near-dups.
+    * representative the way [[ccStars]] collapses lexical near-dups.
     * Graph-based — unlike [[SemDedup]]'s trained-centroid scoping, the
     * clusters here follow actual pairwise similarity edges, so a chain of
     * pairwise-similar vectors merges even when its ends straddle k-means
@@ -2025,11 +1880,10 @@ object Dedup {
     // exact ≥20-token-span dedup (Lee et al. 2022's exact-substring mode):
     // df-capped span-hash postings, verify on collision via true span sets
     "q_dedup_substr" -> QueryDef(substrPairs(_, _), Some(substrOracle(20, 10))),
-    "q_dedup_clusters" -> QueryDef(nearClusters(_, _),
+    // near-dup clusters by star contraction; q_dedup_cc is the same
+    // query under the name the CC family below shares
+    "q_dedup_clusters" -> QueryDef(ccStars(_, _),
       Some(nearClustersOracle(0.8))),
-    // the same components via ALTERNATING STAR CONTRACTION (Kiveris et
-    // al.) — a second, structurally different CC engine against the
-    // IDENTICAL semantic oracle
     "q_dedup_cc" -> QueryDef(ccStars(_, _), Some(nearClustersOracle(0.8))),
     // which sources duplicate which: near-dup pair counts per unordered
     // source pair — the attribution gauge behind mixing weights

@@ -30,10 +30,6 @@ object ExplainAudit {
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try n match {
-        // iterative-graph query: the catalog build executes eagerly
-        // (edge-list materialization); audit the single lazy plan instead
-        case "q_dedup_clusters" =>
-          graft.llm.Dedup.nearClusters(spark, d, eager = false).explain("formatted")
         // iterative trainer: audit a 2-round lazy unroll (the catalog
         // build checkpoints each round eagerly)
         case "q_bpe_train" =>
@@ -46,14 +42,14 @@ object ExplainAudit {
         case "q_dedup_cc_incr" | "q_dedup_cc_persisted" =>
           // both serve-side claims are the all-broadcast increment chain;
           // the persisted variant's remaining work is a node-sized label
-          // scan + the same contraction round shape audited elsewhere
+          // scan + the contraction rounds every CC query runs
           graft.llm.Dedup.ccIncrementalAuditPlan(spark, d).explain("formatted")
         // cluster-keyed split / attribution matrix: both run an eager
         // contraction loop (resp. an eager pair pin) in the catalog build,
         // so audit the lazy LSH pair chain — the part of the plan that
         // carries each query's scale claim (banded candidates, df caps,
-        // broadcast verifies); the contraction round shape is audited via
-        // q_dedup_clusters' lazy unroll
+        // broadcast verifies); the contraction rounds run as their own
+        // jobs inside the build, so no lazy plan of a round exists
         case "q_split_leakfree" | "q_dedup_matrix" =>
           graft.llm.Dedup.nearPairsAuditPlan(spark, d).explain("formatted")
         // the scoped-maintenance READ runs eagerly inside optimizeRange

@@ -43,20 +43,14 @@ class BpeTrainSpec extends SparkTestBase {
         .orderBy("rnk").collect().toSeq
     assert(merges(Some(dir)) == merges(None),
       "reliable-checkpoint BPE training diverged from localCheckpoint")
-    // label propagation: a 2-component pair graph through the same path
+    // star contraction: a 2-component pair graph through the same path
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    def labels(ckpt: Option[String]) =
-      Dedup.propagateMinLabels(pairs, eager = true, checkpointDir = ckpt)
-        .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(labels(Some(dir)) == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      10L -> 10L, 11L -> 10L))
-    assert(labels(Some(dir)) == labels(None))
-    // the star-contraction engine honors the same option
     def starLbls(ckpt: Option[String]) =
       Dedup.starLabels(pairs, checkpointDir = ckpt)
         .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(starLbls(Some(dir)) == labels(None),
-      "reliable-checkpoint star contraction diverged")
+    assert(starLbls(Some(dir)) == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L), "reliable-checkpoint star contraction diverged")
+    assert(starLbls(None) == starLbls(Some(dir)))
     // durability is the point: the rounds must actually be ON DISK
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()

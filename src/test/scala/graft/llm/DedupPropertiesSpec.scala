@@ -300,7 +300,7 @@ class DedupPropertiesSpec extends SparkTestBase {
   }
 
   test("starLabels: exact min-id components on deep paths, cycles, and stars; " +
-    "agrees with propagateMinLabels") {
+    "agrees with union-find") {
     // adversarial graph shapes: a diameter-9 path (the under-merge class a
     // fixed-round loop fails), a cycle, a hub star, and a 2-node component —
     // ground truth from a Scala union-find
@@ -327,9 +327,6 @@ class DedupPropertiesSpec extends SparkTestBase {
     val stars = Dedup.starLabels(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(stars == truth, "star contraction != union-find ground truth")
-    val prop = Dedup.propagateMinLabels(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(prop == truth, "min-label propagation != union-find ground truth")
   }
 
   test("splitLeakfree: both ends of every near-dup pair land in the same split") {
@@ -385,12 +382,21 @@ class DedupPropertiesSpec extends SparkTestBase {
       a <- Gen.chooseNum(0L, 59L); b <- Gen.chooseNum(0L, 59L)
     } yield (a, b)
     var seed = Seed(99L)
-    (1 to 3).foreach { _ =>
-      val edges = (1 to 45).map { _ =>
+    val randomGraphs = (1 to 3).map { _ =>
+      (1 to 45).map { _ =>
         val e = genEdge.apply(Gen.Parameters.default, seed).get
         seed = seed.next
         e
       }.filter(e => e._1 != e._2)
+    }
+    // long near-dup chains: paths of 200 and 1,000 nodes with seeded
+    // shuffled ids, so labels must cross the whole diameter in no id
+    // order (min-label propagation did not converge on either in 64 rounds)
+    val paths = Seq(200 -> 14L, 1000 -> 18L).map { case (n, s) =>
+      val ids = new scala.util.Random(s).shuffle((0L until n).toVector)
+      ids.sliding(2).map(p => (p(0), p(1))).toVector
+    }
+    (randomGraphs ++ paths).foreach { edges =>
       val pairs = edges.toDF("doc_a", "doc_b")
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = { val p = parent.getOrElse(x, x)
@@ -436,6 +442,25 @@ class DedupPropertiesSpec extends SparkTestBase {
     }
   }
 
+  /** The pre-r15 self-contained [[Dedup.ccIncremental]] body — corpus
+    * labels re-derived from scratch every run instead of served from the
+    * artifact: the equivalence witness for the serving path, not a catalog
+    * row (paying a full corpus contraction per "incremental" run is
+    * exactly the shape the artifact exists to delete). */
+  private def ccIncrementalFromScratch(d: String) = {
+    val docs = graft.core.Tables.documents(spark, d)
+    val isBatch = pmod(col("doc_id"), lit(5)) === 4
+    val corpus = docs.filter(!isBatch)
+    val corpusLabels = Dedup.starLabels(
+      Dedup.nearPairsUnordered(corpus).select(col("doc_a"), col("doc_b")))
+    val labelEdges = corpusLabels.filter(col("id") =!= col("lbl"))
+      .select(col("id").as("doc_a"), col("lbl").as("doc_b"))
+    val newPairs = Dedup.incrementPairs(docs.filter(isBatch), corpus, 0.8)
+      .select(col("doc_a"), col("doc_b"))
+    Dedup.starLabels(labelEdges.unionByName(newPairs))
+      .select(col("id").as("doc_id"), col("lbl").as("cluster"))
+  }
+
   test("ccIncremental artifact serving equals the from-scratch label derivation") {
     // r14 finding #3: the catalog's incremental row re-derived the corpus
     // labels from scratch each run. It now serves them from the
@@ -444,7 +469,7 @@ class DedupPropertiesSpec extends SparkTestBase {
     val d = "/root/testdata/sf0.001"
     val served = Dedup.ccIncremental(spark, d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val scratch = Dedup.ccIncrementalFromScratch(spark, d).collect()
+    val scratch = ccIncrementalFromScratch(d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(served == scratch)
   }

@@ -156,7 +156,7 @@ class LlmSpec extends SparkTestBase {
   test("near-dup clusters: min-label propagates across a 2-hop chain") {
     // sliding 40-token windows over 48 tokens: (1,2) and (2,3) are
     // near-pairs (J≈0.81) but (1,3) is not (J≈0.65) — doc 3 joins cluster
-    // 1 only through label propagation via doc 2. Docs 10/11 are an
+    // 1 only through the transitive edge via doc 2. Docs 10/11 are an
     // independent identical pair; doc 20 is unrelated (absent from output).
     val w = (1 to 48).map(i => f"t$i%02d")
     def window(from: Int) = w.slice(from - 1, from - 1 + 40).mkString(" ")
@@ -167,7 +167,7 @@ class LlmSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
     val dir = tempDir("graft-clusters").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = Dedup.nearClusters(spark, dir).collect()
+    val got = Dedup.ccStars(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L),
       s"got $got")
@@ -224,11 +224,11 @@ class LlmSpec extends SparkTestBase {
   test("near-dup clusters: a diameter-6 chain converges to ONE cluster") {
     // the exact failure mode of the old fixed-3-round propagation: a path
     // graph 1-2-3-4-5-6-7 has diameter 6, so node 7's min label needs >3
-    // propagation rounds to arrive — convergence (with pointer-jumping)
-    // must merge the whole chain onto 1, plus an unrelated 2-cycle
+    // propagation rounds to arrive — contraction run to its fixpoint must
+    // merge the whole chain onto 1, plus an unrelated 2-cycle
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (6L, 7L), (100L, 101L)).toDF("doc_a", "doc_b")
-    val got = Dedup.propagateMinLabels(pairs).collect()
+    val got = Dedup.starLabels(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = (1L to 7L).map(_ -> 1L).toMap ++ Map(100L -> 100L, 101L -> 100L)
     assert(got == want, s"got $got")
